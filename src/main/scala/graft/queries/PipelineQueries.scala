@@ -3638,7 +3638,10 @@ object PipelineQueries {
     * re-normalize and round to 6 dp — the
     * [[graft.operators.Similarity.trainCentroids]] contract, step for
     * step. Empty cells keep their previous centroid via the LEFT JOIN
-    * coalesce (the emb_kmeans recipe).
+    * coalesce (the emb_kmeans recipe). `c$i` is MATERIALIZED: every
+    * iteration references its predecessor twice (the `a` cross join and
+    * the coalesce LEFT JOIN), and an inlined CTE chain would re-evaluate
+    * the whole prefix per reference — exponential in the iteration count.
     */
   private def ivfIterSql(i: Int): String = {
     val prev = s"c${i - 1}"
@@ -3652,7 +3655,7 @@ object PipelineQueries {
        |    CAST(sum(CAST(nv[j] AS DECIMAL(30,15))) AS DOUBLE) / count(*) AS mv
        |  FROM m${i}x GROUP BY cell, j),
        |mm$i AS (SELECT cell, list(mv ORDER BY j) AS m FROM m$i GROUP BY cell),
-       |c$i AS (SELECT $prev.cell,
+       |c$i AS MATERIALIZED (SELECT $prev.cell,
        |    coalesce(list_transform(u.m,
        |      x -> round(x / sqrt(list_dot_product(u.m, u.m)), 6)), $prev.c) AS c
        |  FROM $prev LEFT JOIN mm$i u USING (cell)),""".stripMargin
@@ -3681,7 +3684,7 @@ object PipelineQueries {
        |sn AS (SELECT rn - 1 AS sid,
        |    list_transform(v, x -> round(x / sqrt(list_dot_product(v, v)), 6)) AS nv
        |  FROM smp),
-       |c0 AS (SELECT sid + 1 AS cell, nv AS c FROM sn WHERE sid < 16),
+       |c0 AS MATERIALIZED (SELECT sid + 1 AS cell, nv AS c FROM sn WHERE sid < 16),
        |$iterBlocks
        |asg AS (SELECT e.vec_id,
        |    CAST(-max([round(list_dot_product(c.c, e.v), 6),
@@ -3720,7 +3723,10 @@ object PipelineQueries {
     * DECIMAL(30,15) member mean per dim rounded to 6 dp — the
     * [[graft.operators.Similarity]] `trainPqCodebooks` contract, step
     * for step. Empty cells keep their previous centroid via the LEFT
-    * JOIN coalesce.
+    * JOIN coalesce. `p$i` is MATERIALIZED: every iteration references
+    * its predecessor twice (the `pa` join and the coalesce LEFT JOIN),
+    * and an inlined CTE chain would re-evaluate the whole prefix per
+    * reference — exponential in the iteration count.
     */
   private def pqIterSql(i: Int): String = {
     val prev = s"p${i - 1}"
@@ -3734,7 +3740,7 @@ object PipelineQueries {
        |    round(CAST(sum(CAST(sv[d] AS DECIMAL(30,15))) AS DOUBLE) / count(*), 6) AS mv
        |  FROM pm${i}x GROUP BY j, cell, d),
        |pmm$i AS (SELECT j, cell, list(mv ORDER BY d) AS mx FROM pm$i GROUP BY j, cell),
-       |p$i AS (SELECT p.j, p.cell, coalesce(u.mx, p.c) AS c
+       |p$i AS MATERIALIZED (SELECT p.j, p.cell, coalesce(u.mx, p.c) AS c
        |  FROM $prev p LEFT JOIN pmm$i u ON u.j = p.j AND u.cell = p.cell),""".stripMargin
   }
 
@@ -3763,7 +3769,7 @@ object PipelineQueries {
        |  FROM e ORDER BY md5('pqsample:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 1024),
        |sv AS (SELECT psmp.rn - 1 AS sid, js.j, psmp.v[js.j * 4 + 1 : js.j * 4 + 4] AS sv
        |  FROM psmp CROSS JOIN js),
-       |p0 AS (SELECT j, sid + 1 AS cell, sv AS c FROM sv WHERE sid < 32),
+       |p0 AS MATERIALIZED (SELECT j, sid + 1 AS cell, sv AS c FROM sv WHERE sid < 32),
        |$iterBlocks
        |esv AS (SELECT e.vec_id, js.j, e.v[js.j * 4 + 1 : js.j * 4 + 4] AS sv FROM e CROSS JOIN js),
        |codes AS (SELECT s.vec_id, s.j,

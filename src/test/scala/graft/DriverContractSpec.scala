@@ -53,6 +53,20 @@ class DriverContractSpec extends SparkTestBase {
     }
   }
 
+  test("IVF/PQ k-means oracles unroll 5 materialized centroid iterations") {
+    // each c$i / p$i is read twice by the next iteration; DuckDB inlines
+    // unmarked CTEs, so dropping the keyword re-evaluates the prefix
+    // per reference and the oracle gate runs out of memory
+    for ((query, cte) <- Seq("ann_topk_ivf" -> "c", "ann_topk_pq" -> "p")) {
+      val sql = SparkEntry.oracleSql(query)
+      (0 to 5).foreach { i =>
+        assert(sql.contains(s"$cte$i AS MATERIALIZED ("), s"$query: $cte$i not materialized")
+      }
+      val inlined = raw"\b$cte\d+ AS \(".r.findAllIn(sql).toList
+      assert(inlined.isEmpty, s"$query: inlined centroid CTEs $inlined")
+    }
+  }
+
   test("every oracle key has a query; no accidental orphans") {
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet

@@ -38,14 +38,14 @@ def main():
     for name, sql in sorted(oracle.items()):
         spark_files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not spark_files:
-            print(f"FAIL {name}: no spark output")
+            print(f"FAIL {name}: no spark output", flush=True)
             n_fail += 1
             continue
         try:
             orows = con.execute(sql).fetchall()
             ocols = [d[0] for d in con.description]
         except Exception as e:
-            print(f"FAIL {name}: oracle error {e}")
+            print(f"FAIL {name}: oracle error {e}", flush=True)
             n_fail += 1
             continue
         srel = con.execute(
@@ -53,7 +53,7 @@ def main():
         srows = srel.fetchall()
         scols = [d[0] for d in con.description]
         if sorted(ocols) != sorted(scols):
-            print(f"FAIL {name}: cols oracle={sorted(ocols)} spark={sorted(scols)}")
+            print(f"FAIL {name}: cols oracle={sorted(ocols)} spark={sorted(scols)}", flush=True)
             n_fail += 1
             continue
         # reorder both to sorted column order
@@ -62,15 +62,15 @@ def main():
         o = canon([[r[i] for i in oidx] for r in orows])
         s = canon([[r[i] for i in sidx] for r in srows])
         if len(o) != len(s):
-            print(f"FAIL {name}: rows oracle={len(o)} spark={len(s)}")
+            print(f"FAIL {name}: rows oracle={len(o)} spark={len(s)}", flush=True)
             n_fail += 1
             continue
         bad = [(a, b) for a, b in zip(o, s) if a != b]
         if bad:
-            print(f"FAIL {name}: {len(bad)}/{len(o)} mismatched rows; first: oracle={bad[0][0]} spark={bad[0][1]}")
+            print(f"FAIL {name}: {len(bad)}/{len(o)} mismatched rows; first: oracle={bad[0][0]} spark={bad[0][1]}", flush=True)
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(o)} rows)")
+            print(f"PASS {name} ({len(o)} rows)", flush=True)
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)
