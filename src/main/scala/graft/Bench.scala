@@ -40,8 +40,10 @@ import org.apache.spark.sql.SparkSession
   * parses (six rounds of `parsed: null`). Hence:
   *  - the LAST stdout line is a SHORT totals-only JSON (<200 chars):
   *    `{"metric":"total","value":T,"unit":"sec","total_s":T,
-  *    "queries":N,"sf":"…"}` — fits the tail window with room for
-  *    sbt's trailing `[success]` line.
+  *    "queries":N,"failed":F,"sf":"…"}` — fits the tail window with
+  *    room for sbt's trailing `[success]` line. A query that throws is
+  *    counted in `failed` and named in the file artifact's
+  *    `failed_queries`, never silently dropped from T.
   *  - per-query MEDIANS and raw per-rep triples go to STDERR ONLY
   *    (medians last there), plus the file artifacts below.
   *  - full JSON (summary + per-query medians + raw triples) written to
@@ -65,6 +67,32 @@ object Bench {
     "emb_kmeans", "text_training_map", "text_quality_model",
     "text_bpe_train", "text_bpe_vocab", "text_bpe_encode",
     "text_bpe_fertility", "mine_positive_pairs")
+
+  /** The suite summary from raw timed reps, where a rep of -1 is a run
+    * that threw. A query with any failed rep is FAILED: its median reads
+    * -1 and it is left out of `total`, so `failed` is what tells a
+    * shorter suite from a faster one.
+    */
+  private[graft] final case class Summary(medians: Seq[(String, Double)],
+      total: Double, failed: Seq[String])
+
+  private[graft] def summarize(results: Seq[(String, Seq[Double])]): Summary = {
+    val medians = results.map { case (k, raw) =>
+      k -> (if (raw.exists(_ < 0)) -1.0 else raw.sorted.apply(raw.size / 2))
+    }
+    val failed = medians.collect { case (k, m) if m < 0 => k }
+    Summary(medians, medians.map(_._2).filter(_ >= 0).sum, failed)
+  }
+
+  // 3-decimal fixed-point rendering: no scientific notation and no
+  // Double.toString tail like 12.394829384293847, which would push the
+  // short line past the driver's capture window
+  private[graft] def f3(x: Double): String =
+    if (x < 0) "-1" else java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
+
+  /** The short totals-only last stdout line (kept under 200 chars). */
+  private[graft] def shortJson(sum: Summary, reps: Int, sfDir: String): String =
+    s"""{"metric":"total","value":${f3(sum.total)},"unit":"sec","total_s":${f3(sum.total)},"queries":${sum.medians.size},"failed":${sum.failed.size},"stat":"median","reps":$reps,"sf":"$sfDir"}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -91,17 +119,6 @@ object Bench {
       catch { case _: Throwable => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
-
-    def median(xs: Seq[Double]): Double = {
-      val ok = xs.filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.sorted.apply(ok.size / 2)
-    }
-
-    // 3-decimal fixed-point rendering (no scientific notation, no
-    // Double.toString tail like 12.394829384293847 — the tail is what
-    // pushed round 4's line past the driver's capture window)
-    def f3(x: Double): String =
-      if (x < 0) "-1" else java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
 
     runOnce("q1_agg") // warmup: JIT, codegen cache, parquet footers
 
@@ -148,16 +165,17 @@ object Bench {
         n -> (0 until reps).map(_ => runOnce(n))
       }
     }.sortBy(_._1)
-    val medians = results.map { case (k, raw) => k -> median(raw) }
+    val sum = summarize(results)
+    val median = sum.medians.toMap
 
-    val qs = medians.map { case (k, v) => "\"" + k + "\":" + f3(v) }
+    val qs = sum.medians.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    val total = medians.map(_._2).filter(_ >= 0).sum
+    val failedNames = sum.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // "stat"/"reps" ride every artifact so a consumer can SEE the
     // measurement discipline instead of inferring it from value shapes
     val json =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","stat":"median","reps":$reps,"queries":$qs,"sf":"$sfDir"}"""
-    val rawHeaviestFirst = results.sortBy { case (k, raw) => -median(raw) }
+      s"""{"metric":"total","value":${f3(sum.total)},"unit":"sec","stat":"median","reps":$reps,"failed":${sum.failed.size},"failed_queries":$failedNames,"queries":$qs,"sf":"$sfDir"}"""
+    val rawHeaviestFirst = results.sortBy { case (k, _) => -median(k) }
       .map { case (k, raw) => "\"" + k + "\":" + raw.map(f3).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val rawJson =
@@ -167,13 +185,12 @@ object Bench {
     // is ~2.6 KB at 130 queries, so printing it to stdout at all risks
     // pushing the parseable line out (this exact failure ate rounds
     // 1-6's artifacts). Per-query detail lives on stderr + the files.
-    val shortJson =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","total_s":${f3(total)},"queries":${medians.size},"stat":"median","reps":$reps,"sf":"$sfDir"}"""
+    val short = shortJson(sum, reps, sfDir)
     println()
-    println(shortJson)
+    println(short)
     Console.err.println(rawJson)
     Console.err.println(json)
-    Console.err.println(shortJson)
+    Console.err.println(short)
     // full artifact (summary + raw triples) to tmpdir (override via
     // SPARK_GRAFT_BENCH_OUT) and to the legacy cwd path `bench_out.json`
     // (gitignored) — four chances for the driver's parser

@@ -25,11 +25,12 @@ import org.apache.spark.sql.DataFrame
   * write; at cluster scale the same boundary is a shared-storage
   * artifact, which is what a production rank/label/index table is anyway.
   *
-  * Disk hygiene (round-14 advice): sever dirs rotate — the oldest dirs
-  * beyond [[MaxDirs]] are deleted best-effort as new ones are created, so
-  * a long-lived service calling severed operators unboundedly many times
-  * holds at most MaxDirs node-sized directories (plus a JVM shutdown hook
-  * for whatever remains). CONTRACT: a severed frame must be consumed
+  * Disk hygiene: sever dirs live under [[Boundary.root]] and rotate —
+  * the oldest dirs beyond [[MaxDirs]] are deleted best-effort as new ones
+  * are created, so a long-lived service calling severed operators
+  * unboundedly many times holds at most MaxDirs node-sized directories
+  * (the root's shutdown hook removes whatever remains). CONTRACT: a
+  * severed frame must be consumed
   * before [[MaxDirs]] further sever calls happen — true by construction
   * for the registry queries, which write or collect each result before
   * the next query runs; a caller that parks severed frames indefinitely
@@ -48,16 +49,6 @@ private[graft] object Sever {
 
   /** Max sever directories kept on disk before the oldest is deleted. */
   val MaxDirs = 128
-
-  private lazy val root: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_sever")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rm(p.toFile)))
-    p
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-  }
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
   private val live = new java.util.ArrayDeque[java.nio.file.Path]()
@@ -93,11 +84,11 @@ private[graft] object Sever {
     // sources (or the order-independent "(severed)" fallback)
     val base = "graft_sever_" + seq.getAndIncrement()
     lineageByBase.put(base, lineage)
-    val out = root.resolve(base)
+    val out = Boundary.root.resolve(base)
     df.write.mode("overwrite").parquet(out.toString)
     live.synchronized {
       live.addLast(out)
-      while (live.size > MaxDirs) rm(live.removeFirst().toFile)
+      while (live.size > MaxDirs) Boundary.rm(live.removeFirst().toFile)
     }
     df.sparkSession.read.parquet(out.toString)
   }

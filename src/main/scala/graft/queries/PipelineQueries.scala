@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{FreqItemsAgg, Text, ThetaSketchAgg}
-import graft.operators.{Cdc, Cohorts, DataQuality, Dedup, Graph, IncrementalAgg, Layout, LogReg, Multimodal, Packing, Quantize, Sampling, Similarity, SketchRollup, Snapshot, TemporalJoins, TextAnalysis, TimeSeries}
+import graft.operators.{Boundary, Cdc, Cohorts, DataQuality, Dedup, Graph, IncrementalAgg, Layout, LogReg, Multimodal, Packing, Quantize, Sampling, Similarity, SketchRollup, Snapshot, TemporalJoins, TextAnalysis, TimeSeries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,6 +18,13 @@ object PipelineQueries {
 
   private val Tau = 0.7        // word-3-gram Jaccard threshold
   private val CosTau = 0.4     // embedding cosine threshold
+
+  /** Scan of the `kind` parquet [[Boundary]] artifact for `dir`; `write`
+    * fills the artifact path once per JVM.
+    */
+  private def registryScan(s: SparkSession, dir: String, kind: String)(
+      write: String => Unit): DataFrame =
+    s.read.parquet(Boundary.once(Boundary.registryPath(dir, kind))(write))
 
   def dedupExactDocs(s: SparkSession, dir: String): DataFrame =
     Dedup.exactByHash(Tables.documents(s, dir), "text", "doc_id")
@@ -162,24 +169,21 @@ object PipelineQueries {
     */
   @volatile private var fixtureDirSeen: String = VerifySfDir
 
+  /** Fixture files are a pure function of the corpus, so each (dir,
+    * name) is written at most once per JVM. They sit outside the
+    * [[Boundary.root]] that is deleted at exit: `oracle_check.py` reads
+    * them after `Verify` exits.
+    */
+  private def writeFixtureOnce(dir: String, name: String)(df: => DataFrame): Unit =
+    Boundary.once(fixturePath(dir, name)) { p =>
+      df.coalesce(1).write.mode("overwrite").parquet(p)
+    }
+
   /** Fit the PCA-leg model and pin (ord, comp, shift) — the exact
     * doubles [[graft.operators.Pca.project]] embeds as plan literals —
-    * to the verify fixture. Driver-sized (pDims × d), overwritten per
-    * invocation; deterministic per corpus, so re-runs are idempotent.
+    * to the verify fixture. Driver-sized (pDims × d); deterministic per
+    * corpus.
     */
-  /** Fixture files are a pure function of the corpus, so each (dir,
-    * name) is written at most once per JVM — bench reps after the
-    * warm-up don't re-pay the driver-side write.
-    */
-  private val fixturesWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def writeFixtureOnce(dir: String, name: String)(df: => DataFrame): Unit = {
-    val p = fixturePath(dir, name)
-    if (fixturesWritten.add(p))
-      df.coalesce(1).write.mode("overwrite").parquet(p)
-  }
-
   private def pcaModelPinned(s: SparkSession, dir: String): graft.operators.Pca.PcaModel = {
     fixtureDirSeen = dir
     val m = graft.operators.Pca.fit(
@@ -260,27 +264,19 @@ object PipelineQueries {
       annQueries(s, dir), Tables.embeddings(s, dir),
       "vec_id", "embedding", AnnK, AnnDim)
 
-  /** Session-lifetime OPQ index registry (round-14 verdict #5): the
-    * index is BUILT once per (sf dir) — rotation train + codebook train
-    * + corpus encode — and persisted via [[Similarity.writeOpq]] to the
-    * model-registry path; every later call (and every bench rep after
-    * the warm-up) serves from the persisted codes. `ann_topk_opq`
-    * keeps the honest one-shot build+serve cost; this query's bench
-    * median IS the serve-only latency a 100×-scale consumer pays.
-    * Same hash oracle as the one-shot leg: fit+serve == one-shot by
-    * construction (identical rotation/codebooks/encode math,
-    * spec-pinned in `SimilaritySpec`).
+  /** OPQ serving from a [[Boundary]] index: the `opq_index` artifact
+    * holds the rotation, codebooks and encoded corpus
+    * ([[Similarity.writeOpq]]); every call serves from it, so this
+    * query's bench median is the serve-only latency, while
+    * `ann_topk_opq` keeps the one-shot build+serve cost. Same hash
+    * oracle as the one-shot leg: fit+serve == one-shot by construction
+    * (spec-pinned in `SimilaritySpec`).
     */
-  private val opqIndexBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def annTopkOpqServed(s: SparkSession, dir: String): DataFrame = {
-    val path = opqIndexBuilt.computeIfAbsent(dir, _ => {
-      val idx = Similarity.buildOpq(Tables.embeddings(s, dir),
-        "vec_id", "embedding", AnnDim, AnnM)
-      val p = registryPath(dir, "opq_index")
-      Similarity.writeOpq(idx, p)
-      p
-    })
+    val path = Boundary.once(Boundary.registryPath(dir, "opq_index")) { p =>
+      Similarity.writeOpq(Similarity.buildOpq(Tables.embeddings(s, dir),
+        "vec_id", "embedding", AnnDim, AnnM), p)
+    }
     Similarity.queryOpq(Similarity.readOpq(s, path),
       annQueries(s, dir), "vec_id", "embedding", AnnK)
   }
@@ -812,6 +808,23 @@ object PipelineQueries {
       .orderBy(col("bin"))
   }
 
+  /** One ANN leg's top-k id set as a [[Boundary.value]]: |queries| × k
+    * collected (query_id, neighbor_id) rows, served to
+    * [[annRecallReport]]'s recall joins as a LocalRelation.
+    */
+  private def annLegOnce(s: SparkSession, dir: String, leg: String)(
+      compute: => DataFrame): DataFrame = {
+    val (schema, rows) = Boundary.value(("ann_leg", dir, leg)) {
+      val ids = compute.select(col("query_id"), col("neighbor_id"))
+      (ids.schema, ids.collect())
+    }
+    // the alias names the boundary for column lineage: without it
+    // every leg collapses to an indistinguishable LocalRelation and
+    // `ann_recall_report` lineage reads "(local)"
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .as(s"ann_leg_$leg")
+  }
+
   /** Driver-visible ANN quality report: every approximate top-k leg
     * measured against [[annTopkBrute]] on the same queries, one row per
     * leg — `(leg, k, recall_floor, recall_pct)`. The floors are the
@@ -831,39 +844,9 @@ object PipelineQueries {
     * operator here), so the joins below are trivially driver-adjacent; the
     * expensive parts are the leg pipelines themselves, each individually
     * audited for 100 TB shape in [[graft.operators.Similarity]] — and
-    * each materialized AT MOST ONCE per session via [[annLegOnce]], so
+    * each materialized at most once per JVM via [[annLegOnce]], so
     * auditing recall never re-pays pipelines the session already ran.
     */
-  /** Session-lifetime cache of ANN leg top-k id-sets, keyed by (sfDir,
-    * leg) — the `Dedup.shingleHashes` discipline applied to the recall
-    * audit: [[annRecallReport]] must measure all seven leg pipelines, but
-    * re-running them on every report invocation structurally DOUBLED the
-    * ANN family's bench cost each round (round-9 verdict #2). A leg's
-    * output is |queries| × k (query_id, neighbor_id) rows — kilobytes,
-    * bounded by the standing "query set is broadcastable" precondition —
-    * so the report materializes each leg AT MOST ONCE per JVM session
-    * and serves every later invocation's recall joins from the collected
-    * rows as a LocalRelation. The standalone `ann_topk_*` registry
-    * entries deliberately do NOT read this cache: their bench timings
-    * must keep measuring the real pipelines.
-    */
-  private val annLegCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String),
-    (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]()
-
-  private def annLegOnce(s: SparkSession, dir: String, leg: String)(
-      compute: => DataFrame): DataFrame = {
-    val (schema, rows) = annLegCache.computeIfAbsent((dir, leg), _ => {
-      val ids = compute.select(col("query_id"), col("neighbor_id"))
-      (ids.schema, ids.collect())
-    })
-    // the alias NAMES the cache boundary for column lineage — without
-    // it every leg cache collapses to an indistinguishable LocalRelation
-    // and `ann_recall_report` lineage reads "(local)" (round-14 hygiene)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      .as(s"ann_leg_$leg")
-  }
-
   def annRecallReport(s: SparkSession, dir: String): DataFrame = {
     val brute = annLegOnce(s, dir, "brute")(annTopkBrute(s, dir))
     val legs: Seq[(String, Double, DataFrame)] = Seq(
@@ -1127,16 +1110,6 @@ object PipelineQueries {
     TextAnalysis.stats(Tables.documents(s, dir), "doc_id", "text")
       .orderBy(col("doc_id"))
 
-  /** Learned quality filter: logistic regression over the
-    * [[TextAnalysis.stats]] features (intercept, punct_ratio, stop_ratio,
-    * capped token count, scaled mean token length), labels bootstrapped
-    * from the heuristic quality score at the corpus-median threshold 0.8
-    * — the fastText-style classifier step of public LLM-data pipelines,
-    * trained IN the engine (10 full-batch GD steps, lr 5 — 97% label
-    * agreement at sf0.01). Determinism contract and 100 TB shape in
-    * [[graft.operators.LogReg]]; the DuckDB oracle unrolls the same 10
-    * iterations in SQL, so scores and predictions hash-match.
-    */
   /** The (doc_id, x, y) training frame shared by the TRAIN query
     * ([[textQualityModel]]), the model-registry bootstrap behind the
     * SERVE query ([[textQualityServe]]), and the learned flagship —
@@ -1151,26 +1124,16 @@ object PipelineQueries {
       when(col("quality") >= 0.8, 1.0).otherwise(0.0).as("y"))
   }
 
-  /** Session-lifetime cache of the quality-classifier TRAINING RUN —
-    * the full 10-checkpoint trajectory, keyed by sfDir (round 12, the
-    * [[bpeOnce]]/[[curatedSplitOnce]] discipline applied to the model
-    * family): `text_quality_model`, `text_quality_serve`'s registry
-    * bootstrap, `text_training_map`, and the learned-curation prefix
-    * all need the SAME deterministic full-batch GD run, and each
-    * retraining it paid the 10-iteration driver loop once per query.
-    * What's cached is iters × (d+1) doubles of PURE DRIVER STATE — no
-    * Spark lineage at all, so no SparkContext liveness check is needed;
-    * scoring stays a lazy codegen projection over a fresh corpus scan.
-    * Results are bit-identical to per-query training (each GD step is a
-    * pure function of (weights, data), spec-pinned), and every oracle
-    * still unrolls the 10 iterations from scratch.
+  /** The quality-classifier training run as a [[Boundary.value]]: the
+    * full 10-checkpoint GD trajectory (iters × (d+1) doubles of driver
+    * state), read by every query that gates or scores with the trained
+    * classifier except `text_quality_model` itself. Each GD step
+    * is a pure function of (weights, data), so results are bit-identical
+    * to per-query training; every oracle still unrolls the 10 iterations.
     */
-  private val qualityTrajectoryCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Array[Double]]]()
-
   private def qualityTrajectoryOnce(s: SparkSession,
       dir: String): Seq[Array[Double]] =
-    qualityTrajectoryCache.computeIfAbsent(dir, _ => {
+    Boundary.value(("quality_trajectory", dir)) {
       // materialize the narrow feature table once for the 10 training
       // scans (the trainAndScore discipline), release before returning
       val feats = qualityTrainingFrame(s, dir)
@@ -1179,54 +1142,34 @@ object PipelineQueries {
         iters = 10, lr = 5.0)
       feats.unpersist(blocking = true)
       ws
-    })
+    }
 
-  /** Deliberately does NOT serve from [[qualityTrajectoryOnce]] — the
-    * annLegOnce rule: the standalone TRAIN query's bench timing must
-    * keep measuring the real 10-iteration GD run; the derived consumers
-    * (serve registry, training map, calibration, the curated-pipeline
-    * gate) are the ones that share the session-cached trajectory.
+  /** Learned quality filter: logistic regression over the
+    * [[TextAnalysis.stats]] features (intercept, punct_ratio, stop_ratio,
+    * capped token count, scaled mean token length), labels bootstrapped
+    * from the heuristic quality score at the corpus-median threshold 0.8
+    * — the fastText-style classifier step of public LLM-data pipelines,
+    * trained IN the engine (10 full-batch GD steps, lr 5 — 97% label
+    * agreement at sf0.01). Determinism contract and 100 TB shape in
+    * [[graft.operators.LogReg]]; the DuckDB oracle unrolls the same 10
+    * iterations in SQL, so scores and predictions hash-match.
+    * As the operator query it runs the real GD every call, never
+    * [[qualityTrajectoryOnce]].
     */
   def textQualityModel(s: SparkSession, dir: String): DataFrame =
     LogReg.trainAndScore(qualityTrainingFrame(s, dir), "doc_id", "x", "y",
         dim = 5, iters = 10, lr = 5.0)
       .orderBy(col("doc_id"))
 
-  /** Session-lifetime model registry backing [[textQualityServe]], keyed
-    * by sfDir: the first request trains the `text_quality_model`
-    * classifier, persists it with [[LogReg.saveModel]] under a fresh
-    * per-JVM temp root (unique per launch, so a previous session's model
-    * trained on different data can never be served stale), and every
-    * request — including the first — reads the weights back through
-    * [[LogReg.loadModel]]. This is the production hand-off shape: train
-    * once, register, serve many.
+  /** The served classifier as a [[Boundary]] artifact: the final
+    * trajectory checkpoint saved by [[LogReg.saveModel]] as the `model`
+    * registry entry, which [[textQualityServe]] loads on every request
+    * (train once, register, serve many).
     */
-  private lazy val modelRegistryRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_model_registry")
-  private val servedModels =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Registry path for a session artifact keyed by sfDir: md5 of the
-    * full dir string, not String.hashCode — two sfDirs with colliding
-    * 32-bit hashCodes would map to one registry path and the second
-    * write would silently overwrite the first's artifact (round-10
-    * ADVICE); md5 makes the path collision-free in practice.
-    */
-  private def registryPath(dir: String, kind: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val key = md.digest(dir.getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x").mkString
-    modelRegistryRoot.resolve(s"${kind}_$key").toString
-  }
-
   private def qualityModelPath(s: SparkSession, dir: String): String =
-    servedModels.computeIfAbsent(dir, _ => {
-      // final checkpoint of the session-shared training run
-      val w = qualityTrajectoryOnce(s, dir).last
-      val path = registryPath(dir, "model")
-      LogReg.saveModel(s, w, path)
-      path
-    })
+    Boundary.once(Boundary.registryPath(dir, "model")) { path =>
+      LogReg.saveModel(s, qualityTrajectoryOnce(s, dir).last, path)
+    }
 
   /** The learned classifier's SERVE path (round-9 verdict #5): score the
     * corpus with a model LOADED from the registry — no training in the
@@ -1396,51 +1339,31 @@ object PipelineQueries {
     */
   private val BpeMerges = 16
 
-  /** Session-lifetime cache of the trained BPE state — the
-    * [[curatedSplitOnce]] discipline applied to the tokenizer family
-    * (round-11 verdict Next #4): `text_bpe_train/vocab/encode/fertility`
-    * all need the SAME `BpeMerges`-round training run, and each
-    * retraining it from scratch paid the driver-loop training cost four
-    * times per session (~8.2 s of the round-11 bench — the training
-    * loop dominates every one of the four). The run happens AT MOST
-    * ONCE per (JVM, sfDir); what's kept is exactly what a serving stack
-    * ships: the driver-sized merge list plus the vocabulary-scale
-    * segment table, the latter WRITTEN TO PARQUET under the per-JVM
-    * registry root — a few KB/MB by Heaps' law — and the training
-    * checkpoint released. Parquet rather than keeping the training
-    * run's localCheckpoint pinned, for the same plan-determinism reason
-    * as [[curatedSplitOnce]]: a checkpointed LogicalRDD's preserved
-    * creation-time partitioning makes downstream plan shapes depend on
-    * which session state trained first, while a parquet scan leaf
-    * canonicalizes structurally in any session. Results are
-    * byte-identical to the uncached path: the four oracles unroll the
-    * full training from scratch and stay hash-green.
+  /** The trained BPE state: the driver-sized merge list as a
+    * [[Boundary.value]] plus the vocabulary-scale segment table as the
+    * `bpe_segments` parquet artifact (a few KB/MB by Heaps' law), read
+    * by `text_bpe_vocab/encode/fertility`. Results are byte-identical
+    * to the uncached path; the oracles unroll the full training.
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[graft.operators.Bpe.Merge], String)]()
-
   private def bpeOnce(s: SparkSession,
       dir: String): (Seq[graft.operators.Bpe.Merge], DataFrame) = {
-    val (merges, path) = bpeCache.computeIfAbsent(dir, _ => {
+    val merges = Boundary.value(("bpe_merges", dir)) {
       val (m, words) = graft.operators.Bpe.trainWithSegments(
         Tables.documents(s, dir), "text", BpeMerges)
-      val out = registryPath(dir, "bpe_segments")
-      words.write.mode("overwrite").parquet(out)
+      Boundary.once(Boundary.registryPath(dir, "bpe_segments")) { out =>
+        words.write.mode("overwrite").parquet(out)
+      }
       graft.operators.Bpe.unpersistSegments(words)
-      (m, out)
-    })
-    (merges, s.read.parquet(path))
+      m
+    }
+    (merges, s.read.parquet(Boundary.registryPath(dir, "bpe_segments")))
   }
 
   /** BPE tokenizer training over the corpus ([[graft.operators.Bpe]]):
     * the learned merge table after 16 rounds — one corpus-scale word
     * count, then vocabulary-scale bounded-driver-loop rounds; the
     * oracle unrolls the identical argmax + greedy-merge iteration.
-    * Deliberately does NOT serve from [[bpeOnce]] — the annLegOnce
-    * rule: the standalone TRAIN query's bench timing must keep
-    * measuring the real training run; the three derived consumers
-    * (vocab/encode/fertility) are the ones that share the session
-    * cache.
+    * As the operator query it trains every call, never [[bpeOnce]].
     */
   def textBpeTrain(s: SparkSession, dir: String): DataFrame =
     graft.operators.Bpe.train(Tables.documents(s, dir), "text", BpeMerges)
@@ -1845,59 +1768,36 @@ object PipelineQueries {
       .orderBy(col("doc_id"))
   }
 
-  private val fullClustersCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** FULL-corpus near-dup components (the `dedup_clusters_star`
-    * relation, doc_id → cluster_id) computed ONCE per (JVM, sfDir) and
-    * persisted to the model registry as a parquet stage boundary — the
-    * [[curatedSplitOnce]] discipline applied to the ungated cluster
-    * graph. The operator queries (`dedup_clusters`,
-    * `dedup_clusters_star`) stay honest — they re-run the contraction
-    * every invocation, the `annLegOnce`/`text_bpe_train` rule — while
-    * CONSUMERS of the membership relation (`mine_positive_pairs`,
-    * `mine_preference_pairs`) serve from this boundary instead of
-    * re-paying LSH banding + star contraction per call. Parquet rather
-    * than `localCheckpoint` keeps serving plans session-independent
-    * (the LogicalRDD/ReuseExchange determinism trap documented at
-    * [[curatedSplitOnce]]).
+    * relation, doc_id → cluster_id) as the `full_clusters` parquet
+    * [[Boundary]], read by the keep-policy and pair-mining queries; the
+    * operator queries `dedup_clusters` and `dedup_clusters_star` re-run
+    * the contraction.
     */
-  private def fullClustersOnce(s: SparkSession, dir: String): DataFrame = {
-    val path = fullClustersCache.computeIfAbsent(dir, _ => {
+  private def fullClustersOnce(s: SparkSession, dir: String): DataFrame =
+    registryScan(s, dir, "full_clusters") { out =>
       val docs = Tables.documents(s, dir)
       val pairs =
         Dedup.minhashLshPairs(docs, "doc_id", "text", 3, Tau, ordered = false)
-      val out = registryPath(dir, "full_clusters")
       Dedup.clusterIdsStar(docs, "doc_id", pairs)
         .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
-
-  private val baseClustersCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** BASE-corpus near-dup components (doc_id → cluster_id over the
     * `doc_id % 10 != 0` docs, [[Dedup.clusterIds]] canonical min-id
-    * form) computed ONCE per (JVM, sfDir) and persisted to the model
-    * registry — yesterday's cluster relation in the incremental-CC
-    * contract: in production this IS persisted state today's merge run
-    * READS, never recomputes ([[incrementBaseOnce]] discipline).
+    * form) as the `base_clusters` parquet [[Boundary]]: yesterday's
+    * cluster relation, which `dedup_clusters_incremental` reads and
+    * never recomputes.
     */
-  private def baseClustersOnce(s: SparkSession, dir: String): DataFrame = {
-    val path = baseClustersCache.computeIfAbsent(dir, _ => {
+  private def baseClustersOnce(s: SparkSession, dir: String): DataFrame =
+    registryScan(s, dir, "base_clusters") { out =>
       val base = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
       val pairs =
         Dedup.minhashLshPairs(base, "doc_id", "text", 3, Tau, ordered = false)
-      val out = registryPath(dir, "base_clusters")
       Dedup.clusterIds(base, "doc_id", pairs).write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+    }
 
-  /** INCREMENTAL connected components (round 15) — the cluster-merge
+  /** INCREMENTAL connected components — the cluster-merge
     * daily-ops run: the increment (`doc_id % 10 == 0`, the
     * `dedup_incremental` convention) is merged into yesterday's
     * persisted cluster relation ([[baseClustersOnce]]) via
@@ -2117,13 +2017,8 @@ object PipelineQueries {
     * bodies re-shuffle between stages); the oracle recomputes all five
     * stages in one SQL statement.
     *
-    * Since round 13 the five-stage chain runs AT MOST ONCE per (JVM,
-    * sfDir) via [[heuristicCuratedOnce]] — the [[curatedSplitOnce]]
-    * parquet-stage-boundary discipline applied to the v1 pipeline
-    * (round-12 verdict #5: as registered queries multiplied, v1's
-    * per-invocation dedup + star-CC re-run was the largest remaining
-    * redundant prefix, ~3.5 s/invocation at sf0.1). The v1 pipeline
-    * stays REGISTERED (not demoted to a spec twin) deliberately: its
+    * Stages 1–4 are read from the [[heuristicCuratedOnce]] boundary.
+    * The v1 pipeline stays REGISTERED (not demoted to a spec twin): its
     * heuristic gate is the curation path a run without a trained
     * classifier executes, and its oracle replays all five stages from
     * scratch, so the composed-chain check survives the cache.
@@ -2136,21 +2031,12 @@ object PipelineQueries {
         sum(col("n_chars")).as("total_chars"))
       .orderBy(col("lang"))
 
-  /** Session-lifetime cache of the v1 HEURISTIC curation chain's
-    * surviving doc relation — stages 1–4 of [[pipelineCurate]] narrowed
-    * to (doc_id, lang, n_chars) and written once per (JVM, sfDir) to
-    * registry parquet. Parquet rather than `localCheckpoint` for the
-    * same plan-determinism reason as [[curatedSplitOnce]] (a
-    * checkpointed LogicalRDD blocks ReuseExchange canonicalization and
-    * makes serving plans depend on which session populated the cache);
-    * results are byte-identical to the uncached chain and the oracle
-    * still replays every stage.
+  /** Stages 1–4 of [[pipelineCurate]] narrowed to (doc_id, lang,
+    * n_chars), as the `heuristic_curated` parquet [[Boundary]] that
+    * `pipeline_curate` reads.
     */
-  private val heuristicCuratedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def heuristicCuratedOnce(s: SparkSession, dir: String): DataFrame = {
-    val path = heuristicCuratedCache.computeIfAbsent(dir, _ => {
+  private def heuristicCuratedOnce(s: SparkSession, dir: String): DataFrame =
+    registryScan(s, dir, "heuristic_curated") { out =>
       val docs = Tables.documents(s, dir)
       val quality = TextAnalysis.stats(docs, "doc_id", "text")
         .filter(col("quality") >= 0.75).select(col("doc_id"))
@@ -2172,14 +2058,10 @@ object PipelineQueries {
       val kept2 = kept1.join(reps, Seq("doc_id"), "left_semi")
       val sampled = Sampling.stratifiedSampled(kept2, "doc_id", "lang",
         Map("en" -> 50), defaultPct = 90)
-      val out = registryPath(dir, "heuristic_curated")
       sampled.select(col("doc_id"), col("lang"), col("n_chars"))
         .write.mode("overwrite").parquet(out)
       kept1.unpersist(blocking = true)
-      out
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** The flagship pipeline, round-9 LEARNED edition — every stage is the
     * trained/leak-safe upgrade of its [[pipelineCurate]] counterpart:
@@ -2199,9 +2081,9 @@ object PipelineQueries {
     * composed pipeline is hash-checked end-to-end, not just its pieces.
     * Scale shape: one persist at the multi-consumer stage boundary
     * (pair generation, cluster init, final join — v1's recipe), ids-only
-    * semi joins between stages — and since round 12 the whole stage-1–4
-    * prefix runs AT MOST ONCE per session via [[curatedSplitOnce]],
-    * shared with the packed/rebalanced/unimax compositions.
+    * semi joins between stages — and the whole stage-1–4 prefix is read
+    * from the [[curatedSplitOnce]] boundary, shared with the
+    * packed/rebalanced/unimax compositions.
     */
   def pipelineCurateLearned(s: SparkSession, dir: String): DataFrame =
     curatedSplitOnce(s, dir)
@@ -2212,57 +2094,29 @@ object PipelineQueries {
         sum(col("n_chars")).as("total_chars"))
       .orderBy(col("split"), col("lang"))
 
-  /** Session-lifetime cache of the curation PREFIX shared by the four
-    * `pipeline_curate_*` flagships — the [[annLegOnce]] discipline
-    * applied to stages 1–4 (round-11 verdict Next #3): trained gate →
-    * exact dedup → star-contraction CC → cluster-keyed leakage-safe
-    * split is the same chain in all four queries, and re-executing it
-    * per query meant four corpus re-reads per session (≈18.5 s of the
-    * round-11 bench; at 100 TB, four full passes). The prefix runs AT
-    * MOST ONCE per (JVM, sfDir): its doc-granularity output is narrowed
-    * to the ids+metadata relation every consumer needs — (doc_id, lang,
-    * n_chars, tokens, cluster_id, split), no text bodies — and WRITTEN
-    * TO PARQUET under the per-JVM registry root (the
-    * [[qualityModelPath]] pattern), NOT collected to the driver (the
-    * relation is corpus-cardinality, so the driver-side LocalRelation
-    * trick annLegOnce uses for its |queries|×k id sets would not scale
-    * here). This is literally the stage boundary a real 100 TB run
-    * writes to storage once and reads four times — and parquet (rather
-    * than an eager `localCheckpoint`) is deliberate for plan
-    * DETERMINISM: a checkpointed LogicalRDD preserves its creation-time
-    * partitioning/ordering with creation-time expression ids, which
-    * blocks ReuseExchange canonicalization and made each consumer's
-    * plan shape depend on WHICH session state first populated the cache
-    * (found when `PlanShapeDumpSpec` regenerated different exchange
-    * counts inside the shared test session than the fresh dump
-    * session); a parquet scan leaf canonicalizes structurally, so the
-    * serving plans — and the byte-pinned PLANSHAPE rows — are identical
-    * in any session, and consumers get real column pruning. Results are
-    * byte-identical to the uncached chain — the composed oracles replay
-    * all stages from scratch and stay hash-green.
+  /** The curation PREFIX (stages 1–4 of [[pipelineCurateLearned]]:
+    * trained gate → exact dedup → star-contraction CC → cluster-keyed
+    * leakage-safe split) as the `curated_split` parquet [[Boundary]]:
+    * the ids+metadata relation (doc_id, lang, n_chars, tokens,
+    * cluster_id, split), no text bodies, read by every
+    * `pipeline_curate_*` composition and the train manifests. It is
+    * corpus-cardinality, so it is parquet, not a driver value.
     */
-  private val curatedSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def curatedSplitOnce(s: SparkSession, dir: String): DataFrame = {
-    val path = curatedSplitCache.computeIfAbsent(dir, _ => {
+  private def curatedSplitOnce(s: SparkSession, dir: String): DataFrame =
+    registryScan(s, dir, "curated_split") { out =>
       val (split, kept1) = curatedSplitDocs(s, dir)
-      val out = registryPath(dir, "curated_split")
       split.select(col("doc_id"), col("lang"), col("n_chars"),
           size(Text.tokens(col("text"))).cast("long").as("tokens"),
           col("cluster_id"), col("split"))
         .write.mode("overwrite").parquet(out)
       kept1.unpersist(blocking = true)
-      out
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** Stages 1–4 of [[pipelineCurateLearned]] at document granularity:
     * trained gate → exact dedup → star-contraction clusters →
     * cluster-keyed leakage-safe split. Returns the split-assigned doc
     * relation plus the persisted stage-boundary frame (the caller —
-    * [[curatedSplitOnce]] — narrows, checkpoints, then releases the
+    * [[curatedSplitOnce]] — narrows, writes, then releases the
     * persist).
     */
   private def curatedSplitDocs(s: SparkSession,
@@ -2393,7 +2247,25 @@ object PipelineQueries {
       .orderBy(col("lang"))
   }
 
-  /** The training manifest with DECONTAMINATION composed in (round 13)
+  /** Benchmark-contamination flagged ids (docs sharing a word 3-gram
+    * with the `doc_id % 97 == 0` benchmark stand-in — exactly
+    * `TextAnalysis.contaminationFlags`' id set) as the `contam_flags`
+    * parquet [[Boundary]], read by [[pipelineTrainManifestClean]] and
+    * [[pipelineCurateDecontaminated]]; the operator query
+    * `text_decontaminate` re-runs the shingle-overlap join.
+    */
+  private def contamFlagsOnce(s: SparkSession, dir: String): DataFrame =
+    registryScan(s, dir, "contam_flags") { out =>
+      val docs = Tables.documents(s, dir)
+      TextAnalysis.contaminationFlags(
+          docs.filter(col("doc_id") % 97 =!= 0),
+          docs.filter(col("doc_id") % 97 === 0),
+          "doc_id", "text", 3)
+        .select(col("doc_id"))
+        .write.mode("overwrite").parquet(out)
+    }
+
+  /** The training manifest with DECONTAMINATION composed in
     * — [[pipelineTrainManifest]] with the one stage a careful launch
     * adds between the curated split and the repetition plan: benchmark
     * members (doc_id % 97 = 0) and their 3-gram overlap matches leave
@@ -2408,42 +2280,10 @@ object PipelineQueries {
     *
     * Scale shape: the shared [[curatedSplitOnce]] prefix + the
     * [[contamFlagsOnce]] flagged-ids boundary (ids-only anti join into
-    * the train scan; the shingle-overlap join itself runs once per
-    * session at the boundary write — `text_decontaminate` keeps the
-    * honest full cost) + the group-scale waterfill + the two-level
+    * the train scan) + the group-scale waterfill + the two-level
     * bucketed rank — the manifest's own shape plus one keyed ids-only
     * anti join.
     */
-  private val contamFlagsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Benchmark-contamination flagged ids (docs sharing a word 3-gram
-    * with the `doc_id % 97 == 0` benchmark stand-in — exactly
-    * `TextAnalysis.contaminationFlags`' id set) computed ONCE per
-    * (JVM, sfDir) and persisted as a registry parquet stage boundary —
-    * the [[fullClustersOnce]] discipline (round-13 verdict #4): the
-    * standalone operator `text_decontaminate` keeps re-running the full
-    * shingle-overlap join every invocation (the honest-cost rule),
-    * while the COMPOSED consumers ([[pipelineTrainManifestClean]],
-    * [[pipelineCurateDecontaminated]]) read the boundary, which in
-    * production is the flagged-ids artifact a decontamination run
-    * persists for every downstream launch check anyway.
-    */
-  private def contamFlagsOnce(s: SparkSession, dir: String): DataFrame = {
-    val path = contamFlagsCache.computeIfAbsent(dir, _ => {
-      val docs = Tables.documents(s, dir)
-      val out = registryPath(dir, "contam_flags")
-      TextAnalysis.contaminationFlags(
-          docs.filter(col("doc_id") % 97 =!= 0),
-          docs.filter(col("doc_id") % 97 === 0),
-          "doc_id", "text", 3)
-        .select(col("doc_id"))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
-
   def pipelineTrainManifestClean(s: SparkSession, dir: String): DataFrame = {
     val flagged = contamFlagsOnce(s, dir)
     val train = curatedSplitOnce(s, dir).filter(col("split") === "train")
@@ -2555,24 +2395,18 @@ object PipelineQueries {
     gated.join(dupIds, Seq("doc_id"), "left_anti")
   }
 
-  private val incrBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The CURATED BASE corpus the daily increment is admitted against —
     * base docs (`doc_id % 10 != 0`, the `dedup_incremental` increment
     * convention) through the trained gate, then exact first-wins dedup,
-    * then near first-wins dedup (banded LSH candidates, exact verify).
-    * Computed ONCE per (JVM, sfDir) and persisted to the registry as a
-    * parquet stage boundary, because that IS the operational object: in
-    * production yesterday's curated corpus is persisted state that
-    * today's increment run READS, never recomputes (at 100 TB the
-    * boundary would persist minhash/shingle fingerprints next to the
-    * ids rather than raw text — the admission joins below only need
-    * fingerprints; text is kept here because the corpus is test-sized
-    * and the DuckDB oracle replays from text).
+    * then near first-wins dedup (banded LSH candidates, exact verify) —
+    * as the `incr_base` parquet [[Boundary]] of (doc_id, text). It is
+    * yesterday's curated corpus, which the incremental admission
+    * queries, the incremental manifest and `StreamingAdmission` read.
+    * (At 100 TB it would hold minhash/shingle fingerprints instead of
+    * text; text is kept because the DuckDB oracle replays from text.)
     */
-  private[graft] def incrementBaseOnce(s: SparkSession, dir: String): DataFrame = {
-    val path = incrBaseCache.computeIfAbsent(dir, _ => {
+  private[graft] def incrementBaseOnce(s: SparkSession, dir: String): DataFrame =
+    registryScan(s, dir, "incr_base") { out =>
       val w = qualityTrajectoryOnce(s, dir).last
       val passIds = qualityTrainingFrame(s, dir)
         .filter(LogReg.probability(col("x"), w) >= 0.5)
@@ -2583,14 +2417,10 @@ object PipelineQueries {
       val kept = Dedup.nearDedupKeepFirst(
         Dedup.exactByHash(gatedBase, "text", "doc_id"),
         "doc_id", "text", 3, Tau)
-      val out = registryPath(dir, "incr_base")
       kept.select(col("doc_id"), col("text")).write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+    }
 
-  /** INCREMENTAL curation (round 13) — the daily-ops admission run: the
+  /** INCREMENTAL curation — the daily-ops admission run: the
     * increment (`doc_id % 10 == 0`, the `dedup_incremental` convention)
     * is curated AGAINST the persisted curated base
     * ([[incrementBaseOnce]]) without reprocessing the base. An
@@ -2628,26 +2458,15 @@ object PipelineQueries {
       incrementBaseOnce(s, dir), gatedIncr, "doc_id", "text", 3, Tau)
   }
 
-  private val incrAdmittedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** [[incrementAdmittedDocs]]' id set as a once-per-(JVM, sfDir)
-    * parquet boundary — the `fullClustersOnce` consumer discipline:
-    * `pipeline_curate_incremental` (the admission operator itself)
-    * keeps re-running the banded chain honestly; CONSUMERS of the
-    * admitted set (the incremental manifest) read the boundary, which
-    * in production is exactly the admitted-ids artifact the admission
-    * run persists for downstream stages.
+  /** [[incrementAdmittedDocs]]' id set as the `incr_admitted` parquet
+    * [[Boundary]], read by the incremental manifest; the operator query
+    * `pipeline_curate_incremental` re-runs the banded chain.
     */
-  private def incrementAdmittedOnce(s: SparkSession, dir: String): DataFrame = {
-    val path = incrAdmittedCache.computeIfAbsent(dir, _ => {
-      val out = registryPath(dir, "incr_admitted")
+  private def incrementAdmittedOnce(s: SparkSession, dir: String): DataFrame =
+    registryScan(s, dir, "incr_admitted") { out =>
       incrementAdmittedDocs(s, dir).select(col("doc_id"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+    }
 
   def pipelineCurateIncremental(s: SparkSession, dir: String): DataFrame = {
     val w = qualityTrajectoryOnce(s, dir).last
@@ -2689,27 +2508,17 @@ object PipelineQueries {
       incrementBaseOnce(s, dir), gatedIncr, "doc_id", "text", 3, Tau)
   }
 
-  private val incrFlagsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** [[incrementAdmissionFlags]] as a once-per-(JVM, sfDir) parquet
-    * boundary — the [[incrementAdmittedOnce]] consumer discipline:
-    * `pipeline_curate_incremental` keeps re-running the banded chain
-    * honestly; the reasons sheet READS the flags artifact the admission
-    * run persists (in production the per-doc verdict log is exactly
-    * such an artifact — it is also what the streaming admission
-    * operator emits live).
+  /** [[incrementAdmissionFlags]] as the `incr_flags` parquet
+    * [[Boundary]] (the per-doc verdict log), read by
+    * [[pipelineAdmissionReasons]]; the operator query
+    * `pipeline_curate_incremental` re-runs the banded chain.
     */
-  private def incrementFlagsOnce(s: SparkSession, dir: String): DataFrame = {
-    val path = incrFlagsCache.computeIfAbsent(dir, _ => {
-      val out = registryPath(dir, "incr_flags")
+  private def incrementFlagsOnce(s: SparkSession, dir: String): DataFrame =
+    registryScan(s, dir, "incr_flags") { out =>
       incrementAdmissionFlags(s, dir).write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+    }
 
-  /** ADMISSION REASONS (round 14) — `pipeline_curate_incremental` tells
+  /** ADMISSION REASONS — `pipeline_curate_incremental` tells
     * the ops reviewer HOW MANY increment docs were admitted;
     * this sheet tells them WHY the rest were rejected: per language,
     * gate survivors split into exact-twin rejections (md5 match in the

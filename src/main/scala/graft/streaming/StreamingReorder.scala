@@ -218,10 +218,13 @@ object StreamingReorder extends Serializable {
     *  - the flush is an explicit event-time TIMER (registered at
     *    `oldest + grace`, lowered when an older record arrives, cleared
     *    on flush) rather than a timeout timestamp rewritten each batch.
-    * Measured honestly (`StreamBench`: shallow 100k records / 150 keys —
-    * equivalent, micro-batch overhead dominates; deep mode 4 keys ×
-    * 200k records on RocksDB, 200 batches — v2 is 24% faster end-to-end
-    * and the whole gap is serde, see SCALE.md's deep-buffer table). The
+    * Measured: with shallow buffers v2 is SLOWER — on perfbench's
+    * `reorder_replay` (1,500 Zipf keys, 500-record batches, 4 vCPU) its
+    * `batch_ms_p50` read about 19% above [[faithful]]'s (4-pair median
+    * 558 → 666 ms, slower in 4 of 5 pairs) and `pass_s` 18% above; with
+    * deep buffers (`StreamBench` deep mode, 4 keys × 200k records on
+    * RocksDB, 200 batches) v2 is 24% faster end-to-end and the whole gap
+    * is serde, see SCALE.md's deep-buffer table. The
     * O(buffer) → O(inserts) asymmetry matters when per-key buffers are
     * deep relative to per-batch inserts (a real grace window over
     * high-rate keys); v1 additionally holds each key's buffer as ONE
