@@ -1,24 +1,19 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{PipelineQueries, Relational, ReorderQueries}
+import graft.queries.{Oracle, PipelineQueries, Q, Relational, ReorderQueries, RowsOnly}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Queries are contributed by per-area modules under [[graft.queries]];
-  * this object only aggregates them so the driver has one stable surface.
+  * Queries are contributed by per-area modules under [[graft.queries]],
+  * each as one [[Q]] record; this object only aggregates them into one
+  * stable surface.
   */
 object SparkEntry {
 
-  // a def, not a val: PipelineQueries.oracles resolves the eigen-leg
-  // fixture paths at call time (Verify dumps oracleSql AFTER running
-  // the queries), so the module maps must be re-read per call
-  private def modules: Seq[(Map[String, (SparkSession, String) => DataFrame],
-                            Map[String, String])] = Seq(
-    (Relational.queries, Relational.oracles),
-    (ReorderQueries.queries, ReorderQueries.oracles),
-    (PipelineQueries.queries, PipelineQueries.oracles)
-  )
+  /** Every registered query, in module order. */
+  val registry: Seq[Q] =
+    Relational.registry ++ ReorderQueries.registry ++ PipelineQueries.registry
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The end-to-end LEARNED corpus-curation pipeline: trained quality
@@ -32,35 +27,23 @@ object SparkEntry {
     PipelineQueries.pipelineCurateLearned(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_._1).toMap
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. A def: the eigen-leg oracles resolve their
+    * fixture paths when read, and `Verify` reads this after running the
+    * queries. */
   def oracleSql: Map[String, String] =
-    modules.flatMap(_._2).toMap
+    registry.collect { case Q(name, _, o: Oracle) => name -> o.sql }.toMap
 
   /** The registered queries that deliberately carry NO DuckDB oracle —
     * each with the inherent reason and the in-tree gate that checks it
     * instead. Emitted by [[Verify]] as `rows_only_by_design.json`
     * alongside `oracle_sql.json` so a correctness artifact consumer can
     * distinguish "rows-only BY DESIGN, gated elsewhere" from a broken
-    * query (round-10 verdict Next #3: `err: "no_oracle"` read as an
-    * error to anyone not holding SURVEY.md).
+    * query.
     */
-  def rowsOnlyByDesign: Map[String, String] = Map(
-    // Round 15: the three eigen-leg entries (ann_topk_pca/_opq,
-    // ann_recall_report) GRADUATED to full hash oracles — the Jacobi
-    // solve's output matrix is pinned to a verify-time parquet fixture
-    // and DuckDB replays everything downstream of the solve. Only the
-    // engine-specific sketch internals remain rows-only.
-    "q_approx_distinct" -> ("HyperLogLog++ estimator internals are " +
-      "engine-specific (DuckDB's approx_count_distinct differs by " +
-      "construction); error band hash-enforced via sketch_error_report"),
-    "q_approx_percentile" -> ("Greenwald-Khanna sketch internals are " +
-      "engine-specific; rank-guarantee band hash-enforced via " +
-      "sketch_error_report"),
-    "sketch_rollup" -> ("HLL++/KLL mergeable-sketch binary states are " +
-      "engine-specific; SketchRollupSpec pins merge algebra, error " +
-      "bands hash-enforced via sketch_error_report"))
+  val rowsOnlyByDesign: Map[String, String] =
+    registry.collect { case Q(name, _, RowsOnly(reason)) => name -> reason }.toMap
 }

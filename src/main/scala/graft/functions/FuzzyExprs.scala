@@ -41,11 +41,11 @@ case class DeletionSignatureHashes(child: Expression, maxDist: Int)
   override def prettyName: String = "deletion_signature_hashes"
 
   override protected def nullSafeEval(input: Any): Any =
-    DeletionSignatureHashes.eval(input.asInstanceOf[UTF8String], maxDist)
+    DeletionSignatureHashes.signatures(input.asInstanceOf[UTF8String], maxDist)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.DeletionSignatureHashes.eval($c, $maxDist);
+       |${ev.value} = graft.functions.DeletionSignatureHashes.signatures($c, $maxDist);
      """.stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): DeletionSignatureHashes =
@@ -70,7 +70,7 @@ object DeletionSignatureHashes {
     }
   }
 
-  def eval(s: UTF8String, maxDist: Int): GenericArrayData = {
+  def signatures(s: UTF8String, maxDist: Int): GenericArrayData = {
     // distinct at the string level, first-seen order: s, del1(s), del2(s)
     val seen = new java.util.LinkedHashSet[UTF8String]()
     seen.add(s)

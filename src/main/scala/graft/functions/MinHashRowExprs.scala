@@ -46,11 +46,11 @@ case class ShingleHashSet(child: Expression, n: Int) extends UnaryExpression {
   override def prettyName: String = "shingle_hash_set"
 
   override protected def nullSafeEval(input: Any): Any =
-    ShingleHashSet.eval(input.asInstanceOf[ArrayData], n)
+    ShingleHashSet.hashes(input.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.ShingleHashSet.eval($c, $n);
+       |${ev.value} = graft.functions.ShingleHashSet.hashes($c, $n);
      """.stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashSet =
@@ -63,7 +63,7 @@ object ShingleHashSet {
   private def xx(s: UTF8String): Long =
     XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
 
-  def eval(toks: ArrayData, n: Int): GenericArrayData = {
+  def hashes(toks: ArrayData, n: Int): GenericArrayData = {
     val sz = toks.numElements()
     // distinct at the STRING level (array_distinct-before-hash parity),
     // first-seen order; gram count is doc-bounded so a small set is fine
@@ -115,7 +115,7 @@ case class MinHashBandHashes(child: Expression, k: Int, bands: Int, seed: Long)
   @transient private lazy val coeffs = MinHashAgg.coefficients(k, seed)
 
   override protected def nullSafeEval(input: Any): Any =
-    MinHashBandHashes.eval(input.asInstanceOf[ArrayData], k, bands,
+    MinHashBandHashes.bandHashes(input.asInstanceOf[ArrayData], k, bands,
       coeffs._1, coeffs._2)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -123,7 +123,7 @@ case class MinHashBandHashes(child: Expression, k: Int, bands: Int, seed: Long)
     val aRef = ctx.addReferenceObj("permA", pa, "long[]")
     val bRef = ctx.addReferenceObj("permB", pb, "long[]")
     nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MinHashBandHashes.eval($c, $k, $bands, $aRef, $bRef);
+       |${ev.value} = graft.functions.MinHashBandHashes.bandHashes($c, $k, $bands, $aRef, $bRef);
      """.stripMargin)
   }
 
@@ -132,7 +132,7 @@ case class MinHashBandHashes(child: Expression, k: Int, bands: Int, seed: Long)
 }
 
 object MinHashBandHashes {
-  def eval(hashes: ArrayData, k: Int, bands: Int,
+  def bandHashes(hashes: ArrayData, k: Int, bands: Int,
       pa: Array[Long], pb: Array[Long]): GenericArrayData = {
     val p = MinHashAgg.P
     val sig = new Array[Long](k)

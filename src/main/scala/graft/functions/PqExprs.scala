@@ -108,7 +108,7 @@ case class PqEncodeCodes(child: Expression, cb: DoubleTensor,
   @transient private lazy val childIsFloat = PqExprs.isFloat(child)
 
   override protected def nullSafeEval(input: Any): Any =
-    PqEncodeCodes.eval(input.asInstanceOf[ArrayData], childIsFloat,
+    PqEncodeCodes.encode(input.asInstanceOf[ArrayData], childIsFloat,
       cb.data, bias.data, m, ksub, d0)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -116,7 +116,7 @@ case class PqEncodeCodes(child: Expression, cb: DoubleTensor,
     val biasRef = ctx.addReferenceObj("pqBias", bias.data, "double[]")
     val fl = if (childIsFloat) "true" else "false"
     nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.PqEncodeCodes.eval($c, $fl, $cbRef, $biasRef, $m, $ksub, $d0);
+       |${ev.value} = graft.functions.PqEncodeCodes.encode($c, $fl, $cbRef, $biasRef, $m, $ksub, $d0);
        |if (${ev.value} == null) ${ev.isNull} = true;
      """.stripMargin)
   }
@@ -126,7 +126,7 @@ case class PqEncodeCodes(child: Expression, cb: DoubleTensor,
 }
 
 object PqEncodeCodes {
-  def eval(vec: ArrayData, isFloat: Boolean, cb: Array[Double],
+  def encode(vec: ArrayData, isFloat: Boolean, cb: Array[Double],
       bias: Array[Double], m: Int, ksub: Int, d0: Int): GenericArrayData = {
     if (vec.numElements() != m * d0) return null
     val out = new Array[Any](m)
@@ -189,7 +189,7 @@ case class ArgMaxDotCell(child: Expression, cents: DoubleTensor,
   override protected def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
     if (v.numElements() != dim) null
-    else ArgMaxDotCell.eval(v, childIsFloat, cents.data, nlist, dim)
+    else ArgMaxDotCell.argmax(v, childIsFloat, cents.data, nlist, dim)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -199,7 +199,7 @@ case class ArgMaxDotCell(child: Expression, cents: DoubleTensor,
        |if ($c.numElements() != $dim) {
        |  ${ev.isNull} = true;
        |} else {
-       |  ${ev.value} = graft.functions.ArgMaxDotCell.eval($c, $fl, $cRef, $nlist, $dim);
+       |  ${ev.value} = graft.functions.ArgMaxDotCell.argmax($c, $fl, $cRef, $nlist, $dim);
        |}
      """.stripMargin)
   }
@@ -209,7 +209,7 @@ case class ArgMaxDotCell(child: Expression, cents: DoubleTensor,
 }
 
 object ArgMaxDotCell {
-  def eval(vec: ArrayData, isFloat: Boolean, cents: Array[Double],
+  def argmax(vec: ArrayData, isFloat: Boolean, cents: Array[Double],
       nlist: Int, dim: Int): Long = {
     var best = Double.NegativeInfinity
     var bestC = 0

@@ -36,11 +36,11 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   override def prettyName: String = "word_ngrams"
 
   override protected def nullSafeEval(input: Any): Any =
-    WordNgrams.eval(input.asInstanceOf[ArrayData], n)
+    WordNgrams.grams(input.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.WordNgrams.eval($c, $n);
+       |${ev.value} = graft.functions.WordNgrams.grams($c, $n);
      """.stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): WordNgrams =
@@ -50,7 +50,7 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
 object WordNgrams {
   private val Space = UTF8String.fromString(" ")
 
-  def eval(toks: ArrayData, n: Int): GenericArrayData = {
+  def grams(toks: ArrayData, n: Int): GenericArrayData = {
     val sz = toks.numElements()
     if (sz < n) return new GenericArrayData(Array.empty[Any])
     val win = new Array[UTF8String](n)

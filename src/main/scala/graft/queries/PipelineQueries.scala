@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions._
   * `embeddings`. MinHash-LSH intentionally shares the exact-Jaccard oracle:
   * with 32×4 banding its recall on pairs ≥ tau is 1 up to astronomically
   * small probability, and the pipeline verifies candidates exactly, so its
-  * output must equal the exact operator's. SimHash has no SQL oracle (its
-  * fingerprint is defined in terms of xxhash64) — the driver records a
-  * rows-only check and `DedupSpec` covers semantics with planted data.
+  * output must equal the exact operator's.
   */
 object PipelineQueries {
 
@@ -3084,139 +3082,6 @@ object PipelineQueries {
       .orderBy(col("row"), col("col"))
   }
 
-  val queries: Map[String, Relational.Q] = Map(
-    "text_cms" -> (textCms _),
-    "q_group_percentile" -> (qGroupPercentile _),
-    "q_outliers" -> (qOutliers _),
-    "dedup_containment" -> (dedupContainment _),
-    "text_bm25" -> (textBm25 _),
-    "q_zorder_layout" -> (qZorderLayout _),
-    "emb_gram_matrix" -> (embGramMatrix _),
-    "q_resample_ffill" -> (qResampleFfill _),
-    "emb_clip_bounds" -> (embClipBounds _),
-    "sample_cap_source" -> (sampleCapSource _),
-    "q_funnel" -> (qFunnel _),
-    "text_dup_spans" -> (textDupSpans _),
-    "text_ngram_lm" -> (textNgramLm _),
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_triangles" -> (graphTriangles _),
-    "graph_communities" -> (graphCommunities _),
-    "q_cohort_retention" -> (qCohortRetention _),
-    "q_event_transitions" -> (qEventTransitions _),
-    "sample_weighted" -> (sampleWeighted _),
-    "text_lm_score" -> (textLmScore _),
-    "chunk_cdc" -> (chunkCdcDocs _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "emb_dim_stats" -> (embDimStats _),
-    "q_latest_by_key" -> (qLatestByKey _),
-    "sample_split" -> (sampleSplit _),
-    "sample_split_leaksafe" -> (sampleSplitLeaksafe _),
-    "sample_stratified" -> (sampleStratified _),
-    "sample_temperature" -> (sampleTemperature _),
-    "sample_unimax" -> (sampleUnimax _),
-    "sample_unimax_apply" -> (sampleUnimaxApply _),
-    "sample_shuffle" -> (sampleShuffle _),
-    "text_pii_redact" -> (textPiiRedact _),
-    "emb_quantize" -> (embQuantize _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "text_vocab" -> (textVocab _),
-    "text_bpe_train" -> (textBpeTrain _),
-    "text_bpe_encode" -> (textBpeEncode _),
-    "text_bpe_vocab" -> (textBpeVocab _),
-    "dedup_clusters" -> (dedupClusters _),
-    "emb_centroids" -> (embCentroids _),
-    "dedup_clusters_star" -> (dedupClustersStar _),
-    "dedup_clusters_incremental" -> (dedupClustersIncremental _),
-    "text_salient_terms" -> (textSalientTerms _),
-    "text_decontaminate" -> (textDecontaminate _),
-    "text_repetition" -> (textRepetition _),
-    "text_diversity" -> (textDiversity _),
-    "chunk_documents" -> (chunkDocuments _),
-    "pipeline_curate" -> (pipelineCurate _),
-    "pipeline_curate_learned" -> (pipelineCurateLearned _),
-    "pipeline_curate_packed" -> (pipelineCuratePacked _),
-    "pipeline_curate_rebalanced" -> (pipelineCurateRebalanced _),
-    "pipeline_curate_unimax" -> (pipelineCurateUnimax _),
-    "pipeline_curate_shuffled" -> (pipelineCurateShuffled _),
-    "pipeline_curate_ingest" -> (pipelineCurateIngest _),
-    "pipeline_curate_incremental" -> (pipelineCurateIncremental _),
-    "pipeline_admission_reasons" -> (pipelineAdmissionReasons _),
-    "pipeline_incremental_manifest" -> (pipelineIncrementalManifest _),
-    "pipeline_curate_curriculum" -> (pipelineCurateCurriculum _),
-    "pipeline_curate_decontaminated" -> (pipelineCurateDecontaminated _),
-    "pipeline_train_manifest" -> (pipelineTrainManifest _),
-    "pipeline_train_manifest_clean" -> (pipelineTrainManifestClean _),
-    "mine_triplets" -> (mineTriplets _),
-    "mine_preference_pairs" -> (minePreferencePairs _),
-    "dedup_keep_best" -> (dedupKeepBest _),
-    "dedup_keep_policy_audit" -> (dedupKeepPolicyAudit _),
-    "emb_centroid_dist" -> (embCentroidDist _),
-    "emb_kcenter" -> (embKcenter _),
-    "sample_doremi" -> (sampleDoremi _),
-    "sample_split_audit" -> (sampleSplitAudit _),
-    "text_langid_confusion" -> (textLangidConfusion _),
-    "text_quality_calibration" -> (textQualityCalibration _),
-    "text_quality_sweep" -> (textQualitySweep _),
-    "pack_sequences" -> (packSequences _),
-    "pack_shards" -> (packShards _),
-    "pack_turns" -> (packTurns _),
-    "pack_length_batches" -> (packLengthBatches _),
-    "text_token_budget" -> (textTokenBudget _),
-    "sample_mix" -> (sampleMix _),
-    "text_quality_rules" -> (textQualityRules _),
-    "text_gate_agreement" -> (textGateAgreement _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_range_join" -> (qRangeJoin _),
-    "mm_binary_stats" -> (mmBinaryStats _),
-    "mm_image_decode" -> (mmImageDecode _),
-    "mm_image_dedup" -> (mmImageDedup _),
-    "mm_image_neardup" -> (mmImageNeardup _),
-    "mm_audio_decode" -> (mmAudioDecode _),
-    "mm_video_decode" -> (mmVideoDecode _),
-    "mm_image_resize" -> (mmImageResize _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "text_stats" -> (textStats _),
-    "text_quality_model" -> (textQualityModel _),
-    "text_training_map" -> (textTrainingMap _),
-    "sample_dsir" -> (sampleDsir _),
-    "sample_cluster_balanced" -> (sampleClusterBalanced _),
-    "text_quality_serve" -> (textQualityServe _),
-    "text_langid" -> (textLangid _),
-    "text_fingerprint" -> (textFingerprint _),
-    "dedup_exact_docs" -> (dedupExactDocs _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "text_knn_jaccard" -> (textKnnJaccard _),
-    "text_lang_drift" -> (textLangDrift _),
-    "dedup_minhash" -> (dedupMinhash _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_simhash_keep" -> (dedupSimhashKeep _),
-    "dedup_near_keep" -> (dedupNearKeep _),
-    "dedup_embed_cosine" -> (dedupEmbedCosine _),
-    "emb_kmeans" -> (embKmeans _),
-    "ann_topk_brute" -> (annTopkBrute _),
-    "ann_topk_lsh" -> (annTopkLsh _),
-    "ann_topk_ivf" -> (annTopkIvf _),
-    "ann_topk_pca" -> (annTopkPca _),
-    "ann_topk_pq" -> (annTopkPq _),
-    "ann_topk_opq" -> (annTopkPqOpq _),
-    "ann_topk_opq_served" -> (annTopkOpqServed _),
-    "ann_topk_pq_refined" -> (annTopkPqRefined _),
-    "ann_topk_ivfpq" -> (annTopkIvfPq _),
-    "mine_hard_negatives" -> (mineHardNegatives _),
-    "mine_positive_pairs" -> (minePositivePairs _),
-    "text_bpe_fertility" -> (textBpeFertility _),
-    "emb_decontaminate" -> (embDecontaminate _),
-    "ann_recall_report" -> (annRecallReport _),
-    "sketch_rollup" -> (sketchRollup _),
-    "sketch_overlap" -> (sketchOverlap _),
-    "q_cdc_apply" -> (qCdcApply _),
-    "q_incr_agg" -> (qIncrAgg _),
-    "q_dq_checks" -> (qDqChecks _),
-    "q_dq_drift" -> (qDqDrift _),
-    "sketch_heavy_hitters" -> (sketchHeavyHitters _),
-    "sketch_error_report" -> (sketchErrorReport _)
-  )
-
   /** Shared shingle CTE for the Jaccard oracles — MUST stay in lockstep
     * with [[graft.functions.Text.tokens]]/[[graft.functions.Text.shingles]].
     */
@@ -4139,21 +4004,12 @@ object PipelineQueries {
        |FROM x ORDER BY sel_round""".stripMargin
   }
 
-  /** Rebuilt on each call: the three eigen-fixture entries resolve
-    * their fixture paths against [[fixtureDirSeen]] at DUMP time (the
-    * rest is one static map built once). */
-  def oracles: Map[String, String] = oraclesStatic ++ Map(
-    "ann_topk_pca" -> annTopkPcaSql,
-    "ann_topk_opq" -> annTopkOpqSql,
-    "ann_topk_opq_served" -> annTopkOpqSql,
-    "ann_recall_report" -> annRecallReportSql)
-
-  private lazy val oraclesStatic: Map[String, String] = Map(
-    "emb_kcenter" -> embKcenterSql,
+  val registry: Seq[Q] = Seq(
+    Q("emb_kcenter", embKcenter, Oracle(embKcenterSql)),
     // the exact near-dup pair graph + recursive components, then the two
     // md5 split rules: naive per-doc vs cluster-keyed (cross = 0 by
     // construction for the latter)
-    "sample_split_audit" -> (clustersCte +
+    Q("sample_split_audit", sampleSplitAudit, Oracle(clustersCte +
       """,
         |aud_n AS (SELECT count(*) AS n_pairs,
         |    CAST(count(*) FILTER (WHERE
@@ -4168,10 +4024,10 @@ object PipelineQueries {
         |SELECT 'naive_docid' AS scheme, n_pairs, n_cross FROM aud_n
         |UNION ALL
         |SELECT 'leaksafe_cluster' AS scheme, n_pairs, n_cross FROM aud_s
-        |ORDER BY scheme""".stripMargin),
+        |ORDER BY scheme""".stripMargin)),
     // the text_langid decision CTEs grouped into the (label, prediction)
     // confusion matrix; label_share = one exact-int division per cell
-    "text_langid_confusion" ->
+    Q("text_langid_confusion", textLangidConfusion, Oracle(
       """WITH t AS (
         |  SELECT doc_id, lang, text,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -4194,10 +4050,10 @@ object PipelineQueries {
         |SELECT lang, pred_lang, count(*) AS n_docs,
         |  CAST(count(*) AS DOUBLE) /
         |    CAST(sum(count(*)) OVER (PARTITION BY lang) AS DOUBLE) AS label_share
-        |FROM pr GROUP BY lang, pred_lang ORDER BY lang, pred_lang""".stripMargin,
+        |FROM pr GROUP BY lang, pred_lang ORDER BY lang, pred_lang""".stripMargin)),
     // score sweep: same w10 scoring chain fanned across 9 thresholds;
     // empty thresholds drop from BOTH engines (inner filter-then-group)
-    "text_quality_sweep" -> (logRegCtes +
+    Q("text_quality_sweep", textQualitySweep, Oracle(logRegCtes +
       """
         |sc AS (SELECT f.doc_id,
         |    round(1.0 / (1.0 + exp(-round(list_sum(list_transform(range(1, 6),
@@ -4211,11 +4067,11 @@ object PipelineQueries {
         |SELECT kept.thr, count(*) AS n_kept,
         |  CAST(count(*) AS DOUBLE) / n.total AS frac_kept,
         |  CAST(sum(CAST(kept.score AS DECIMAL(30,15))) AS DOUBLE) / count(*) AS mean_kept_score
-        |FROM kept, n GROUP BY kept.thr, n.total ORDER BY kept.thr""".stripMargin),
+        |FROM kept, n GROUP BY kept.thr, n.total ORDER BY kept.thr""".stripMargin)),
     // every cell recomputed exactly: row i's hash is md5 hex slice
     // [8i+1, 8i+8] mod width — the same aligned 4-byte slice the
     // aggregate reads from the binary digest
-    "text_cms" ->
+    Q("text_cms", textCms, Oracle(
       """WITH t AS (
         |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
         |  FROM documents),
@@ -4232,8 +4088,8 @@ object PipelineQueries {
         |SELECT CAST(grid.row AS BIGINT) AS row, CAST(grid.col AS BIGINT) AS col,
         |  CAST(coalesce(cell.n, 0) AS BIGINT) AS cnt
         |FROM grid LEFT JOIN cell ON grid.row = cell.row AND grid.col = cell.col
-        |ORDER BY row, col""".stripMargin,
-    "q_group_percentile" ->
+        |ORDER BY row, col""".stripMargin)),
+    Q("q_group_percentile", qGroupPercentile, Oracle(
       """WITH r AS (
         |  SELECT l_returnflag, l_quantity,
         |    row_number() OVER (PARTITION BY l_returnflag ORDER BY l_quantity) AS rn,
@@ -4243,10 +4099,10 @@ object PipelineQueries {
         |  min(CASE WHEN rn = (n + 3) // 4 THEN l_quantity END) AS p25,
         |  min(CASE WHEN rn = (n + 1) // 2 THEN l_quantity END) AS median,
         |  min(CASE WHEN rn = (n * 3 + 3) // 4 THEN l_quantity END) AS p75
-        |FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
     // mean/var rounded BEFORE the flag compare; test is (v-mean)^2 >
     // 9*var (sqrt-free) so boundary membership cannot flip cross-engine
-    "q_outliers" ->
+    Q("q_outliers", qOutliers, Oracle(
       """WITH s AS (
         |  SELECT user_id, count(*) AS n,
         |    round(avg(value), 6) AS mean,
@@ -4256,20 +4112,20 @@ object PipelineQueries {
         |SELECT e.event_id, e.user_id, e.value, s.mean, s.var
         |FROM events e JOIN s USING (user_id)
         |WHERE (e.value - s.mean) * (e.value - s.mean) > 9 * s.var
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin)),
     // containment = |inner ∩ outer| / |inner| on the same distinct
     // 3-gram shingles as the Jaccard oracles; asymmetric, both orders
-    "dedup_containment" ->
+    Q("dedup_containment", dedupContainment, Oracle(
       s"""$shingleCte
          |SELECT a.doc_id AS doc_inner, b.doc_id AS doc_outer,
          |  round(len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh), 4)
          |    AS containment
          |FROM s a, s b WHERE a.doc_id != b.doc_id
          |  AND round(len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh), 4) >= $Tau
-         |ORDER BY doc_inner, doc_outer""".stripMargin,
+         |ORDER BY doc_inner, doc_outer""".stripMargin)),
     // linear-idf BM25 (log is not bit-portable); avgdl = sum(dl)/N over
     // ALL docs; literals in e0 form; score rounded BEFORE ranking
-    "text_bm25" ->
+    Q("text_bm25", textBm25, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -4296,16 +4152,16 @@ object PipelineQueries {
         |r AS (SELECT doc_id, score,
         |        CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank
         |      FROM sc)
-        |SELECT doc_id, score, rank FROM r WHERE rank <= 50 ORDER BY rank""".stripMargin,
-    "q_zorder_layout" ->
+        |SELECT doc_id, score, rank FROM r WHERE rank <= 50 ORDER BY rank""".stripMargin)),
+    Q("q_zorder_layout", qZorderLayout, Oracle(
       s"""WITH z AS (
          |  SELECT ($zTerms) AS zv, l_partkey, l_suppkey FROM lineitem)
          |SELECT zv >> 14 AS bucket, count(*) AS n_rows,
          |  min(l_partkey) AS x_min, max(l_partkey) AS x_max,
          |  CAST(min(l_suppkey) AS BIGINT) AS y_min,
          |  CAST(max(l_suppkey) AS BIGINT) AS y_max
-         |FROM z GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "emb_gram_matrix" ->
+         |FROM z GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    Q("emb_gram_matrix", embGramMatrix, Oracle(
       """WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |p AS (SELECT a.i AS i, b.i AS j
         |      FROM (SELECT unnest(range(64)) AS i) a,
@@ -4313,11 +4169,11 @@ object PipelineQueries {
         |      WHERE a.i <= b.i)
         |SELECT CAST(p.i AS BIGINT) AS i, CAST(p.j AS BIGINT) AS j,
         |  round(sum(e.v[p.i + 1] * e.v[p.j + 1]), 4) AS gram
-        |FROM e CROSS JOIN p GROUP BY p.i, p.j ORDER BY i, j""".stripMargin,
+        |FROM e CROSS JOIN p GROUP BY p.i, p.j ORDER BY i, j""".stripMargin)),
     // the first grid bucket per user carries a real observation, so
     // last_value IGNORE NULLS never yields NULL; per-bucket means are
     // rounded on both engines before the fill copies them around
-    "q_resample_ffill" ->
+    Q("q_resample_ffill", qResampleFfill, Oracle(
       """WITH c AS (
         |  SELECT user_id, date_trunc('hour', ts) AS bucket,
         |    round(avg(value), 6) AS v, count(*) AS n
@@ -4332,10 +4188,10 @@ object PipelineQueries {
         |    ORDER BY g.bucket ROWS UNBOUNDED PRECEDING) AS value_ffill,
         |  CAST(coalesce(c.n, 0) AS BIGINT) AS n_events
         |FROM g LEFT JOIN c ON g.user_id = c.user_id AND g.bucket = c.bucket
-        |ORDER BY g.user_id, g.bucket""".stripMargin,
+        |ORDER BY g.user_id, g.bucket""".stripMargin)),
     // order statistics at integer ranks — no interpolation, no rounding;
     // k_lo = ceil(n/100), k_hi = ceil(99n/100) in pure integer math
-    "emb_clip_bounds" ->
+    Q("emb_clip_bounds", embClipBounds, Oracle(
       """WITH x AS (
         |  SELECT unnest(range(len(embedding))) AS d, unnest(embedding) AS xf
         |  FROM embeddings),
@@ -4351,15 +4207,15 @@ object PipelineQueries {
         |SELECT v.dim, max(b.n) AS n, max(b.p01) AS p01, max(b.p99) AS p99,
         |  CAST(sum(CASE WHEN v.x < b.p01 OR v.x > b.p99 THEN 1 ELSE 0 END)
         |    AS BIGINT) AS n_clipped
-        |FROM v JOIN b USING (dim) GROUP BY v.dim ORDER BY v.dim""".stripMargin,
-    "sample_cap_source" ->
+        |FROM v JOIN b USING (dim) GROUP BY v.dim ORDER BY v.dim""".stripMargin)),
+    Q("sample_cap_source", sampleCapSource, Oracle(
       """SELECT doc_id, source FROM (
         |  SELECT doc_id, source,
         |    row_number() OVER (PARTITION BY source
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
         |  FROM documents) t
-        |WHERE rn <= 10 ORDER BY source, doc_id""".stripMargin,
-    "q_funnel" ->
+        |WHERE rn <= 10 ORDER BY source, doc_id""".stripMargin)),
+    Q("q_funnel", qFunnel, Oracle(
       """WITH c AS (SELECT user_id, min(ts) AS first_click_ts
         |           FROM events WHERE event_type = 'click' GROUP BY user_id),
         |p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
@@ -4372,11 +4228,11 @@ object PipelineQueries {
         |  GROUP BY c.user_id, c.first_click_ts)
         |SELECT user_id, first_click_ts, first_purchase_ts,
         |  first_purchase_ts IS NOT NULL AS converted
-        |FROM j ORDER BY user_id""".stripMargin,
+        |FROM j ORDER BY user_id""".stripMargin)),
     // distinct per-doc shingles (list_distinct matches shinglesOfTokens),
     // df = docs containing the shingle; string-vs-hash parity as in
     // text_decontaminate (xxhash64 collision-free at these set sizes)
-    "text_dup_spans" ->
+    Q("text_dup_spans", textDupSpans, Oracle(
       s"""$shingleCte,
          |x AS (SELECT doc_id, unnest(sh) AS g FROM s),
          |dfq AS (SELECT g, count(*) AS df FROM x GROUP BY g)
@@ -4386,11 +4242,11 @@ object PipelineQueries {
          |  round(sum(CASE WHEN dfq.df >= 2 THEN 1 ELSE 0 END) * 1.0 /
          |    greatest(count(*), 1), 6) AS dup_ratio
          |FROM x JOIN dfq USING (g)
-         |GROUP BY x.doc_id ORDER BY x.doc_id""".stripMargin,
+         |GROUP BY x.doc_id ORDER BY x.doc_id""".stripMargin)),
     // trigram + its 2-token prefix built at the same positions; prefix
     // count = sum of trigram counts sharing the prefix (NOT the raw
     // bigram count — the final bigram of each doc heads no trigram)
-    "text_ngram_lm" ->
+    Q("text_ngram_lm", textNgramLm, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -4406,11 +4262,11 @@ object PipelineQueries {
         |        CAST(row_number() OVER (ORDER BY n DESC, trigram) AS BIGINT) AS rank
         |      FROM tc JOIN pc USING (pre))
         |SELECT trigram, n, prefix_n, cond_p, rank FROM r
-        |WHERE rank <= 50 ORDER BY rank""".stripMargin,
+        |WHERE rank <= 50 ORDER BY rank""".stripMargin)),
     // ordered-edge triangle enumeration: wedge a<b<c via the middle
     // node, closing edge (a,c) confirmed by semi join; each triangle
     // credits all three corners. Counts are integers — hash-exact.
-    "graph_triangles" ->
+    Q("graph_triangles", graphTriangles, Oracle(
       """WITH ps AS (SELECT DISTINCT l_orderkey AS p, l_partkey AS s FROM lineitem),
         |e AS (SELECT DISTINCT x.s AS a, y.s AS b FROM ps x
         |      JOIN ps y ON x.p = y.p AND x.s < y.s),
@@ -4421,10 +4277,10 @@ object PipelineQueries {
         |n AS (SELECT a AS node_id FROM tr UNION ALL
         |      SELECT b FROM tr UNION ALL SELECT c FROM tr)
         |SELECT node_id, CAST(count(*) AS BIGINT) AS triangles
-        |FROM n GROUP BY node_id ORDER BY node_id""".stripMargin,
+        |FROM n GROUP BY node_id ORDER BY node_id""".stripMargin)),
     // both weeks Monday-truncated -> day diff is an exact multiple of 7;
     // integer counts, date-typed weeks: hash-exact cross-engine
-    "q_cohort_retention" ->
+    Q("q_cohort_retention", qCohortRetention, Oracle(
       """WITH f AS (SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
         |           FROM events GROUP BY user_id),
         |a AS (SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS w
@@ -4434,19 +4290,19 @@ object PipelineQueries {
         |  CAST(count(*) AS BIGINT) AS active_users
         |FROM a JOIN f USING (user_id)
         |GROUP BY cohort_week, week_offset
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-    "q_event_transitions" ->
+        |ORDER BY cohort_week, week_offset""".stripMargin)),
+    Q("q_event_transitions", qEventTransitions, Oracle(
       """WITH s AS (SELECT user_id, event_type AS next_type,
         |    lag(event_type) OVER (PARTITION BY user_id
         |      ORDER BY ts, event_id) AS prev_type
         |  FROM events)
         |SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS transitions
         |FROM s WHERE prev_type IS NOT NULL
-        |GROUP BY prev_type, next_type ORDER BY prev_type, next_type""".stripMargin,
+        |GROUP BY prev_type, next_type ORDER BY prev_type, next_type""".stripMargin)),
     // the oracle's single global window cumsum equals the engine's
     // two-level (bucketed) prefix sum because both order by o_orderkey;
     // floor(price)+1 weights and DIV grid points are all integer-exact
-    "sample_weighted" ->
+    Q("sample_weighted", sampleWeighted, Oracle(
       """WITH w AS (SELECT o_orderkey, CAST(floor(o_totalprice) AS BIGINT) + 1 AS wt
         |           FROM orders),
         |t AS (SELECT CAST(sum(wt) AS BIGINT) AS total FROM w),
@@ -4457,11 +4313,11 @@ object PipelineQueries {
         |SELECT o_orderkey, wt AS weight FROM c CROSS JOIN t
         |WHERE cum // GREATEST(total // 100, 1)
         |    > (cum - wt) // GREATEST(total // 100, 1)
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin)),
     // per-doc trigram totals + hits against the SAME ranked top-50 LM the
     // text_ngram_lm oracle builds (tie-break n desc, trigram asc) — two
     // BIGINT counts, no floats anywhere
-    "text_lm_score" ->
+    Q("text_lm_score", textLmScore, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -4478,11 +4334,11 @@ object PipelineQueries {
         |  CAST(sum(CASE WHEN lm.trigram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
         |    AS lm_hits
         |FROM g LEFT JOIN lm ON g.trigram = lm.trigram
-        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin,
+        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin)),
     // same tokenizer CTE as text_ngram_lm; cuts = md5-of-4-gram mod 64,
     // candidates 4..n-1 (range() end-exclusive), chunks = cuts+1 slices.
     // DuckDB list slicing toks[a:b] is 1-based inclusive like slice().
-    "chunk_cdc" ->
+    Q("chunk_cdc", chunkCdcDocs, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -4503,10 +4359,10 @@ object PipelineQueries {
         |  CAST(starts[i] AS BIGINT) AS start_tok,
         |  CAST(ends[i] - starts[i] + 1 AS BIGINT) AS n_tok,
         |  md5(array_to_string(toks[starts[i]:ends[i]], ' ')) AS chunk_md5
-        |FROM x ORDER BY doc_id, chunk_idx""".stripMargin,
+        |FROM x ORDER BY doc_id, chunk_idx""".stripMargin)),
     // v2 derived by the same md5-bucket rule, diff by text equality
     // (equivalent to the engine's md5-manifest compare)
-    "q_snapshot_diff" ->
+    Q("q_snapshot_diff", qSnapshotDiff, Oracle(
       """WITH b AS (SELECT doc_id, text,
         |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 20 AS bk
         |  FROM documents),
@@ -4521,11 +4377,11 @@ object PipelineQueries {
         |             WHEN a.text != c.text THEN 'modified' END AS change
         |      FROM documents a FULL OUTER JOIN v2 c ON a.doc_id = c.doc_id)
         |SELECT doc_id, change FROM d WHERE change IS NOT NULL
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
     // the same three supersteps unrolled; per-iteration round(,10) is the
     // cross-engine contract (summation-order noise is ~1e-20, 10 orders
     // below the rounding grid). Node ids: part -> 2k, supplier -> 2k+1.
-    "graph_pagerank" ->
+    Q("graph_pagerank", graphPagerank, Oracle(
       """WITH e0 AS (SELECT DISTINCT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
         |            FROM lineitem),
         |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
@@ -4544,11 +4400,11 @@ object PipelineQueries {
         |         round(0.15e0 / nn.n + 0.85e0 * sum(p.pr / p.deg), 10) AS pr
         |       FROM e JOIN i2 p ON p.id = e.src JOIN deg d ON d.id = e.dst
         |       CROSS JOIN nn GROUP BY d.id, d.deg, nn.n)
-        |SELECT id AS node_id, pr AS pagerank FROM i3 ORDER BY node_id""".stripMargin,
+        |SELECT id AS node_id, pr AS pagerank FROM i3 ORDER BY node_id""".stripMargin)),
     // three unrolled synchronous label-propagation iterations; the
     // majority vote with lowest-label ties is min([-cnt, label])
     // lexicographic — all-integer, so the hash is exact by construction
-    "graph_communities" ->
+    Q("graph_communities", graphCommunities, Oracle(
       """WITH e0 AS (SELECT DISTINCT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
         |            FROM lineitem),
         |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
@@ -4565,7 +4421,7 @@ object PipelineQueries {
         |       FROM e JOIN l2 l ON l.id = e.src GROUP BY e.dst, l.label),
         |l3 AS (SELECT id, CAST(min([-cnt, label])[2] AS BIGINT) AS label
         |       FROM c3 GROUP BY id)
-        |SELECT id AS node_id, label AS community FROM l3 ORDER BY node_id""".stripMargin,
+        |SELECT id AS node_id, label AS community FROM l3 ORDER BY node_id""".stripMargin)),
     // within-flags the oracle ASSERTS are deterministic guarantees
     // (HLL++ 5σ, GK rank bound, DS-HLL/KLL spec contracts, theta exact
     // below 4096 retained) — any estimator leaving one flips a flag and
@@ -4574,7 +4430,7 @@ object PipelineQueries {
     // the sketch is md5-defined, the oracle rebuilds every cell and
     // counts n_within itself — corpus drift moves both engines' flags
     // together instead of breaking the gate (round-9 advice).
-    "sketch_error_report" ->
+    Q("sketch_error_report", sketchErrorReport, Oracle(
       """WITH rf AS (SELECT CAST(count(DISTINCT l_returnflag) AS BIGINT) AS g
         |            FROM lineitem),
         |et AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS g
@@ -4613,10 +4469,10 @@ object PipelineQueries {
         |  UNION ALL SELECT 'kll_quantiles', g + 1, g + 1, true FROM et
         |  UNION ALL SELECT 'theta_exact_regime', g * (g - 1) // 2,
         |         g * (g - 1) // 2, true FROM et)
-        |ORDER BY leg""".stripMargin,
+        |ORDER BY leg""".stripMargin)),
     // explicit sum-of-squares variance on both engines; float -> double
     // widening is exact, so min/max are hash-equal unrounded
-    "emb_dim_stats" ->
+    Q("emb_dim_stats", embDimStats, Oracle(
       """WITH x AS (
         |  SELECT unnest(range(1, len(embedding) + 1)) AS i, embedding AS e
         |  FROM embeddings),
@@ -4626,8 +4482,8 @@ object PipelineQueries {
         |  round((sum(x * x) - sum(x) * sum(x) / count(*)) / (count(*) - 1), 4)
         |    AS variance,
         |  min(x) AS min_x, max(x) AS max_x
-        |FROM v GROUP BY dim ORDER BY dim""".stripMargin,
-    "sketch_overlap" ->
+        |FROM v GROUP BY dim ORDER BY dim""".stripMargin)),
+    Q("sketch_overlap", sketchOverlap, Oracle(
       """WITH s AS (SELECT DISTINCT event_type, user_id FROM events),
         |c AS (SELECT event_type, count(*) AS n FROM s GROUP BY 1),
         |i AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -4639,8 +4495,8 @@ object PipelineQueries {
         |  ca.n - COALESCE(i.n_common, 0) AS n_only_a
         |FROM c ca JOIN c cb ON ca.event_type < cb.event_type
         |LEFT JOIN i ON i.type_a = ca.event_type AND i.type_b = cb.event_type
-        |ORDER BY type_a, type_b""".stripMargin,
-    "sketch_heavy_hitters" ->
+        |ORDER BY type_a, type_b""".stripMargin)),
+    Q("sketch_heavy_hitters", sketchHeavyHitters, Oracle(
       """WITH t AS (
         |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')
         |    AS toks
@@ -4649,8 +4505,8 @@ object PipelineQueries {
         |      FROM (SELECT unnest(toks) AS g FROM t) GROUP BY g),
         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c)
         |SELECT token, n AS freq FROM c, tot
-        |WHERE n >= 0.02e0 * total ORDER BY token""".stripMargin,
-    "q_dq_checks" ->
+        |WHERE n >= 0.02e0 * total ORDER BY token""".stripMargin)),
+    Q("q_dq_checks", qDqChecks, Oracle(
       """SELECT * FROM (
         |  SELECT 'orders_date_complete' AS check_name, count(*) AS n_checked,
         |    count(CASE WHEN (o_orderdate IS NOT NULL) IS NOT TRUE THEN 1 END)
@@ -4678,8 +4534,8 @@ object PipelineQueries {
         |    count(CASE WHEN o.o_orderkey IS NULL THEN 1 END)
         |  FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
         |  WHERE l.l_orderkey IS NOT NULL
-        |) ORDER BY check_name""".stripMargin,
-    "q_dq_drift" ->
+        |) ORDER BY check_name""".stripMargin)),
+    Q("q_dq_drift", qDqDrift, Oracle(
       """WITH h AS (
         |  SELECT CAST(ts AS DATE) AS run_id, 'value_bounded' AS check_name,
         |    count(*) AS n_checked,
@@ -4698,23 +4554,23 @@ object PipelineQueries {
         |       THEN 1 ELSE 0 END AS regressed
         |FROM h
         |WINDOW w AS (PARTITION BY check_name ORDER BY run_id)
-        |ORDER BY check_name, run_id""".stripMargin,
-    "q_incr_agg" ->
+        |ORDER BY check_name, run_id""".stripMargin)),
+    Q("q_incr_agg", qIncrAgg, Oracle(
       """WITH c AS (SELECT event_type,
         |  CAST(floor(value * 100) AS BIGINT) AS cents FROM events)
         |SELECT event_type, count(*) AS n,
         |  CAST(sum(cents) AS BIGINT) AS sum_m,
         |  min(cents) AS min_m, max(cents) AS max_m,
         |  CAST(sum(cents) AS DOUBLE) / count(*) AS mean_cents
-        |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_cdc_apply" ->
+        |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Q("q_cdc_apply", qCdcApply, Oracle(
       """SELECT user_id, ts, event_id, value FROM (
         |  SELECT user_id, ts, event_id, value, event_type,
         |    row_number() OVER (PARTITION BY user_id
         |      ORDER BY ts DESC, event_id DESC) AS rn
         |  FROM events) t
-        |WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""".stripMargin,
-    "q_latest_by_key" ->
+        |WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""".stripMargin)),
+    Q("q_latest_by_key", qLatestByKey, Oracle(
       """SELECT user_id, event_id AS last_event_id, ts AS last_ts,
         |  event_type AS last_type, value AS last_value,
         |  CAST(n_events AS BIGINT) AS n_events
@@ -4723,31 +4579,31 @@ object PipelineQueries {
         |          ORDER BY ts DESC, event_id DESC) AS rn,
         |        count(*) OVER (PARTITION BY user_id) AS n_events
         |      FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "sample_split" ->
+        |WHERE rn = 1 ORDER BY user_id""".stripMargin)),
+    Q("sample_split", sampleSplit, Oracle(
       """SELECT CASE WHEN ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80
         |            THEN 'train' ELSE 'val' END AS split,
         |  count(*) AS n, min(doc_id) AS first_doc
-        |FROM documents GROUP BY 1 ORDER BY split""".stripMargin,
+        |FROM documents GROUP BY 1 ORDER BY split""".stripMargin)),
     // same recursive-CTE components as dedup_clusters, then the
     // sample_split md5 bucket keyed by cluster_id instead of doc_id
-    "sample_split_leaksafe" -> (clustersCte +
+    Q("sample_split_leaksafe", sampleSplitLeaksafe, Oracle(clustersCte +
       """
         |SELECT CASE WHEN ('0x' || substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80
         |            THEN 'train' ELSE 'val' END AS split,
         |  count(*) AS n_docs, count(DISTINCT cluster_id) AS n_clusters,
         |  min(doc_id) AS first_doc
-        |FROM cl GROUP BY 1 ORDER BY split""".stripMargin),
-    "sample_stratified" ->
+        |FROM cl GROUP BY 1 ORDER BY split""".stripMargin)),
+    Q("sample_stratified", sampleStratified, Oracle(
       """SELECT lang, count(*) AS n_kept, min(doc_id) AS first_doc
         |FROM documents
         |WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
         |      < (CASE WHEN lang = 'en' THEN 25 ELSE 75 END)
-        |GROUP BY lang ORDER BY lang""".stripMargin,
+        |GROUP BY lang ORDER BY lang""".stripMargin)),
     // rate = sqrt(n_min/n_lang): long->double casts, one IEEE divide,
     // one IEEE sqrt — bit-identical to Spark's; the keep uniform is the
     // exact binary fraction first-8-md5-hex / 2^32 (both sides < 2^53)
-    "sample_temperature" ->
+    Q("sample_temperature", sampleTemperature, Oracle(
       """WITH c AS (SELECT lang, count(*) AS n_group FROM documents GROUP BY lang),
         |m AS (SELECT min(n_group) AS nmin FROM c),
         |r AS (SELECT lang, n_group,
@@ -4757,12 +4613,12 @@ object PipelineQueries {
         |FROM documents d JOIN r ON d.lang = r.lang
         |WHERE CAST(('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT AS DOUBLE)
         |      / 4294967296.0 < r.rate
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
     // UniMax waterfill replay: the capped decision is all-integer
     // (cap*(L-i) <= B-csum over the ascending-cap order), the uncapped
     // allocation is ONE division of exact longs and epochs one more
     // correctly-rounded division — both bit-identical cross-engine
-    "sample_unimax" ->
+    Q("sample_unimax", sampleUnimax, Oracle(
       """WITH t AS (
         |  SELECT lang, CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |    x -> x != '')) AS BIGINT) AS n_tok
@@ -4785,11 +4641,11 @@ object PipelineQueries {
         |  (CASE WHEN f.capped THEN CAST(f.cap AS DOUBLE)
         |        ELSE CAST(f.budget - c.capsum AS DOUBLE) / CAST(f.nl - c.k AS DOUBLE)
         |   END) / CAST(f.n_tokens AS DOUBLE) AS epochs
-        |FROM f, c ORDER BY f.lang""".stripMargin,
+        |FROM f, c ORDER BY f.lang""".stripMargin)),
     // the allocation realized per doc: floor(e) + Bernoulli(e - floor e)
     // under the exact md5 fraction — floor/subtract exact, e correctly
     // rounded on both engines, so every copy count replays bit-exactly
-    "sample_unimax_apply" ->
+    Q("sample_unimax_apply", sampleUnimaxApply, Oracle(
       """WITH t AS (
         |  SELECT doc_id, lang, CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |    x -> x != '')) AS BIGINT) AS n_tok
@@ -4816,11 +4672,11 @@ object PipelineQueries {
         |        / 4294967296.0 < a.epochs - floor(a.epochs)
         |    THEN 1 ELSE 0 END AS BIGINT) AS n_copies
         |FROM t JOIN a ON t.lang = a.lang
-        |ORDER BY t.doc_id""".stripMargin,
+        |ORDER BY t.doc_id""".stripMargin)),
     // floor(v + 0.5e0) on both sides: floor and IEEE *,/,+ are bit-exact
     // cross-engine, round()'s half-tie behavior is not; 0.5e0 because
     // DuckDB parses bare 0.5 as DECIMAL
-    "emb_quantize" ->
+    Q("emb_quantize", embQuantize, Oracle(
       """WITH sc AS (
         |  SELECT vec_id, embedding,
         |    list_aggregate(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))), 'max')
@@ -4835,8 +4691,8 @@ object PipelineQueries {
         |  CASE WHEN scale = 0 THEN 0
         |       ELSE CAST(floor(CAST(x AS DOUBLE) * 127 / scale + 0.5e0) AS BIGINT)
         |  END AS q
-        |FROM ex ORDER BY vec_id, dim_idx""".stripMargin,
-    "sample_shuffle" ->
+        |FROM ex ORDER BY vec_id, dim_idx""".stripMargin)),
+    Q("sample_shuffle", sampleShuffle, Oracle(
       """WITH keyed AS (
         |  SELECT doc_id,
         |    md5(CAST(doc_id AS VARCHAR)) AS mdkey,
@@ -4844,11 +4700,11 @@ object PipelineQueries {
         |  FROM documents)
         |SELECT shard, doc_id,
         |  CAST(row_number() OVER (PARTITION BY shard ORDER BY mdkey, doc_id) AS BIGINT) AS pos
-        |FROM keyed ORDER BY shard, pos""".stripMargin,
+        |FROM keyed ORDER BY shard, pos""".stripMargin)),
     // DuckDB regexp_* is RE2; the patterns avoid every construct the two
     // engines disagree on (lookaround, backrefs). 'g' flag = Spark's
     // always-global regexp_replace.
-    "text_pii_redact" ->
+    Q("text_pii_redact", textPiiRedact, Oracle(
       """WITH all_docs AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -4868,16 +4724,16 @@ object PipelineQueries {
         |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
         |  CAST(len(regexp_extract_all(text,
         |    '\+?\d{1,3}[ -]?\(?\d{2,4}\)?[ -]?\d{3,4}[ -]?\d{4}')) AS BIGINT) AS n_phones
-        |FROM all_docs ORDER BY doc_id""".stripMargin,
-    "dedup_clusters" -> clustersOracle,
+        |FROM all_docs ORDER BY doc_id""".stripMargin)),
+    Q("dedup_clusters", dedupClusters, Oracle(clustersOracle)),
     // the star-contraction variant must produce IDENTICAL components
-    "dedup_clusters_star" -> clustersOracle,
+    Q("dedup_clusters_star", dedupClustersStar, Oracle(clustersOracle)),
     // incremental merge == full recompute (canonical min-id labels), so
     // the from-scratch recursive-CTE oracle is the exactness check
-    "dedup_clusters_incremental" -> clustersOracle,
+    Q("dedup_clusters_incremental", dedupClustersIncremental, Oracle(clustersOracle)),
     // rule thresholds compare the text_stats oracle's ROUNDED ratios
-    "text_quality_rules" ->
-      ("""WITH t AS (
+    Q("text_quality_rules", textQualityRules, Oracle(
+      """WITH t AS (
         |  SELECT doc_id, text,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
         |  FROM documents),
@@ -4897,13 +4753,13 @@ object PipelineQueries {
         |  (n_tokens BETWEEN $RuleMinTokens AND $RuleMaxTokens)
         |    AND (mean_tok_len BETWEEN $RuleMinTokLen AND $RuleMaxTokLen)
         |    AND punct_ratio <= $RuleMaxPunct AND stop_ratio >= $RuleMinStop AS pass_all
-        |FROM s ORDER BY doc_id""".stripMargin),
+        |FROM s ORDER BY doc_id""".stripMargin)),
     // concat-then-chunk assignment is all-integer: cumsum per md5 shard
     // in id order, pack = (cum - own) // budget
     // global (tokens desc, doc_id) rank dealt round-robin; the engine's
     // two-level bucketed rank equals this single global window exactly
     // (bucketing is by a monotone function of the sort key)
-    "pack_shards" ->
+    Q("pack_shards", packShards, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -4911,10 +4767,10 @@ object PipelineQueries {
         |n AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS tokens FROM t),
         |r AS (SELECT *, row_number() OVER (ORDER BY tokens DESC, doc_id) AS rnk FROM n)
         |SELECT doc_id, tokens, CAST((rnk - 1) % 8 AS BIGINT) AS shard
-        |FROM r ORDER BY doc_id""".stripMargin,
+        |FROM r ORDER BY doc_id""".stripMargin)),
     // same monotone-bucketing identity as pack_shards: the engine's
     // two-level rank equals this one global window; rollup all-integer
-    "pack_length_batches" ->
+    Q("pack_length_batches", packLengthBatches, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -4925,8 +4781,8 @@ object PipelineQueries {
         |  count(*) AS n_docs, max(tokens) AS max_tok,
         |  CAST(sum(tokens) AS BIGINT) AS sum_tok,
         |  CAST(count(*) * max(tokens) - sum(tokens) AS BIGINT) AS pad_waste
-        |FROM r GROUP BY batch_id ORDER BY batch_id""".stripMargin,
-    "pack_sequences" ->
+        |FROM r GROUP BY batch_id ORDER BY batch_id""".stripMargin)),
+    Q("pack_sequences", packSequences, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -4938,11 +4794,11 @@ object PipelineQueries {
         |    ROWS UNBOUNDED PRECEDING) AS cum FROM t)
         |SELECT shard, CAST((cum - n_tok) // 4096 AS BIGINT) AS pack_id,
         |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS tok_sum, min(doc_id) AS first_doc
-        |FROM c GROUP BY shard, pack_id ORDER BY shard, pack_id""".stripMargin,
+        |FROM c GROUP BY shard, pack_id ORDER BY shard, pack_id""".stripMargin)),
     // conversation chunking is all-integer (total turn order, integer
     // division); the fingerprint hashes the same '|'-joined type
     // sequence both engines build in turn order
-    "pack_turns" ->
+    Q("pack_turns", packTurns, Oracle(
       """WITH t AS (
         |  SELECT user_id, ts, event_id, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -4953,8 +4809,8 @@ object PipelineQueries {
         |  max(epoch_us(ts)) - min(epoch_us(ts)) AS span_us,
         |  md5(string_agg(event_type, '|' ORDER BY turn)) AS types_md5
         |FROM t GROUP BY user_id, CAST(turn // 16 AS BIGINT)
-        |ORDER BY user_id, conv_id""".stripMargin,
-    "text_token_budget" ->
+        |ORDER BY user_id, conv_id""".stripMargin)),
+    Q("text_token_budget", textTokenBudget, Oracle(
       """WITH t AS (
         |  SELECT source, lang,
         |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -4963,10 +4819,10 @@ object PipelineQueries {
         |SELECT coalesce(source, 'ALL') AS source, coalesce(lang, 'ALL') AS lang,
         |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS tok_sum
         |FROM t GROUP BY ROLLUP(source, lang)
-        |ORDER BY source, lang""".stripMargin,
+        |ORDER BY source, lang""".stripMargin)),
     // mix position = rank / weight, one IEEE division of exacts; weight
     // literals in e0 form (bare 4.0 parses as DECIMAL in DuckDB)
-    "sample_mix" ->
+    Q("sample_mix", sampleMix, Oracle(
       """WITH r AS (
         |  SELECT doc_id, source,
         |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
@@ -4977,13 +4833,13 @@ object PipelineQueries {
         |top AS (SELECT * FROM p ORDER BY pos, source, doc_id LIMIT 200)
         |SELECT row_number() OVER (ORDER BY pos, source, doc_id) AS mix_rank,
         |  doc_id, source, pos
-        |FROM top ORDER BY mix_rank""".stripMargin,
+        |FROM top ORDER BY mix_rank""".stripMargin)),
     // full simhash recomputation: md5-half token hashes -> 64 per-bit
     // votes (±1, bit set iff vote > 0, matching SimHashAgg exactly) ->
     // two's-complement fingerprint (bit 63 contributes -2^63) -> all
     // pairs with hamming <= 3 (tiny at oracle scale; the Spark side's
     // 4x16 banding is recall-exact for <= 3, so the sets coincide)
-    "dedup_simhash" ->
+    Q("dedup_simhash", dedupSimhash, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5007,10 +4863,10 @@ object PipelineQueries {
         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
         |FROM fp a, fp b
         |WHERE a.doc_id < b.doc_id AND bit_count(xor(a.simhash, b.simhash)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin)),
     // same fingerprint CTE as dedup_simhash, anti-joined: keep docs with
     // no lower-id doc within hamming 3
-    "dedup_simhash_keep" ->
+    Q("dedup_simhash_keep", dedupSimhashKeep, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5035,13 +4891,13 @@ object PipelineQueries {
         |    AND bit_count(xor(a.simhash, b.simhash)) <= 3)
         |SELECT d.doc_id, d.lang, d.source, d.n_chars
         |FROM documents d ANTI JOIN dup USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin)),
     // all five curation stages in one statement; every sub-expression is
     // the lockstep copy of its stage's own green oracle (quality formula
     // from text_stats, md5 row_number from dedup_exact_docs, shingle
     // pairs from the jaccard oracles, reachability from dedup_clusters,
     // hash threshold from sample_stratified)
-    "pipeline_curate" ->
+    Q("pipeline_curate", pipelineCurate, Oracle(
       s"""WITH RECURSIVE t AS (
          |  SELECT doc_id, text,
          |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5088,12 +4944,12 @@ object PipelineQueries {
          |        < (CASE WHEN lang = 'en' THEN 50 ELSE 90 END))
          |SELECT lang, count(*) AS n_docs, min(doc_id) AS first_doc,
          |  CAST(sum(n_chars) AS BIGINT) AS total_chars
-         |FROM samp GROUP BY lang ORDER BY lang""".stripMargin,
+         |FROM samp GROUP BY lang ORDER BY lang""".stripMargin)),
     // curation -> decontamination: the curated-split prefix, its TRAIN
     // half LEFT-joined against the benchmark 3-gram overlap flags (the
     // text_decontaminate CTE chain over the full corpus), rolled up to
     // the per-lang launch-review sheet
-    "pipeline_curate_decontaminated" -> (curatedSplitCtes +
+    Q("pipeline_curate_decontaminated", pipelineCurateDecontaminated, Oracle(curatedSplitCtes +
       """,
         |dtr AS (SELECT spl.doc_id, spl.lang FROM spl
         |        WHERE ('0x' || substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80),
@@ -5116,12 +4972,12 @@ object PipelineQueries {
         |  CAST(sum(CASE WHEN dtr.doc_id % 97 <> 0 AND dfl.doc_id IS NULL THEN dtk.tokens END) AS BIGINT) AS tok_clean,
         |  min(CASE WHEN dtr.doc_id % 97 <> 0 AND dfl.doc_id IS NULL THEN dtr.doc_id END) AS first_clean
         |FROM dtr JOIN dtk USING (doc_id) LEFT JOIN dfl USING (doc_id)
-        |GROUP BY dtr.lang ORDER BY dtr.lang""".stripMargin),
+        |GROUP BY dtr.lang ORDER BY dtr.lang""".stripMargin)),
     // the ingest-twin composition: classifier replay (10 unrolled GD
     // steps) gates the corpus, then the dedup_simhash fingerprint chain
     // runs over the GATED survivors and the first-wins anti join keeps
     // docs with no lower-id gated doc within hamming 3
-    "pipeline_curate_ingest" -> (logRegCtes +
+    Q("pipeline_curate_ingest", pipelineCurateIngest, Oracle(logRegCtes +
       """
         |sc AS (SELECT f.doc_id,
         |    round(1.0 / (1.0 + exp(-round(list_sum(list_transform(range(1, 6),
@@ -5153,12 +5009,12 @@ object PipelineQueries {
         |SELECT g.lang, count(*) AS n_docs, min(g.doc_id) AS first_doc,
         |  CAST(sum(g.n_chars) AS BIGINT) AS total_chars
         |FROM g ANTI JOIN gdup USING (doc_id)
-        |GROUP BY g.lang ORDER BY g.lang""".stripMargin),
+        |GROUP BY g.lang ORDER BY g.lang""".stripMargin)),
     // classifier replay gates BOTH sides; base chain = exact first-wins
     // then near first-wins (the dedup_near_keep shape) over base docs;
     // increment admission = no exact AND no near twin in the kept base
     // (increment-internal dups kept — the dedup_incremental convention)
-    "pipeline_curate_incremental" -> (incrementalCtes +
+    Q("pipeline_curate_incremental", pipelineCurateIncremental, Oracle(incrementalCtes +
       s"""
          |SELECT d.lang,
          |  CAST(count(*) AS BIGINT) AS n_new,
@@ -5171,11 +5027,11 @@ object PipelineQueries {
          |LEFT JOIN gid g2 ON g2.doc_id = d.doc_id
          |LEFT JOIN adm a2 ON a2.doc_id = d.doc_id
          |WHERE d.doc_id % 10 = 0
-         |GROUP BY d.lang ORDER BY d.lang""".stripMargin),
+         |GROUP BY d.lang ORDER BY d.lang""".stripMargin)),
     // reason attribution over the GATED increment: the incremental
     // chain's exact (iex) and near (inear) loser CTEs left-joined back,
     // rolled up per language
-    "pipeline_admission_reasons" -> (incrementalCtes +
+    Q("pipeline_admission_reasons", pipelineAdmissionReasons, Oracle(incrementalCtes +
       s"""
          |SELECT gi.lang,
          |  CAST(count(*) AS BIGINT) AS n_gated,
@@ -5192,11 +5048,11 @@ object PipelineQueries {
          |FROM gi
          |LEFT JOIN iex ex ON ex.doc_id = gi.doc_id
          |LEFT JOIN inear nr ON nr.doc_id = gi.doc_id
-         |GROUP BY gi.lang ORDER BY gi.lang""".stripMargin),
+         |GROUP BY gi.lang ORDER BY gi.lang""".stripMargin)),
     // the incremental chain's kept base (kb) and admitted increment (adm)
     // feed TWO prefix-renamed waterfills: epochs over base vs
     // base+admitted, one IEEE subtract apart
-    "pipeline_incremental_manifest" -> (incrementalCtes +
+    Q("pipeline_incremental_manifest", pipelineIncrementalManifest, Oracle(incrementalCtes +
       s""",
          |umtk AS (SELECT kb.doc_id, d.lang, CAST(len(t.toks) AS BIGINT) AS tokens
          |  FROM kb JOIN documents d USING (doc_id) JOIN t USING (doc_id))""".stripMargin +
@@ -5213,10 +5069,10 @@ object PipelineQueries {
          |  ua.epochs AS epochs_before, va.epochs AS epochs_after,
          |  va.epochs - ua.epochs AS epochs_delta
          |FROM vma va LEFT JOIN uma ua ON va.lang = ua.lang
-         |ORDER BY va.lang""".stripMargin),
+         |ORDER BY va.lang""".stripMargin)),
     // the logRegCtes `s` stats CTE carries exactly the four rule inputs,
     // so one statement replays both gates into the 2x2 confusion cells
-    "text_gate_agreement" -> (logRegCtes +
+    Q("text_gate_agreement", textGateAgreement, Oracle(logRegCtes +
       s"""
         |sc AS (SELECT f.doc_id,
         |    round(1.0 / (1.0 + exp(-round(list_sum(list_transform(range(1, 6),
@@ -5234,11 +5090,11 @@ object PipelineQueries {
         |  CAST(sum(CAST(score AS DECIMAL(30,15))) AS DOUBLE) / count(*) AS mean_score,
         |  min(doc_id) AS first_doc
         |FROM cells GROUP BY rules_pass, model_pass
-        |ORDER BY rules_pass, model_pass""".stripMargin),
+        |ORDER BY rules_pass, model_pass""".stripMargin)),
     // curated-split prefix + fixed score bands over the gate-passing
     // range (least(floor((score-0.5)*10),3)); per-phase DECIMAL-exact
     // mean + md5-order head doc via min_by
-    "pipeline_curate_curriculum" -> (curatedSplitCtes +
+    Q("pipeline_curate_curriculum", pipelineCurateCurriculum, Oracle(curatedSplitCtes +
       """,
         |ctr AS (SELECT doc_id FROM spl
         |  WHERE ('0x' || substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80),
@@ -5253,16 +5109,16 @@ object PipelineQueries {
         |  CAST(sum(tokens) AS BIGINT) AS tok_sum,
         |  CAST(sum(CAST(score AS DECIMAL(30,15))) AS DOUBLE) / count(*) AS mean_score,
         |  min_by(doc_id, mk) AS head_doc
-        |FROM csc GROUP BY phase ORDER BY phase""".stripMargin),
-    "pipeline_curate_learned" -> pipelineCurateLearnedSql,
-    "pipeline_curate_packed" -> pipelineCuratePackedSql,
-    "pipeline_curate_rebalanced" -> pipelineCurateRebalancedSql,
-    "pipeline_curate_unimax" -> pipelineCurateUnimaxSql,
-    "pipeline_train_manifest" -> pipelineTrainManifestSql,
-    "pipeline_train_manifest_clean" -> pipelineTrainManifestCleanSql,
+        |FROM csc GROUP BY phase ORDER BY phase""".stripMargin)),
+    Q("pipeline_curate_learned", pipelineCurateLearned, Oracle(pipelineCurateLearnedSql)),
+    Q("pipeline_curate_packed", pipelineCuratePacked, Oracle(pipelineCuratePackedSql)),
+    Q("pipeline_curate_rebalanced", pipelineCurateRebalanced, Oracle(pipelineCurateRebalancedSql)),
+    Q("pipeline_curate_unimax", pipelineCurateUnimax, Oracle(pipelineCurateUnimaxSql)),
+    Q("pipeline_train_manifest", pipelineTrainManifest, Oracle(pipelineTrainManifestSql)),
+    Q("pipeline_train_manifest_clean", pipelineTrainManifestClean, Oracle(pipelineTrainManifestCleanSql)),
     // the curated train split dealt by the sample_shuffle md5-rank CTEs;
     // the head_doc column pins the within-shard rank, not just buckets
-    "pipeline_curate_shuffled" -> (curatedSplitCtes +
+    Q("pipeline_curate_shuffled", pipelineCurateShuffled, Oracle(curatedSplitCtes +
       """,
         |shtr AS (SELECT doc_id FROM spl
         |         WHERE ('0x' || substring(md5(CAST(cluster_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80),
@@ -5275,11 +5131,11 @@ object PipelineQueries {
         |  FROM shk)
         |SELECT shard, count(*) AS n_docs, min(doc_id) AS first_doc,
         |  min(CASE WHEN pos = 1 THEN doc_id END) AS head_doc
-        |FROM shp GROUP BY shard ORDER BY shard""".stripMargin),
+        |FROM shp GROUP BY shard ORDER BY shard""".stripMargin)),
     // both legs re-rank the same top-4k brute candidate list (the
     // mine_hard_negatives CTEs), rank-aligned inner join pairs the i-th
     // best positive with the i-th hardest negative
-    "mine_triplets" ->
+    Q("mine_triplets", mineTriplets, Oracle(
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |q AS (SELECT * FROM e WHERE vec_id < 10),
          |scored AS (
@@ -5303,12 +5159,12 @@ object PipelineQueries {
          |  n.neighbor_id AS negative_id, n.cosine AS neg_cos
          |FROM pos p JOIN neg n ON p.query_id = n.query_id AND p.rnk = n.rnk
          |WHERE p.rnk <= $AnnK
-         |ORDER BY p.query_id, rank""".stripMargin,
+         |ORDER BY p.query_id, rank""".stripMargin)),
     // classifier replay (w10) scores every doc; full-corpus recursive-CTE
     // components (the dedup_clusters labels); per-cluster argmax/argmin
     // via the same two deterministic windows the engine runs
-    "mine_preference_pairs" ->
-      (scoredClustersCtes +
+    Q("mine_preference_pairs", minePreferencePairs, Oracle(
+      scoredClustersCtes +
         s""",
            |ag AS (SELECT cluster_id,
            |    max(doc_id) FILTER (WHERE rhi = 1) AS chosen,
@@ -5320,19 +5176,19 @@ object PipelineQueries {
            |SELECT cluster_id, chosen, chosen_score, rejected, rejected_score,
            |  n_variants, round(chosen_score - rejected_score, 6) AS margin
            |FROM ag WHERE round(chosen_score - rejected_score, 6) > 0
-           |ORDER BY cluster_id""".stripMargin),
+           |ORDER BY cluster_id""".stripMargin)),
     // keep the classifier-best member of every component (rhi = 1)
-    "dedup_keep_best" ->
-      (scoredClustersCtes +
+    Q("dedup_keep_best", dedupKeepBest, Oracle(
+      scoredClustersCtes +
         """
           |SELECT d.doc_id, d.lang, d.source, d.n_chars
           |FROM documents d JOIN (SELECT doc_id FROM rk WHERE rhi = 1) k
           |  USING (doc_id)
-          |ORDER BY d.doc_id""".stripMargin),
+          |ORDER BY d.doc_id""".stripMargin)),
     // first-wins (rid = 1) vs best-wins (rhi = 1) per multi-doc family,
     // rolled into the one-row policy sheet
-    "dedup_keep_policy_audit" ->
-      (scoredClustersCtes +
+    Q("dedup_keep_policy_audit", dedupKeepPolicyAudit, Oracle(
+      scoredClustersCtes +
         """,
           |pag AS (SELECT cluster_id,
           |    max(doc_id) FILTER (WHERE rhi = 1) AS best_doc,
@@ -5347,10 +5203,10 @@ object PipelineQueries {
           |    count(*), 6) AS frac_first_best,
           |  CAST(sum(CAST(best_score - first_score AS DECIMAL(30,15))) AS DOUBLE)
           |    / count(*) AS mean_uplift
-          |FROM pag""".stripMargin),
+          |FROM pag""".stripMargin)),
     // centroids are the emb_centroids relation (4 dp absorbs summation
     // order); the distance fold is the index-order dot contract
-    "emb_centroid_dist" ->
+    Q("emb_centroid_dist", embCentroidDist, Oracle(
       """WITH d AS (SELECT vec_id % 8 AS grp, embedding AS e FROM embeddings),
         |x AS (SELECT grp, unnest(range(1, len(e) + 1)) AS i, e FROM d),
         |c AS (SELECT grp, i, round(avg(CAST(e[i] AS DOUBLE)), 4) AS centroid
@@ -5362,12 +5218,12 @@ object PipelineQueries {
         |  FROM embeddings e2 JOIN ca ON e2.vec_id % 8 = ca.grp)
         |SELECT vec_id, grp,
         |  round(sqrt(list_dot_product(diff, diff)), 6) AS dist
-        |FROM df ORDER BY vec_id""".stripMargin,
+        |FROM df ORDER BY vec_id""".stripMargin)),
     // classifier replay (the calibration w10 chain) + multiplicative
     // weights unrolled: loss and every weight round to 6 dp (the LogReg
     // exp discipline), the normalizer is an exact DECIMAL sum of 6 dp
     // values
-    "sample_doremi" -> (logRegCtes +
+    Q("sample_doremi", sampleDoremi, Oracle(logRegCtes +
       """
         |sc AS (SELECT f.doc_id,
         |    round(1.0 / (1.0 + exp(-round(list_sum(list_transform(range(1, 6),
@@ -5383,10 +5239,10 @@ object PipelineQueries {
         |tot AS (SELECT CAST(sum(CAST(weight AS DECIMAL(30,15))) AS DOUBLE) AS tw FROM mw)
         |SELECT mw.source, mw.n_docs, mw.loss, mw.weight,
         |  round(mw.weight / tot.tw, 6) AS rate
-        |FROM mw, tot ORDER BY mw.source""".stripMargin),
+        |FROM mw, tot ORDER BY mw.source""".stripMargin)),
     // the trained classifier's reliability diagram: same w10 scoring
     // chain, decile bins, DECIMAL-exact mean score per bin
-    "text_quality_calibration" -> (logRegCtes +
+    Q("text_quality_calibration", textQualityCalibration, Oracle(logRegCtes +
       """
         |sc AS (SELECT f.doc_id,
         |    round(1.0 / (1.0 + exp(-round(list_sum(list_transform(range(1, 6),
@@ -5399,10 +5255,10 @@ object PipelineQueries {
         |  CAST(sum(CAST(score AS DECIMAL(30,15))) AS DOUBLE) / count(*) AS mean_score,
         |  CAST(count(*) FILTER (WHERE label = 1) AS BIGINT) AS n_pos,
         |  CAST(count(*) FILTER (WHERE label = 1) AS DOUBLE) / count(*) AS frac_pos
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin),
+        |FROM b GROUP BY bin ORDER BY bin""".stripMargin)),
     // distinct-n diversity: all-integer gram counts, two exact-long
     // IEEE divisions — bit-identical cross-engine
-    "text_diversity" ->
+    Q("text_diversity", textDiversity, Oracle(
       """WITH t AS (
         |  SELECT source,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5420,10 +5276,10 @@ object PipelineQueries {
         |  CAST(d_uni AS DOUBLE) / CAST(n_uni AS DOUBLE) AS dist1,
         |  CASE WHEN coalesce(n_bi, 0) = 0 THEN NULL
         |       ELSE CAST(d_bi AS DOUBLE) / CAST(n_bi AS DOUBLE) END AS dist2
-        |FROM us LEFT JOIN bs USING (source) ORDER BY source""".stripMargin,
+        |FROM us LEFT JOIN bs USING (source) ORDER BY source""".stripMargin)),
     // tf × N / df: exact-integer numerator, one IEEE division — log-free
     // so the doubles are bit-identical cross-engine (see termSalience)
-    "text_salient_terms" ->
+    Q("text_salient_terms", textSalientTerms, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5439,8 +5295,8 @@ object PipelineQueries {
         |      ORDER BY CAST(tf.tf * n.n AS DOUBLE) / dfreq.df DESC, tf.term) AS rk
         |  FROM tf JOIN dfreq USING (term) CROSS JOIN n)
         |SELECT doc_id, term, tf, df, score FROM sc
-        |WHERE rk <= 3 ORDER BY doc_id, term""".stripMargin,
-    "q_asof_join" ->
+        |WHERE rk <= 3 ORDER BY doc_id, term""".stripMargin)),
+    Q("q_asof_join", qAsofJoin, Oracle(
       """WITH e AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
         |c AS (SELECT user_id, ts AS click_ts, event_id AS click_id, value AS click_value
         |      FROM events WHERE event_type = 'click')
@@ -5449,24 +5305,24 @@ object PipelineQueries {
         |  c.click_value AS asof_click_value
         |FROM e ASOF LEFT JOIN c
         |  ON e.user_id = c.user_id AND e.ts >= c.click_ts
-        |ORDER BY event_id""".stripMargin,
-    "q_range_join" ->
+        |ORDER BY event_id""".stripMargin)),
+    Q("q_range_join", qRangeJoin, Oracle(
       """SELECT e.event_id AS error_id, p.event_id AS purchase_id
         |FROM events e JOIN events p
         |  ON e.event_type = 'error' AND p.event_type = 'purchase'
         | AND abs(epoch_us(e.ts) - epoch_us(p.ts)) <= 60000000
-        |ORDER BY error_id, purchase_id""".stripMargin,
-    "dedup_exact_docs" ->
+        |ORDER BY error_id, purchase_id""".stripMargin)),
+    Q("dedup_exact_docs", dedupExactDocs, Oracle(
       """SELECT doc_id, lang, source, n_chars FROM (
         |  SELECT doc_id, lang, source, n_chars,
         |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
         |  FROM documents) t
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "dedup_ngram_jaccard" -> jaccardPairsSql,
-    "text_knn_jaccard" -> knnJaccardSql,
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+    Q("dedup_ngram_jaccard", dedupNgramJaccard, Oracle(jaccardPairsSql)),
+    Q("text_knn_jaccard", textKnnJaccard, Oracle(knnJaccardSql)),
     // same unrounded-ratio-then-round sequence as the Spark side; shares
     // of integer counts sit nowhere near 6-dp rounding ties
-    "text_lang_drift" ->
+    Q("text_lang_drift", textLangDrift, Oracle(
       """WITH c AS (
         |  SELECT lang,
         |    CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -5479,8 +5335,8 @@ object PipelineQueries {
         |  round(CAST(n_a AS DOUBLE) / ta, 6) AS share_a,
         |  round(CAST(n_b AS DOUBLE) / tb, 6) AS share_b,
         |  round(abs(CAST(n_a AS DOUBLE) / ta - CAST(n_b AS DOUBLE) / tb), 6) AS gap
-        |FROM t ORDER BY lang""".stripMargin,
-    "dedup_minhash" -> jaccardPairsSql,
+        |FROM t ORDER BY lang""".stripMargin)),
+    Q("dedup_minhash", dedupMinhash, Oracle(jaccardPairsSql)),
     // batch = doc_id % 10 == 0; a batch doc survives unless an exact or
     // near (Jaccard >= tau) twin exists on the CORPUS side only —
     // batch-internal dups are deliberately kept (increment semantics).
@@ -5488,7 +5344,7 @@ object PipelineQueries {
     // so the inverted-index candidate set is complete) — the same
     // structure as the engine, and feasible at any sf, where the naive
     // correlated NOT EXISTS (batch x corpus list-intersects) is not
-    "dedup_incremental" ->
+    Q("dedup_incremental", dedupIncremental, Oracle(
       s"""$shingleCte,
          |cand AS (
          |  SELECT DISTINCT ca.doc_id AS aid, cb.doc_id AS bid
@@ -5509,27 +5365,27 @@ object PipelineQueries {
          |WHERE d.doc_id % 10 = 0
          |  AND d.doc_id NOT IN (SELECT doc_id FROM losers_near)
          |  AND d.doc_id NOT IN (SELECT doc_id FROM losers_exact)
-         |ORDER BY d.doc_id""".stripMargin,
-    "text_bpe_train" ->
-      graft.operators.Bpe.trainSql("documents", "text", BpeMerges),
-    "text_bpe_encode" ->
-      graft.operators.Bpe.encodeSql("documents", "doc_id", "text", BpeMerges),
-    "text_bpe_vocab" ->
-      graft.operators.Bpe.vocabSql("documents", "text", BpeMerges),
-    "text_bpe_fertility" ->
-      graft.operators.Bpe.fertilitySql("documents", "lang", "text", BpeMerges),
+         |ORDER BY d.doc_id""".stripMargin)),
+    Q("text_bpe_train", textBpeTrain, Oracle(
+      graft.operators.Bpe.trainSql("documents", "text", BpeMerges))),
+    Q("text_bpe_encode", textBpeEncode, Oracle(
+      graft.operators.Bpe.encodeSql("documents", "doc_id", "text", BpeMerges))),
+    Q("text_bpe_vocab", textBpeVocab, Oracle(
+      graft.operators.Bpe.vocabSql("documents", "text", BpeMerges))),
+    Q("text_bpe_fertility", textBpeFertility, Oracle(
+      graft.operators.Bpe.fertilitySql("documents", "lang", "text", BpeMerges))),
     // ring pairing over the recursive-CTE components: lead() in doc_id
     // order within each cluster — |C|-1 pairs per component, same rows
     // the engine's star-contraction clusters produce
-    "mine_positive_pairs" -> (clustersCte +
+    Q("mine_positive_pairs", minePositivePairs, Oracle(clustersCte +
       """,
         |m AS (SELECT cluster_id, doc_id,
         |        lead(doc_id) OVER (PARTITION BY cluster_id ORDER BY doc_id)
         |          AS positive
         |      FROM cl)
         |SELECT cluster_id, doc_id AS anchor, positive
-        |FROM m WHERE positive IS NOT NULL ORDER BY anchor""".stripMargin),
-    "text_vocab" ->
+        |FROM m WHERE positive IS NOT NULL ORDER BY anchor""".stripMargin)),
+    Q("text_vocab", textVocab, Oracle(
       """WITH t AS (
         |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')
         |    AS toks
@@ -5541,8 +5397,8 @@ object PipelineQueries {
         |        CAST(sum(n) OVER (ORDER BY n DESC, token
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_n
         |      FROM c)
-        |SELECT token, n, rank, cum_n FROM r WHERE rank <= 200 ORDER BY rank""".stripMargin,
-    "dedup_near_keep" ->
+        |SELECT token, n, rank, cum_n FROM r WHERE rank <= 200 ORDER BY rank""".stripMargin)),
+    Q("dedup_near_keep", dedupNearKeep, Oracle(
       s"""$shingleCte
          |SELECT d.doc_id, d.lang, d.source, d.n_chars FROM documents d
          |WHERE d.doc_id NOT IN (
@@ -5552,9 +5408,9 @@ object PipelineQueries {
          |        (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) AS jaccard
          |    FROM s a, s b WHERE a.doc_id < b.doc_id) p
          |  WHERE jaccard >= $Tau)
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin)),
     // blocked brute force is exact, so it shares the all-pairs oracle
-    "dedup_embed_cosine" ->
+    Q("dedup_embed_cosine", dedupEmbedCosine, Oracle(
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |p AS (
          |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -5563,8 +5419,8 @@ object PipelineQueries {
          |      AS cosine
          |  FROM e a, e b WHERE a.vec_id < b.vec_id)
          |SELECT id_a, id_b, cosine FROM p WHERE cosine >= $CosTau
-         |ORDER BY id_a, id_b""".stripMargin,
-    "ann_topk_brute" -> annTopkBruteSql,
+         |ORDER BY id_a, id_b""".stripMargin)),
+    Q("ann_topk_brute", annTopkBrute, Oracle(annTopkBruteSql)),
     // the brute oracle's two-stage extension: top-4k candidates first
     // (replaying bruteTopK's heap order), then the near-dup cut and
     // re-rank — stage order matters, a one-stage filter would admit
@@ -5572,7 +5428,7 @@ object PipelineQueries {
     // bipartite all-pairs against the 1%-of-ids eval stand-in, max/count
     // reduced per candidate; cosine rounded 6 dp before BOTH the compare
     // and the max so the flag cannot flip on summation order
-    "emb_decontaminate" ->
+    Q("emb_decontaminate", embDecontaminate, Oracle(
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |ev AS (SELECT * FROM e WHERE vec_id % 97 = 0),
          |c AS (SELECT * FROM e WHERE vec_id % 97 != 0),
@@ -5584,8 +5440,8 @@ object PipelineQueries {
          |SELECT vec_id, max(cs) AS max_cosine,
          |  CAST(sum(CASE WHEN cs >= ${CosTau}e0 THEN 1 ELSE 0 END) AS BIGINT) AS n_near_eval,
          |  CAST(CASE WHEN max(cs) >= ${CosTau}e0 THEN 1 ELSE 0 END AS BIGINT) AS flagged
-         |FROM p GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-    "mine_hard_negatives" ->
+         |FROM p GROUP BY vec_id ORDER BY vec_id""".stripMargin)),
+    Q("mine_hard_negatives", mineHardNegatives, Oracle(
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |q AS (SELECT * FROM e WHERE vec_id < 10),
          |scored AS (
@@ -5603,18 +5459,20 @@ object PipelineQueries {
          |        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
          |      FROM hn)
          |SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, cosine
-         |FROM r2 WHERE rnk <= $AnnK ORDER BY query_id, rank""".stripMargin,
-    "ann_topk_lsh" -> annTopkLshSql,
-    "ann_topk_ivf" -> annTopkIvfSql,
-    "ann_topk_pq" -> annTopkPqSql,
-    "ann_topk_pq_refined" -> annTopkPqRefinedSql,
-    "ann_topk_ivfpq" -> annTopkIvfPqSql,
-    // (the eigen-fixture entries — ann_topk_pca / ann_topk_opq /
-    // ann_topk_opq_served / ann_recall_report — are added dynamically
-    // in [[oracles]]: their SQL embeds the fixture path resolved at
-    // dump time; the served query shares the one-shot leg's oracle
-    // because fit+serve == one-shot is spec-pinned)
-    "text_stats" ->
+         |FROM r2 WHERE rnk <= $AnnK ORDER BY query_id, rank""".stripMargin)),
+    Q("ann_topk_lsh", annTopkLsh, Oracle(annTopkLshSql)),
+    Q("ann_topk_ivf", annTopkIvf, Oracle(annTopkIvfSql)),
+    Q("ann_topk_pq", annTopkPq, Oracle(annTopkPqSql)),
+    Q("ann_topk_pq_refined", annTopkPqRefined, Oracle(annTopkPqRefinedSql)),
+    Q("ann_topk_ivfpq", annTopkIvfPq, Oracle(annTopkIvfPqSql)),
+    // the eigen-leg oracles embed a fixture path resolved at dump
+    // time; the served query shares the one-shot leg's oracle
+    // because fit+serve == one-shot is spec-pinned
+    Q("ann_topk_pca", annTopkPca, Oracle(annTopkPcaSql)),
+    Q("ann_topk_opq", annTopkPqOpq, Oracle(annTopkOpqSql)),
+    Q("ann_topk_opq_served", annTopkOpqServed, Oracle(annTopkOpqSql)),
+    Q("ann_recall_report", annRecallReport, Oracle(annRecallReportSql)),
+    Q("text_stats", textStats, Oracle(
       """WITH t AS (
         |  SELECT doc_id, text,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5631,14 +5489,14 @@ object PipelineQueries {
         |SELECT *,
         |  round(least(n_tokens / 100.0, 1.0) * 0.4 + (1.0 - punct_ratio) * 0.3 +
         |        (1.0 - stop_ratio) * 0.3, 6) AS quality
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "text_quality_model" -> textQualityModelSql,
-    "text_training_map" -> textTrainingMapSql,
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    Q("text_quality_model", textQualityModel, Oracle(textQualityModelSql)),
+    Q("text_training_map", textTrainingMap, Oracle(textTrainingMapSql)),
     // DSIR surrogate: target LM = top-50 trigrams of quality-gated docs
     // (the logRegCtes quality formula), source LM = top-50 of the whole
     // corpus; per-doc hits against both, all-integer score and keep flag.
     // Each LM's trigram is unique, so the two LEFT JOINs cannot fan out.
-    "sample_dsir" ->
+    Q("sample_dsir", sampleDsir, Oracle(
       """WITH t AS (
         |  SELECT doc_id, text,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5672,10 +5530,10 @@ object PipelineQueries {
         |SELECT doc_id, trigrams, tgt_hits, src_hits,
         |  tgt_hits - src_hits AS dsir_score,
         |  CAST(CASE WHEN tgt_hits - src_hits > 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM cov ORDER BY doc_id""".stripMargin,
+        |FROM cov ORDER BY doc_id""".stripMargin)),
 
-    "text_quality_serve" -> textQualityServeSql,
-    "text_langid" ->
+    Q("text_quality_serve", textQualityServe, Oracle(textQualityServeSql)),
+    Q("text_langid", textLangid, Oracle(
       """WITH t AS (
         |  SELECT doc_id, lang, text,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5694,8 +5552,8 @@ object PipelineQueries {
         |       WHEN s_de > s_en AND s_de >= s_fr THEN 'de'
         |       WHEN s_fr > s_en THEN 'fr'
         |       ELSE 'en' END AS pred_lang
-        |FROM sc ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
+        |FROM sc ORDER BY doc_id""".stripMargin)),
+    Q("text_fingerprint", textFingerprint, Oracle(
       """SELECT doc_id,
         |  list_reduce(
         |    list_prepend(CAST(0 AS BIGINT),
@@ -5706,8 +5564,8 @@ object PipelineQueries {
         |    list_transform(range(1, greatest(length(text) - 6, 2)),
         |      i -> md5(text[i:i+7])), 'min') AS fp_min8,
         |  md5(text) AS fp_full
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "mm_image_decode" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Q("mm_image_decode", mmImageDecode, Oracle(
       """WITH d AS (SELECT doc_id,
         |  1 + (('0x' || substring(md5(text), 1, 2))::INT % 64) AS w,
         |  1 + (('0x' || substring(md5(text), 3, 2))::INT % 64) AS h
@@ -5715,10 +5573,10 @@ object PipelineQueries {
         |SELECT doc_id AS media_id, CAST(w AS BIGINT) AS width,
         |  CAST(h AS BIGINT) AS height, CAST(3 AS BIGINT) AS channels,
         |  CAST(w * h * 3 AS BIGINT) AS n_pixels, true AS decoded
-        |FROM d ORDER BY media_id""".stripMargin,
+        |FROM d ORDER BY media_id""".stripMargin)),
     // solid-PNG content = (dims, top-left rgb), all md5(text)-derived;
     // the engine's path in between is a real encode -> imageio decode
-    "mm_image_dedup" ->
+    Q("mm_image_dedup", mmImageDedup, Oracle(
       """WITH d AS (SELECT doc_id,
         |  1 + (('0x' || substring(md5(text), 1, 2))::INT % 64) AS w,
         |  1 + (('0x' || substring(md5(text), 3, 2))::INT % 64) AS h,
@@ -5731,7 +5589,7 @@ object PipelineQueries {
         |  CAST(b AS BIGINT) AS b,
         |  CAST(count(*) AS BIGINT) AS n_images, min(doc_id) AS kept_id
         |FROM d GROUP BY w, h, r, g, b
-        |ORDER BY width, height, r, g, b""".stripMargin,
+        |ORDER BY width, height, r, g, b""".stripMargin)),
     // perceptual aHash replay: cell i of the 8x8 luma grid = byte i%16
     // of md5(text || 'g' || i//16); bit i set iff 64*cell > total
     // (integer-exact mean threshold); two's-complement packing (the
@@ -5739,7 +5597,7 @@ object PipelineQueries {
     // hash BY CONSTRUCTION (block means are scale-invariant), so the
     // oracle reuses it at doc_id + 1e8; all-pairs hamming <= 3 (tiny at
     // oracle scale; the engine's 4x16 banding is recall-exact for <= 3)
-    "mm_image_neardup" ->
+    Q("mm_image_neardup", mmImageNeardup, Oracle(
       """WITH c AS (
         |  SELECT doc_id, r.i,
         |    ('0x' || substring(md5(text || 'g' || CAST(r.i // 16 AS VARCHAR)),
@@ -5758,8 +5616,8 @@ object PipelineQueries {
         |  CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
         |FROM fp a, fp b
         |WHERE a.media_id < b.media_id AND bit_count(xor(a.ahash, b.ahash)) <= 3
-        |ORDER BY media_a, media_b""".stripMargin,
-    "chunk_documents" ->
+        |ORDER BY media_a, media_b""".stripMargin)),
+    Q("chunk_documents", chunkDocuments, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5772,8 +5630,8 @@ object PipelineQueries {
         |  CAST(start_tok AS BIGINT) AS start_tok,
         |  CAST(least(32, len(toks) - start_tok + 1) AS BIGINT) AS n_tok,
         |  toks[start_tok] AS chunk_head
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    "text_repetition" ->
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin)),
+    Q("text_repetition", textRepetition, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5792,11 +5650,11 @@ object PipelineQueries {
         |  round(coalesce(mb, 0) * 1.0 / greatest(len(toks) - 1, 1), 6) AS top_bigram_ratio
         |FROM t LEFT JOIN tm ON t.doc_id = tm.doc_id
         |       LEFT JOIN bm ON t.doc_id = bm.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
+        |ORDER BY t.doc_id""".stripMargin)),
     // same 3-gram shingle construction as the dedup oracles; overlap is
     // counted on distinct per-doc shingles, so string-vs-hash join parity
     // holds exactly (collision-free at these set sizes)
-    "text_decontaminate" ->
+    Q("text_decontaminate", textDecontaminate, Oracle(
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
@@ -5812,7 +5670,7 @@ object PipelineQueries {
         |c AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 97 <> 0)
         |SELECT c.doc_id, count(*) AS n_overlap
         |FROM c JOIN b ON c.g = b.g
-        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
+        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin)),
     // two unrolled Lloyd iterations (the graph_pagerank recipe): seeds =
     // the 8 lowest-id vectors (positional cluster labels, id-gap
     // tolerant); distances rounded to 4 dp before the argmin (ties ->
@@ -5823,7 +5681,7 @@ object PipelineQueries {
     // rather than a correlated ORDER BY/LIMIT subquery — the join form
     // is guaranteed O(n*k) under any planner, where the correlated form
     // is at the mercy of subquery decorrelation
-    "emb_kmeans" ->
+    Q("emb_kmeans", embKmeans, Oracle(
       """WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
         |c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,
         |         list_transform(v, x -> CAST(x AS DOUBLE)) AS c
@@ -5866,10 +5724,10 @@ object PipelineQueries {
         |              * (CAST(e.v[i] AS DOUBLE) - c.c[i]))), 4),
         |           CAST(c.cluster AS DOUBLE)])[2] AS BIGINT) AS cluster
         |       FROM e CROSS JOIN c2 c GROUP BY e.vec_id)
-        |SELECT vec_id, cluster FROM a3 ORDER BY vec_id""".stripMargin,
+        |SELECT vec_id, cluster FROM a3 ORDER BY vec_id""".stripMargin)),
     // the emb_kmeans assignment chain verbatim + the cappedPerStratum
     // md5-rank window — topic-balanced selection over discovered clusters
-    "sample_cluster_balanced" ->
+    Q("sample_cluster_balanced", sampleClusterBalanced, Oracle(
       """WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
         |c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster,
         |         list_transform(v, x -> CAST(x AS DOUBLE)) AS c
@@ -5916,16 +5774,16 @@ object PipelineQueries {
         |          PARTITION BY cluster
         |          ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
         |        FROM a3)
-        |SELECT vec_id, cluster FROM sel WHERE rn <= 20 ORDER BY vec_id""".stripMargin,
-    "emb_centroids" ->
+        |SELECT vec_id, cluster FROM sel WHERE rn <= 20 ORDER BY vec_id""".stripMargin)),
+    Q("emb_centroids", embCentroids, Oracle(
       """WITH d AS (SELECT vec_id % 8 AS grp, embedding AS e FROM embeddings),
         |x AS (SELECT grp, unnest(range(1, len(e) + 1)) AS i, e FROM d)
         |SELECT grp, CAST(i - 1 AS BIGINT) AS dim,
         |  round(avg(CAST(e[i] AS DOUBLE)), 4) AS centroid, count(*) AS n
-        |FROM x GROUP BY grp, dim ORDER BY grp, dim""".stripMargin,
+        |FROM x GROUP BY grp, dim ORDER BY grp, dim""".stripMargin)),
     // frame count + per-frame dims are pure md5 functions (renderVideos'
     // contract); byte j of the digest is hex chars (2j+1, 2j+2)
-    "mm_video_decode" ->
+    Q("mm_video_decode", mmVideoDecode, Oracle(
       """WITH d AS (SELECT doc_id, md5(text) AS m FROM documents),
         |f AS (SELECT doc_id, m,
         |  unnest(range(0, 1 + (('0x' || substring(m, 1, 2))::INT % 6))) AS i
@@ -5937,11 +5795,11 @@ object PipelineQueries {
         |  CAST((1 + (('0x' || substring(m, 4*i+5, 2))::INT % 64))
         |     * (1 + (('0x' || substring(m, 4*i+7, 2))::INT % 64)) * 3 AS BIGINT) AS n_pixels,
         |  true AS decoded
-        |FROM f ORDER BY media_id, frame_idx""".stripMargin,
+        |FROM f ORDER BY media_id, frame_idx""".stripMargin)),
     // dims are the resize constants; the probed pixel is the md5-derived
     // solid color (renderImages' contract: rgb = bytes 2..4 of the
     // digest), preserved exactly by bilinear resize of a solid image
-    "mm_image_resize" ->
+    Q("mm_image_resize", mmImageResize, Oracle(
       """WITH d AS (SELECT doc_id, md5(text) AS m FROM documents)
         |SELECT doc_id AS media_id, CAST(17 AS BIGINT) AS width,
         |  CAST(11 AS BIGINT) AS height,
@@ -5949,12 +5807,12 @@ object PipelineQueries {
         |  CAST(('0x' || substring(m, 7, 2))::INT AS BIGINT) AS g,
         |  CAST(('0x' || substring(m, 9, 2))::INT AS BIGINT) AS b,
         |  true AS decoded
-        |FROM d ORDER BY media_id""".stripMargin,
+        |FROM d ORDER BY media_id""".stripMargin)),
     // every 2nd frame of renderVideos' contract: frame count = 1+b0%6,
     // frame i is a (1+b(2i+2)%64) × (1+b(2i+3)%64) solid PNG of color
     // (b(2i+2)<<16)|(b(2i+3)<<8)|b(i); fp packs (w<<48)|(h<<32)|rgb from
     // the DECODED pixels. Byte j of the digest is hex chars (2j+1, 2j+2).
-    "mm_frame_sample" ->
+    Q("mm_frame_sample", mmFrameSample, Oracle(
       """WITH d AS (SELECT doc_id, md5(text) AS m FROM documents),
         |f AS (SELECT doc_id, m,
         |  unnest(range(0, 1 + (('0x' || substring(m, 1, 2))::INT % 6), 2)) AS i
@@ -5966,10 +5824,10 @@ object PipelineQueries {
         |  | (CAST(('0x' || substring(m, 4*i+5, 2))::INT AS BIGINT) << 16)
         |  | (CAST(('0x' || substring(m, 4*i+7, 2))::INT AS BIGINT) << 8)
         |  | CAST(('0x' || substring(m, 2*i+1, 2))::INT AS BIGINT) AS frame_fp
-        |FROM f ORDER BY media_id, frame_idx""".stripMargin,
+        |FROM f ORDER BY media_id, frame_idx""".stripMargin)),
     // decoded features are pure md5 functions (renderWavs' contract); the
     // square wave's RMS is exactly amp/32768, amp odd so no round tie
-    "mm_audio_decode" ->
+    Q("mm_audio_decode", mmAudioDecode, Oracle(
       """WITH d AS (SELECT doc_id, md5(text) AS m FROM documents),
         |a AS (SELECT doc_id,
         |  8000 * (1 + (('0x' || substring(m, 1, 2))::INT % 5)) AS sr,
@@ -5979,12 +5837,15 @@ object PipelineQueries {
         |SELECT doc_id AS media_id, CAST(sr AS BIGINT) AS sample_rate,
         |  CAST(n AS BIGINT) AS n_samples, round(amp / 32768.0, 6) AS rms,
         |  true AS decoded
-        |FROM a ORDER BY media_id""".stripMargin,
-    "mm_binary_stats" ->
+        |FROM a ORDER BY media_id""".stripMargin)),
+    Q("mm_binary_stats", mmBinaryStats, Oracle(
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
         |  md5(text) AS fp,
         |  upper(hex(encode(substring(text, 1, 8)))) AS head_hex
-        |FROM documents ORDER BY doc_id""".stripMargin
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Q("sketch_rollup", sketchRollup, RowsOnly("HLL++/KLL mergeable-sketch binary states are " +
+      "engine-specific; SketchRollupSpec pins merge algebra, error " +
+      "bands hash-enforced via sketch_error_report"))
   )
 }

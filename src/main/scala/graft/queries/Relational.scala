@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * sorts/top-k, scalar & date functions — the standard categories
   * SURVEY.md §2.3 maps out.
   *
-  * Every query has a DuckDB oracle in [[oracles]] with matching column
-  * names and deterministic output:
+  * Every query but the two approximate sketches is registered with a
+  * DuckDB oracle with matching column names and deterministic output:
   *  - double aggregates are `round`ed on BOTH sides so float
   *    summation-order differences between engines cannot flip a hash;
   *  - every ORDER BY ends in a unique key so ties cannot reorder rows;
@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
   * map-side partial aggregation.
   */
 object Relational {
-
-  type Q = (SparkSession, String) => DataFrame
 
   private def ts(s: String): Column = lit(s).cast("timestamp")
 
@@ -854,69 +852,8 @@ object Relational {
     graft.plans.Lineage.report(q3TopkJoin(s, dir))
       .orderBy(col("output_col"), col("source_table"), col("source_col"))
 
-  val queries: Map[String, Q] = Map(
-    "q_lineage_report" -> (qLineageReport _),
-    "q_window_analytics" -> (qWindowAnalytics _),
-    "q_array_fn" -> (qArrayFn _),
-    "q_string_agg" -> (qStringAgg _),
-    "q_histogram" -> (qHistogram _),
-    "q_corr" -> (qCorr _),
-    "q_pivot" -> (qPivot _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_json" -> (qJson _),
-    "q_scalar_subquery" -> (qScalarSubquery _),
-    "q_window_tumbling" -> (qWindowTumbling _),
-    "q_session_window" -> (qSessionWindow _),
-    "q_approx_distinct" -> (qApproxDistinct _),
-    "q_approx_percentile" -> (qApproxPercentile _),
-    "q_table_profile" -> (qTableProfile _),
-    "q1_agg" -> (q1Agg _),
-    "q_skew_agg" -> (qSkewAgg _),
-    "q_skew_join" -> (qSkewJoin _),
-    "q_fuzzy_join" -> (qFuzzyJoin _),
-    "q_window_ntile" -> (qWindowNtile _),
-    "q3_topk_join" -> (q3TopkJoin _),
-    "q5_multi_join" -> (q5MultiJoin _),
-    "q4_semi_join" -> (q4SemiJoin _),
-    "q_bloom_prune" -> (qBloomPrune _),
-    "q_scd2" -> (qScd2 _),
-    "q_topk_per_group" -> (qTopkPerGroup _),
-    "q_mad" -> (qMad _),
-    "q_anti_join" -> (qAntiJoin _),
-    "q_outer_join" -> (qOuterJoin _),
-    "q_window_rank" -> (qWindowRank _),
-    "q_window_running" -> (qWindowRunning _),
-    "q_events_sessions" -> (qEventsSessions _),
-    "q_funnel_steps" -> (qFunnelSteps _),
-    "q_funnel_attrib" -> (qFunnelAttrib _),
-    "q_peak_concurrency" -> (qPeakConcurrency _),
-    "q_gap_islands" -> (qGapIslands _),
-    "q_ts_ewma" -> (qTsEwma _),
-    "q_rollup" -> (qRollup _),
-    "q_cube" -> (qCube _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_distinct_agg" -> (qDistinctAgg _),
-    "q_stats_agg" -> (qStatsAgg _),
-    "q_percentile" -> (qPercentile _),
-    "q_intersect" -> (qIntersect _),
-    "q_except" -> (qExcept _),
-    "q_union" -> (qUnion _),
-    "q_scalar_fn" -> (qScalarFn _),
-    "q_date_fn" -> (qDateFn _),
-    "q_window_range" -> (qWindowRangeFrame _),
-    "q_first_last" -> (qFirstLast _),
-    "q_regex_fn" -> (qRegexFn _),
-    "q_null_fn" -> (qNullFn _),
-    "q_explode" -> (qExplode _),
-    "q_cond_agg" -> (qCondAgg _),
-    "q_map_fn" -> (qMapFn _),
-    "q_math_fn" -> (qMathFn _),
-    "q_window_sliding" -> (qWindowSliding _),
-    "q_exists_subquery" -> (qExistsSubquery _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_lineage_report" ->
+  val registry: Seq[Q] = Seq(
+    Q("q_lineage_report", qLineageReport, Oracle(
       """SELECT * FROM (VALUES
         |  ('o_orderdate', 'orders', 'o_orderdate'),
         |  ('o_orderkey', 'orders', 'o_orderkey'),
@@ -924,15 +861,15 @@ object Relational {
         |  ('revenue', 'lineitem', 'l_discount'),
         |  ('revenue', 'lineitem', 'l_extendedprice')
         |) AS t(output_col, source_table, source_col)
-        |ORDER BY output_col, source_table, source_col""".stripMargin,
-    "q_window_range" ->
+        |ORDER BY output_col, source_table, source_col""".stripMargin)),
+    Q("q_window_range", qWindowRangeFrame, Oracle(
       """SELECT c_custkey, c_mktsegment, c_acctbal,
         |  round(sum(c_acctbal) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal
         |    RANGE BETWEEN 100.0 PRECEDING AND CURRENT ROW), 2) AS band_sum,
         |  CAST(count(*) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal
         |    RANGE BETWEEN 100.0 PRECEDING AND 100.0 FOLLOWING) AS BIGINT) AS band_n
-        |FROM customer ORDER BY c_mktsegment, c_acctbal, c_custkey""".stripMargin,
-    "q_first_last" ->
+        |FROM customer ORDER BY c_mktsegment, c_acctbal, c_custkey""".stripMargin)),
+    Q("q_first_last", qFirstLast, Oracle(
       """SELECT c_custkey, c_mktsegment, c_acctbal,
         |  first_value(c_custkey) OVER w AS poorest,
         |  last_value(c_custkey) OVER w AS richest,
@@ -940,28 +877,28 @@ object Relational {
         |FROM customer
         |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY c_mktsegment, c_acctbal, c_custkey""".stripMargin,
+        |ORDER BY c_mktsegment, c_acctbal, c_custkey""".stripMargin)),
     // 'g' option: DuckDB regexp_replace is first-match-only by default,
     // Spark's is replace-all
-    "q_regex_fn" ->
+    Q("q_regex_fn", qRegexFn, Oracle(
       """SELECT p_partkey,
         |  regexp_extract(p_name, '^(\w+)', 1) AS first_word,
         |  regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled,
         |  regexp_matches(p_name, 'widget$') AS is_widget
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_null_fn" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Q("q_null_fn", qNullFn, Oracle(
       """SELECT c_custkey,
         |  round(coalesce(nullif(c_acctbal, 0.0), -1.0), 2) AS bal_or_sentinel,
         |  round(greatest(c_acctbal, 0.0), 2) AS bal_floor0,
         |  round(least(c_acctbal, 1000.0), 2) AS bal_cap1k,
         |  c_acctbal IS NULL AS bal_missing
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_explode" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
+    Q("q_explode", qExplode, Oracle(
       """SELECT p_partkey, unnest(string_split(p_name, ' ')) AS word
-        |FROM part ORDER BY p_partkey, word""".stripMargin,
+        |FROM part ORDER BY p_partkey, word""".stripMargin)),
     // each event belongs to window/slide = 4 hops; start alignment is
     // epoch µs (events.ts nanos truncate to µs on both sides)
-    "q_window_sliding" ->
+    Q("q_window_sliding", qWindowSliding, Oracle(
       """WITH x AS (
         |  SELECT event_type,
         |    make_timestamp(((epoch_us(ts) // 1800000000) - j.j) * 1800000000)
@@ -969,32 +906,32 @@ object Relational {
         |  FROM events CROSS JOIN (SELECT unnest(range(4)) AS j) j)
         |SELECT window_start, event_type, count(*) AS n
         |FROM x GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-    "q_exists_subquery" ->
+        |ORDER BY window_start, event_type""".stripMargin)),
+    Q("q_exists_subquery", qExistsSubquery, Oracle(
       """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |              WHERE o.o_custkey = c.c_custkey
         |                AND o.o_totalprice > 300000)
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin)),
     // DuckDB map subscript returns a LIST — [1] unwraps to the scalar
-    "q_map_fn" ->
+    Q("q_map_fn", qMapFn, Oracle(
       """SELECT p_partkey,
         |  m['brand'][1] AS brand_val,
         |  CAST(cardinality(m) AS BIGINT) AS m_size,
         |  array_to_string(map_keys(m), ',') AS m_keys
         |FROM (SELECT p_partkey, MAP {'brand': p_brand, 'type': p_type} AS m FROM part)
-        |ORDER BY p_partkey""".stripMargin,
+        |ORDER BY p_partkey""".stripMargin)),
     // sqrt is IEEE correctly rounded and x*x one exact multiply: raw
     // doubles compare bit-for-bit, no rounding required
-    "q_math_fn" ->
+    Q("q_math_fn", qMathFn, Oracle(
       """SELECT s_suppkey,
         |  sqrt(abs(s_acctbal)) AS sqrt_bal,
         |  CAST(floor(s_acctbal) AS BIGINT) AS floor_bal,
         |  CAST(ceil(s_acctbal) AS BIGINT) AS ceil_bal,
         |  CAST(sign(s_acctbal) AS BIGINT) AS sign_bal,
         |  s_acctbal * s_acctbal AS sq_bal
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
-    "q_cond_agg" ->
+        |FROM supplier ORDER BY s_suppkey""".stripMargin)),
+    Q("q_cond_agg", qCondAgg, Oracle(
       """SELECT o_orderpriority,
         |  count(CASE WHEN o_totalprice > 150000.0 THEN 1 END) AS n_big,
         |  round(sum(CASE WHEN o_orderstatus = 'F' THEN o_totalprice ELSE 0.0 END), 2)
@@ -1002,13 +939,13 @@ object Relational {
         |  bool_and(o_totalprice > 0.0) AS all_positive,
         |  bool_or(o_orderstatus = 'P') AS any_pending,
         |  count(*) AS n
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
     // manual type-7 interpolation, NOT quantile_cont, and NO rounding:
     // vk + (vk1 - vk) * f with f = CAST(n-1 AS DOUBLE)*p - floor(...) is
     // the exact IEEE op order the Spark side uses, so the doubles match
     // bit-for-bit. All p literals are written `0.5e0`-style: a bare 0.5
     // parses as DECIMAL in DuckDB and silently changes the arithmetic.
-    "q_percentile" ->
+    Q("q_percentile", qPercentile, Oracle(
       """WITH sp AS (
         |  SELECT l_returnflag AS g, l_extendedprice AS v,
         |    row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) - 1 AS rn,
@@ -1042,8 +979,8 @@ object Relational {
         |  CASE WHEN f90 = 0 THEN lo90 ELSE lo90 + (hi90 - lo90) * f90 END AS p90_price,
         |  CASE WHEN f99 = 0 THEN lo99 ELSE lo99 + (hi99 - lo99) * f99 END AS p99_price,
         |  CASE WHEN fq = 0 THEN loq ELSE loq + (hiq - loq) * fq END AS med_qty
-        |FROM pp JOIN pq ON pp.g = pq.g ORDER BY l_returnflag""".stripMargin,
-    "q_window_analytics" ->
+        |FROM pp JOIN pq ON pp.g = pq.g ORDER BY l_returnflag""".stripMargin)),
+    Q("q_window_analytics", qWindowAnalytics, Oracle(
       """SELECT c_custkey, c_mktsegment, c_acctbal,
         |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
         |  lag(c_custkey, 1) OVER w AS prev_cust,
@@ -1052,62 +989,62 @@ object Relational {
         |  round(cume_dist() OVER w, 6) AS cume
         |FROM customer
         |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
-        |ORDER BY c_mktsegment, c_acctbal, c_custkey""".stripMargin,
-    "q_array_fn" ->
+        |ORDER BY c_mktsegment, c_acctbal, c_custkey""".stripMargin)),
+    Q("q_array_fn", qArrayFn, Oracle(
       """SELECT vec_id,
         |  CAST(len(embedding) AS BIGINT) AS dim,
         |  round(CAST(embedding[1] AS DOUBLE), 6) AS first_val,
         |  round(list_max(CAST(embedding AS DOUBLE[])), 6) AS max_val,
         |  round(list_min(CAST(embedding AS DOUBLE[])), 6) AS min_val,
         |  CAST(len(list_filter(embedding, x -> x > 0)) AS BIGINT) AS n_pos
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q_string_agg" ->
+        |FROM embeddings ORDER BY vec_id""".stripMargin)),
+    Q("q_string_agg", qStringAgg, Oracle(
       """SELECT CAST(n_regionkey AS BIGINT) AS regionkey,
         |  string_agg(n_name, ',' ORDER BY n_name) AS nations,
         |  count(*) AS n
-        |FROM nation GROUP BY 1 ORDER BY regionkey""".stripMargin,
-    "q_histogram" ->
+        |FROM nation GROUP BY 1 ORDER BY regionkey""".stripMargin)),
+    Q("q_histogram", qHistogram, Oracle(
       """SELECT CAST(floor(l_extendedprice / 5000) AS BIGINT) AS bin,
         |  count(*) AS n,
         |  round(min(l_extendedprice), 2) AS bin_min,
         |  round(max(l_extendedprice), 2) AS bin_max
-        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q_corr" ->
+        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin)),
+    Q("q_corr", qCorr, Oracle(
       """SELECT l_returnflag,
         |  round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
         |  round(covar_samp(l_quantity, l_discount), 4) AS cov_qty_disc
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_pivot" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Q("q_pivot", qPivot, Oracle(
       """SELECT user_id,
         |  count(*) FILTER (WHERE event_type = 'click') AS click,
         |  count(*) FILTER (WHERE event_type = 'error') AS error,
         |  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
         |  count(*) FILTER (WHERE event_type = 'signup') AS signup,
         |  count(*) FILTER (WHERE event_type = 'view') AS view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_unpivot" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Q("q_unpivot", qUnpivot, Oracle(
       """SELECT p_partkey, measure, value FROM (
         |  SELECT p_partkey, 'size' AS measure, CAST(p_size AS DOUBLE) AS value FROM part
         |  UNION ALL
         |  SELECT p_partkey, 'retailprice' AS measure, p_retailprice AS value FROM part
-        |) t ORDER BY p_partkey, measure""".stripMargin,
-    "q_json" ->
+        |) t ORDER BY p_partkey, measure""".stripMargin)),
+    Q("q_json", qJson, Oracle(
       """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
         |  count(*) AS n, min(event_id) AS first_event
-        |FROM events GROUP BY 1 ORDER BY k NULLS FIRST""".stripMargin,
-    "q_scalar_subquery" ->
+        |FROM events GROUP BY 1 ORDER BY k NULLS FIRST""".stripMargin)),
+    Q("q_scalar_subquery", qScalarSubquery, Oracle(
       """SELECT p_partkey, p_brand, p_retailprice
         |FROM part p
         |WHERE p_retailprice > (SELECT avg(p2.p_retailprice) + 50
         |                       FROM part p2 WHERE p2.p_brand = p.p_brand)
-        |ORDER BY p_partkey""".stripMargin,
-    "q_window_tumbling" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    Q("q_window_tumbling", qWindowTumbling, Oracle(
       """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
         |  event_type, count(*) AS n, round(sum(value), 2) AS sum_value
         |FROM events
         |GROUP BY 1, 2
-        |ORDER BY window_start, event_type""".stripMargin,
-    "q_session_window" ->
+        |ORDER BY window_start, event_type""".stripMargin)),
+    Q("q_session_window", qSessionWindow, Oracle(
       """WITH g AS (
         |  SELECT user_id, ts, event_id, epoch_us(ts) AS us,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -1125,8 +1062,8 @@ object Relational {
         |SELECT user_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
         |  count(*) AS n_events
         |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    "q1_agg" ->
+        |ORDER BY user_id, session_start""".stripMargin)),
+    Q("q1_agg", q1Agg, Oracle(
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 2) AS sum_qty,
         |  round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -1137,23 +1074,23 @@ object Relational {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_fuzzy_join" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Q("q_fuzzy_join", qFuzzyJoin, Oracle(
       """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
         |  CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
         |FROM customer a, customer b
         |WHERE a.c_custkey < b.c_custkey
         |  AND levenshtein(a.c_name, b.c_name) <= 1
         |  AND len(a.c_name) >= 6 AND len(b.c_name) >= 6
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q_skew_join" ->
+        |ORDER BY id_a, id_b""".stripMargin)),
+    Q("q_skew_join", qSkewJoin, Oracle(
       """SELECT o_orderpriority,
         |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
         |  count(*) AS n
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_table_profile" ->
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Q("q_table_profile", qTableProfile, Oracle(
       """SELECT
         |  CAST(min(l_orderkey) AS BIGINT) AS l_orderkey_min,
         |  CAST(max(l_orderkey) AS BIGINT) AS l_orderkey_max,
@@ -1171,22 +1108,22 @@ object Relational {
         |  CAST(max(l_linenumber) AS BIGINT) AS l_linenumber_max,
         |  CAST(sum(CASE WHEN l_linenumber IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS l_linenumber_nulls,
         |  count(DISTINCT l_linenumber) AS l_linenumber_ndv
-        |FROM lineitem""".stripMargin,
-    "q_window_ntile" ->
+        |FROM lineitem""".stripMargin)),
+    Q("q_window_ntile", qWindowNtile, Oracle(
       """SELECT p_brand, p_partkey,
         |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
         |  round(percent_rank() OVER w, 6) AS pct_rank,
         |  round(cume_dist() OVER w, 6) AS cume
         |FROM part
         |WINDOW w AS (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey)
-        |ORDER BY p_brand, p_partkey""".stripMargin,
-    "q_skew_agg" ->
+        |ORDER BY p_brand, p_partkey""".stripMargin)),
+    Q("q_skew_agg", qSkewAgg, Oracle(
       """SELECT l_returnflag,
         |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_value,
         |  count(*) AS n
         |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q3_topk_join" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Q("q3_topk_join", q3TopkJoin, Oracle(
       """SELECT o_orderkey, o_orderdate, o_orderpriority,
         |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
         |FROM customer
@@ -1197,8 +1134,8 @@ object Relational {
         |  AND l_shipdate > TIMESTAMP '1997-01-01'
         |GROUP BY o_orderkey, o_orderdate, o_orderpriority
         |ORDER BY revenue DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-    "q5_multi_join" ->
+        |LIMIT 10""".stripMargin)),
+    Q("q5_multi_join", q5MultiJoin, Oracle(
       """SELECT n_name,
         |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
         |FROM customer, orders, lineitem, supplier, nation, region
@@ -1209,8 +1146,8 @@ object Relational {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
         |  AND o_orderdate < TIMESTAMP '1997-01-01'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q4_semi_join" ->
+        |ORDER BY revenue DESC, n_name""".stripMargin)),
+    Q("q4_semi_join", q4SemiJoin, Oracle(
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -1218,43 +1155,43 @@ object Relational {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin)),
     // the bloom pre-filter is exact-after-verification, so the oracle is
     // the plain IN-subquery semi join
-    "q_bloom_prune" ->
+    Q("q_bloom_prune", qBloomPrune, Oracle(
       """SELECT l_returnflag, count(*) AS n_items,
         |  round(sum(l_quantity), 2) AS sum_qty
         |FROM lineitem
         |WHERE l_orderkey IN (SELECT o_orderkey FROM orders
         |                     WHERE o_orderpriority = '1-URGENT')
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin)),
     // o_totalprice is a stored value (no arithmetic), so the doubles are
     // bit-identical on both engines; (date, orderkey) tie-break makes
     // lead() deterministic
-    "q_scd2" ->
+    Q("q_scd2", qScd2, Oracle(
       """SELECT o_custkey, o_orderkey AS version_key, o_totalprice,
         |  o_orderdate AS valid_from,
         |  lead(o_orderdate, 1) OVER w AS valid_to,
         |  lead(o_orderdate, 1) OVER w IS NULL AS is_current
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, version_key""".stripMargin,
+        |ORDER BY o_custkey, version_key""".stripMargin)),
     // the oracle is the window formulation the aggregate replaces;
     // o_totalprice is a stored double (no arithmetic) so ranks and
     // values hash identically
-    "q_topk_per_group" ->
+    Q("q_topk_per_group", qTopkPerGroup, Oracle(
       """SELECT o_custkey, CAST(rk AS BIGINT) AS rk, o_orderkey, o_totalprice
         |FROM (SELECT o_custkey, o_orderkey, o_totalprice, row_number() OVER (
         |        PARTITION BY o_custkey
         |        ORDER BY o_totalprice DESC, o_orderkey) AS rk
         |      FROM orders)
         |WHERE rk <= 3
-        |ORDER BY o_custkey, rk""".stripMargin,
+        |ORDER BY o_custkey, rk""".stripMargin)),
     // low-median order statistics at rank ceil(n/2) for both the median
     // and the deviations: actual stored values, no interpolation or
     // rounding anywhere
-    "q_mad" ->
+    Q("q_mad", qMad, Oracle(
       """WITH v AS (SELECT l_returnflag, l_quantity FROM lineitem),
         |m AS (SELECT l_returnflag, l_quantity AS median_qty FROM (
         |    SELECT l_returnflag, l_quantity,
@@ -1270,8 +1207,8 @@ object Relational {
         |      FROM d)
         |SELECT l_returnflag, n, median_qty, dev AS mad_qty
         |FROM r WHERE rn = (n + 1) // 2
-        |ORDER BY l_returnflag""".stripMargin,
-    "q_anti_join" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Q("q_anti_join", qAntiJoin, Oracle(
       """SELECT c_mktsegment, count(*) AS n_customers
         |FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
@@ -1279,23 +1216,23 @@ object Relational {
         |                    AND o_orderdate >= TIMESTAMP '1996-01-01'
         |                    AND o_orderdate < TIMESTAMP '1996-07-01')
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q_outer_join" ->
+        |ORDER BY c_mktsegment""".stripMargin)),
+    Q("q_outer_join", qOuterJoin, Oracle(
       """SELECT p_partkey, coalesce(cnt, 0) AS n_li
         |FROM part
         |LEFT JOIN (SELECT l_partkey, count(*) AS cnt
         |           FROM lineitem GROUP BY l_partkey) li
         |  ON p_partkey = l_partkey
-        |ORDER BY p_partkey""".stripMargin,
-    "q_window_rank" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    Q("q_window_rank", qWindowRank, Oracle(
       """SELECT p_brand, p_partkey, p_retailprice, rnk FROM (
         |  SELECT p_brand, p_partkey, p_retailprice,
         |    CAST(rank() OVER (PARTITION BY p_brand
         |                      ORDER BY p_retailprice DESC, p_partkey) AS BIGINT) AS rnk
         |  FROM part) t
         |WHERE rnk <= 3
-        |ORDER BY p_brand, rnk, p_partkey""".stripMargin,
-    "q_window_running" ->
+        |ORDER BY p_brand, rnk, p_partkey""".stripMargin)),
+    Q("q_window_running", qWindowRunning, Oracle(
       """SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate,
         |  round(sum(l_extendedprice) OVER (
         |    PARTITION BY l_suppkey
@@ -1303,8 +1240,8 @@ object Relational {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_rev
         |FROM lineitem
         |WHERE l_suppkey <= 10
-        |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "q_events_sessions" ->
+        |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin)),
+    Q("q_events_sessions", qEventsSessions, Oracle(
       """WITH g AS (
         |  SELECT user_id, epoch_us(ts) AS us,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -1313,16 +1250,16 @@ object Relational {
         |  CAST(sum(CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
         |                THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
         |  count(*) AS n_events
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_funnel_steps" ->
+        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Q("q_funnel_steps", qFunnelSteps, Oracle(
       graft.operators.Funnel.conversionSql("events",
         "user_id", "ts", "event_id", "event_type",
-        Seq("view", "click", "purchase")),
-    "q_funnel_attrib" ->
+        Seq("view", "click", "purchase")))),
+    Q("q_funnel_attrib", qFunnelAttrib, Oracle(
       graft.operators.Funnel.attributionSql("events",
         "user_id", "ts", "event_id", "event_type",
-        Seq("view", "click"), "purchase"),
-    "q_gap_islands" ->
+        Seq("view", "click"), "purchase"))),
+    Q("q_gap_islands", qGapIslands, Oracle(
       """WITH g AS (
         |  SELECT user_id, event_type, event_id,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1332,8 +1269,8 @@ object Relational {
         |SELECT user_id, event_type, count(*) AS island_len,
         |  min(event_id) AS start_id, max(event_id) AS end_id
         |FROM g GROUP BY user_id, event_type, grp
-        |ORDER BY user_id, start_id""".stripMargin,
-    "q_peak_concurrency" ->
+        |ORDER BY user_id, start_id""".stripMargin)),
+    Q("q_peak_concurrency", qPeakConcurrency, Oracle(
       """WITH pts AS (
         |  SELECT event_type, epoch_us(ts) AS us, 1 AS delta FROM events
         |  UNION ALL
@@ -1349,70 +1286,70 @@ object Relational {
         |  FROM sw)
         |SELECT event_type, max(run) AS peak, min(us) AS peak_at_us
         |FROM pk WHERE run = peak
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_ts_ewma" ->
-      (graft.operators.TimeSeries.ewmaAnomalySql("events",
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Q("q_ts_ewma", qTsEwma, Oracle(
+      graft.operators.TimeSeries.ewmaAnomalySql("events",
         "event_type", "ts", "event_id", "value") +
-        "\nORDER BY event_type, event_id"),
-    "q_rollup" ->
+        "\nORDER BY event_type, event_id")),
+    Q("q_rollup", qRollup, Oracle(
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
         |  coalesce(l_linestatus, 'ALL') AS linestatus,
         |  round(sum(l_extendedprice), 2) AS sum_price,
         |  count(*) AS n
         |FROM lineitem
         |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    "q_cube" ->
+        |ORDER BY returnflag, linestatus""".stripMargin)),
+    Q("q_cube", qCube, Oracle(
       """SELECT coalesce(o_orderstatus, 'ALL') AS orderstatus,
         |  coalesce(o_orderpriority, 'ALL') AS orderpriority,
         |  count(*) AS n,
         |  round(sum(o_totalprice), 2) AS sum_total
         |FROM orders
         |GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY orderstatus, orderpriority""".stripMargin,
-    "q_grouping_sets" ->
+        |ORDER BY orderstatus, orderpriority""".stripMargin)),
+    Q("q_grouping_sets", qGroupingSets, Oracle(
       """SELECT coalesce(o_orderstatus, 'ALL') AS orderstatus,
         |  coalesce(o_orderpriority, 'ALL') AS orderpriority,
         |  count(*) AS n
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY orderstatus, orderpriority""".stripMargin,
-    "q_distinct_agg" ->
+        |ORDER BY orderstatus, orderpriority""".stripMargin)),
+    Q("q_distinct_agg", qDistinctAgg, Oracle(
       """SELECT l_returnflag,
         |  count(DISTINCT l_partkey) AS n_parts,
         |  count(DISTINCT l_suppkey) AS n_supps,
         |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_stats_agg" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Q("q_stats_agg", qStatsAgg, Oracle(
       """SELECT l_returnflag,
         |  round(stddev_samp(l_extendedprice), 2) AS sd_price,
         |  round(var_samp(l_extendedprice), 0) AS var_price,
         |  round(min(l_extendedprice), 2) AS min_price,
         |  round(max(l_extendedprice), 2) AS max_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_intersect" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Q("q_intersect", qIntersect, Oracle(
       """SELECT o_custkey AS custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
         |INTERSECT
         |SELECT o_custkey AS custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-        |ORDER BY custkey""".stripMargin,
-    "q_except" ->
+        |ORDER BY custkey""".stripMargin)),
+    Q("q_except", qExcept, Oracle(
       """SELECT o_custkey AS custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
         |EXCEPT
         |SELECT o_custkey AS custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-        |ORDER BY custkey""".stripMargin,
-    "q_union" ->
+        |ORDER BY custkey""".stripMargin)),
+    Q("q_union", qUnion, Oracle(
       """SELECT DISTINCT custkey FROM (
         |  SELECT o_custkey AS custkey FROM orders
         |  WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
         |  UNION ALL
         |  SELECT o_custkey AS custkey FROM orders
         |  WHERE o_orderdate >= TIMESTAMP '1996-07-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |) t ORDER BY custkey""".stripMargin,
-    "q_scalar_fn" ->
+        |) t ORDER BY custkey""".stripMargin)),
+    Q("q_scalar_fn", qScalarFn, Oracle(
       """SELECT p_partkey,
         |  upper(p_brand) AS brand_u,
         |  substring(p_name, 1, 8) AS name_prefix,
@@ -1424,13 +1361,19 @@ object Relational {
         |  CASE WHEN p_size < 10 THEN 'small'
         |       WHEN p_size < 30 THEN 'medium'
         |       ELSE 'large' END AS size_class
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_date_fn" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Q("q_date_fn", qDateFn, Oracle(
       """SELECT o_orderkey,
         |  CAST(year(o_orderdate) AS BIGINT) AS order_year,
         |  CAST(month(o_orderdate) AS BIGINT) AS order_month,
         |  CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
         |  CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2000-01-01') AS BIGINT) AS days_to_2000
-        |FROM orders ORDER BY o_orderkey""".stripMargin
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Q("q_approx_distinct", qApproxDistinct, RowsOnly("HyperLogLog++ estimator internals are " +
+      "engine-specific (DuckDB's approx_count_distinct differs by " +
+      "construction); error band hash-enforced via sketch_error_report")),
+    Q("q_approx_percentile", qApproxPercentile, RowsOnly("Greenwald-Khanna sketch internals are " +
+      "engine-specific; rank-guarantee band hash-enforced via " +
+      "sketch_error_report"))
   )
 }

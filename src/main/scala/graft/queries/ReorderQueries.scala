@@ -17,18 +17,14 @@ object ReorderQueries {
   def reorderDedupEvents(s: SparkSession, dir: String): DataFrame =
     Reorder.reorderDedup(Tables.events(s, dir), "ts", "event_id")
 
-  val queries: Map[String, Relational.Q] = Map(
-    "reorder_dedup_events" -> (reorderDedupEvents _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "reorder_dedup_events" ->
+  val registry: Seq[Q] = Seq(
+    Q("reorder_dedup_events", reorderDedupEvents, Oracle(
       """SELECT event_id, ts, user_id, event_type, value, props
         |FROM (
         |  SELECT *, row_number() OVER (PARTITION BY ts ORDER BY event_id) AS rn
         |  FROM events
         |) t
         |WHERE rn = 1
-        |ORDER BY ts, event_id""".stripMargin
+        |ORDER BY ts, event_id""".stripMargin))
   )
 }

@@ -10,21 +10,25 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   * and grace-period flush (Application.java:37-97; semantics S1–S7 in
   * SURVEY.md §2.2).
   *
-  * Two variants:
-  *  - [[faithful]]: `flatMapGroupsWithState` with event-time timeout — a
-  *    per-key RocksDB-backed buffer (first-wins insert per S3) that, when
-  *    the watermark passes its flush mark, emits the ENTIRE buffer in
-  *    ascending event-time order (whole-store flush per S1/S2), optionally
-  *    re-keyed `"key-<millis>"` (S4). The watermark replaces stream-time
-  *    punctuation (S6): both only advance when data arrives.
-  *  - [[idiomatic]]: what a Spark user would actually deploy —
-  *    `withWatermark` + `dropDuplicatesWithinWatermark` (exact S3
-  *    semantics) with ordering applied at the sink (`ORDER BY` per
-  *    micro-batch in `foreachBatch`), letting Spark's own state store do
-  *    the buffering.
+  * Five entry points:
+  *  - [[faithful]]: `flatMapGroupsWithState` with an event-time timeout;
+  *    a per-key buffer (first-wins insert, S3) flushed whole and in
+  *    ascending event time once the watermark passes its flush mark.
+  *  - [[withLateOutput]]: no watermark; fixed stream-time punctuation, so
+  *    records beyond the grace period are re-buffered, never dropped (S1).
+  *  - [[faithfulV2]]: [[faithful]]'s semantics on `transformWithState`,
+  *    with a per-entry `MapState` buffer and an event-time flush timer.
+  *  - [[faithfulV2Chained]]: [[faithfulV2]] that declares an output
+  *    event-time column, so stateful operators can follow in one query.
+  *  - [[idiomatic]]: `withWatermark` + `dropDuplicatesWithinWatermark`,
+  *    ordered per micro-batch at the sink; Spark's state store buffers.
   *
-  * Documented divergence (SURVEY §7.4): records later than the watermark
-  * (disorder > grace) are DROPPED by Spark's stateful operators, while
+  * The watermark replaces stream-time punctuation (S6): both only advance
+  * when data arrives.
+  *
+  * Documented divergence (SURVEY §7.4): in every entry point but
+  * [[withLateOutput]], records later than the watermark (disorder >
+  * grace) are DROPPED by Spark's stateful operators, while
   * Kafka Streams re-buffers them into the next flush. Within the bounded
   * disorder the reference guarantees (README.md:5-7), outputs agree.
   *

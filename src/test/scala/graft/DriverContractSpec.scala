@@ -68,26 +68,42 @@ class DriverContractSpec extends SparkTestBase {
   }
 
   test("every oracle key has a query; no accidental orphans") {
+    // each record carries exactly one check, so the derived views must
+    // partition the query names: an oracle or a stated rows-only reason
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet
-    val orphans = os.diff(qs)
-    assert(orphans.isEmpty, s"oracle entries without a query: $orphans")
-    val rowsOnly = qs.diff(os)
-    // rows-only queries must be the deliberate list (engine-specific
-    // sketches/approx paths), not an accidentally-dropped oracle.
-    // dedup_simhash left this list in round 3: its token hash moved from
-    // xxhash64 to md5 halves precisely so the oracle can recompute it;
-    // ann_topk_lsh left in round 9 (md5-derived hyperplanes) and
-    // ann_topk_ivf/pq/ivfpq in round 10 (md5-sampled trainers whose
-    // k-means iterations the oracle unrolls). Still here: pca (no SQL
-    // engine replays a Jacobi eigen solve), the recall report (aggregates
-    // the legs' measured hits), and the DataSketches/HLL++/GK internals.
-    // the deliberate list now lives on SparkEntry (rowsOnlyByDesign, with
-    // per-query reasons + gates) and is emitted into the verify artifact
-    // as rows_only_by_design.json — pin the two in lockstep so neither
-    // can drift
-    assert(rowsOnly == SparkEntry.rowsOnlyByDesign.keySet,
-      s"rows-only queries drifted from SparkEntry.rowsOnlyByDesign: $rowsOnly")
+    val rowsOnly = SparkEntry.rowsOnlyByDesign.keySet
+    assert(os.diff(qs).isEmpty, s"oracle entries without a query: ${os.diff(qs)}")
+    assert(os.intersect(rowsOnly).isEmpty, s"both oracle and rows-only: ${os.intersect(rowsOnly)}")
+    assert(os ++ rowsOnly == qs, s"queries with no check: ${qs.diff(os ++ rowsOnly)}")
+    assert(SparkEntry.rowsOnlyByDesign.values.forall(_.trim.nonEmpty))
+  }
+
+  test("registry names are unique, so no record shadows another") {
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate query names: $dups")
+    assert(SparkEntry.queries.size == SparkEntry.registry.size)
+  }
+
+  test("queries are declared only as registry records") {
+    // a name -> function map, a name -> SQL map or a rows-only literal
+    // beside the records would split a query's declaration again
+    val banned = Seq(
+      raw"Map\[String,\s*(Relational\.)?Q\]".r,
+      raw"(val|def)\s+oracles\w*\b".r,
+      raw"rowsOnlyByDesign[^=\n]*=\s*Map\(".r,
+      raw""""[a-z0-9_]+"\s*->\s*\(\w+ _\)""".r)
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+      dir.listFiles.toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+      }
+    val root = Paths.get("src/main/scala/graft").toFile
+    assert(root.isDirectory, s"$root not found")
+    val offenders = scalaFiles(root).flatMap { f =>
+      val text = Files.readString(f.toPath)
+      banned.flatMap(_.findFirstIn(text)).map(m => s"${f.getPath}: $m")
+    }
+    assert(offenders.isEmpty, s"declare each query once, as a Q record: ${offenders.mkString("; ")}")
   }
 
   test("Kafka config honors the reference's dev.properties keys") {
@@ -316,7 +332,7 @@ class DriverContractSpec extends SparkTestBase {
   // one sf0.001 Verify dump shared by the contract-shape test and the
   // full oracle gate below — the dump IS the expensive part
   private lazy val verifyOut: String = {
-    val out = Files.createTempDirectory("graft-contract").toString
+    val out = tempDir("graft-contract")
     Verify.main(Array("/root/testdata/sf0.001", out))
     out
   }

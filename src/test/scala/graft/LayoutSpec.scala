@@ -39,7 +39,7 @@ class LayoutSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part")
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     docs.write.mode("overwrite").partitionBy("lang").parquet(s"$dir/docs")
     val langs = docs.select("lang").distinct().count()

@@ -189,7 +189,7 @@ class LogRegSpec extends SparkTestBase {
     val rows = Seq.tabulate(30)(i =>
       (i.toLong, Array(1.0, i / 30.0, (i % 7) / 7.0), if (i >= 15) 1.0 else 0.0))
     val w = LogReg.train(feats(rows), "x", "y", dim = 3, iters = 6, lr = 3.0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lr").toString
+    val dir = tempDir("graft-lr")
     LogReg.saveModel(spark, w, s"$dir/model")
     val w2 = LogReg.loadModel(spark, s"$dir/model")
     assert(w2.toSeq == w.toSeq, "doubles must survive the parquet round trip")
@@ -219,7 +219,7 @@ class LogRegSpec extends SparkTestBase {
         col("mean_tok_len") / 10.0).as("x"),
       when(col("quality") >= 0.8, 1.0).otherwise(0.0).as("y"))
     val w0 = LogReg.train(feats, "x", "y", dim = 5, iters = 10, lr = 5.0)
-    val modelDir = java.nio.file.Files.createTempDirectory("graft-gate").toString
+    val modelDir = tempDir("graft-gate")
     LogReg.saveModel(spark, w0, s"$modelDir/model")
     val w = LogReg.loadModel(spark, s"$modelDir/model")
 

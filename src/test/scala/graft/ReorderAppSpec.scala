@@ -57,7 +57,7 @@ class ReorderAppSpec extends SparkTestBase {
     ElectronicOrder("12", "one", "jessica", 115.0, t("2021-11-05T00:00:00Z")))
 
   test("loadProps parses a .properties file with the reference's keys") {
-    val f = Files.createTempFile("graft-app", ".properties")
+    val f = java.nio.file.Paths.get(tempDir("graft-app"), "dev.properties")
     // dev.properties:1-10 keys, verbatim format (= separated, blank lines)
     Files.writeString(f,
       """application.id=reorder-api-application
@@ -144,7 +144,7 @@ class ReorderAppSpec extends SparkTestBase {
     RecordingProducerFactory.sent.clear()
     RecordingProducerFactory.closes.set(0)
     val conf = KafkaAvroIO.KafkaConf("unused:9092", "in", "orders-out",
-      Files.createTempDirectory("graft-s5-ckpt").toString,
+      tempDir("graft-s5-ckpt"),
       confluentFramed = true, schemaId = 7)
     val input = MemoryStream[graft.streaming.StreamingReorder.Reordered]
     val q = KafkaAvroIO.sinkWithTimestamp(input.toDS(), conf, RecordingProducerFactory)

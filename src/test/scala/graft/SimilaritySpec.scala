@@ -177,7 +177,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(served1 == oneShot && served2 == oneShot)
 
     // disk round-trip: same centroids, same assignment, same answers
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val path = tempDir("graft-ivf")
     Similarity.writeIvf(idx, path)
     val loaded = Similarity.readIvf(spark, path)
     assert(loaded.centroids == idx.centroids)
@@ -218,7 +218,7 @@ class SimilaritySpec extends SparkTestBase {
     val served2 = Similarity.queryIvfPq(idx, queries, "vec_id", "embedding", 5).collect().toSeq
     assert(served1 == oneShot && served2 == oneShot)
 
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val path = tempDir("graft-ivfpq")
     Similarity.writeIvfPq(idx, path)
     val loaded = Similarity.readIvfPq(spark, path)
     assert(loaded.centroids == idx.centroids && loaded.codebooks == idx.codebooks)
@@ -254,7 +254,7 @@ class SimilaritySpec extends SparkTestBase {
       "every corpus id must be indexed after the add")
 
     // on-disk append: same layout, same rows, same query answers
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-append").toString
+    val path = tempDir("graft-ivf-append")
     Similarity.writeIvf(base, path)
     Similarity.appendIvf(path, half2, "vec_id", "embedding")
     val loaded = Similarity.readIvf(spark, path)
@@ -360,7 +360,7 @@ class SimilaritySpec extends SparkTestBase {
     val oneShot = Similarity.opqTopK(queries, emb, "vec_id", "embedding", 5, 64)
       .collect().map(_.toSeq).toSet
     val idx = Similarity.buildOpq(emb, "vec_id", "embedding", 64)
-    val dir = java.nio.file.Files.createTempDirectory("graft_opq_idx").toString
+    val dir = tempDir("graft_opq_idx")
     Similarity.writeOpq(idx, dir)
     val served = Similarity.queryOpq(Similarity.readOpq(spark, dir),
       queries, "vec_id", "embedding", 5)

@@ -77,7 +77,7 @@ class SketchRollupSpec extends SparkTestBase {
   }
 
   test("sketch summary tables survive a parquet round trip and still roll up") {
-    val dir = java.nio.file.Files.createTempDirectory("sk").toString
+    val dir = tempDir("sk")
     try {
       SketchRollup.sketchBy(events, "event_type", "user_id")
         .write.mode("overwrite").parquet(s"$dir/hll")

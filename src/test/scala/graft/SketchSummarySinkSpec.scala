@@ -18,7 +18,7 @@ class SketchSummarySinkSpec extends SparkTestBase {
 
   test("streamed summary equals the batch rollup over everything streamed") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("sketchsink").toString + "/s"
+    val path = tempDir("sketchsink") + "/s"
     val input = MemoryStream[Ev]
     val q = input.toDF().writeStream
       .foreachBatch(SketchSummarySink.appendPartials("event_type", "user_id", path))
@@ -48,7 +48,7 @@ class SketchSummarySinkSpec extends SparkTestBase {
 
   test("compaction squashes generations without changing the summary") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("sketchsink").toString + "/s"
+    val path = tempDir("sketchsink") + "/s"
     val input = MemoryStream[Ev]
     val q = input.toDF().writeStream
       .foreachBatch(SketchSummarySink.appendPartials("event_type", "user_id", path))
@@ -71,7 +71,7 @@ class SketchSummarySinkSpec extends SparkTestBase {
   }
 
   test("re-delivered batch ids are deduplicated, append stays idempotent") {
-    val path = java.nio.file.Files.createTempDirectory("sketchsink").toString + "/s"
+    val path = tempDir("sketchsink") + "/s"
     val rows = (0L until 25L).map(u => ev(u, u, "click"))
     val hook = SketchSummarySink.appendPartials("event_type", "user_id", path)
     hook(rows.toDF(), 7L)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Source/sink format coverage beyond the driver's parquet: CSV and JSON
@@ -13,13 +11,10 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
-
   test("csv and json round-trip with explicit schemas") {
     val df = Tables.nation(spark, "/root/testdata/sf0.001")
-    val csvDir = tmp("graft-csv")
-    val jsonDir = tmp("graft-json")
+    val csvDir = tempDir("graft-csv")
+    val jsonDir = tempDir("graft-json")
     df.write.mode("overwrite").option("header", "true").csv(csvDir)
     df.write.mode("overwrite").json(jsonDir)
     val csvBack = spark.read.schema(df.schema).option("header", "true").csv(csvDir)
@@ -31,7 +26,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("partitioned parquet write prunes partitions on read") {
-    val dir = tmp("graft-part")
+    val dir = tempDir("graft-part")
     Tables.orders(spark, "/root/testdata/sf0.001")
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year").parquet(dir)
@@ -48,7 +43,7 @@ class SourcesSpec extends SparkTestBase {
   test("schema evolution: mergeSchema unifies batches written with added columns") {
     // the 100 TB reality: a table written over months gains columns; old
     // files must keep reading with nulls, new columns must surface
-    val dir = tmp("graft-evolve")
+    val dir = tempDir("graft-evolve")
     Seq((1L, "a")).toDF("id", "v1")
       .write.mode("overwrite").parquet(s"$dir/batch=1")
     Seq((2L, "b", 99L)).toDF("id", "v1", "v2")

@@ -233,7 +233,7 @@ class StreamingCurationSpec extends SparkTestBase {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       implicit val sqlCtx = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-curate-ckpt").toString
+      val ckpt = tempDir("graft-curate-ckpt")
       val input = MemoryStream[(Long, String, Long)]
       val verdicts = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
       // foreachBatch, not the memory sink: only fault-tolerant sinks may

@@ -98,7 +98,7 @@ class StreamingReorderSpec extends SparkTestBase {
     // advance the watermark — every record must emit exactly once, in
     // order, from the RESTORED state
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt")
     val input = MemoryStream[ElectronicOrder]
     val emitted = scala.collection.mutable.ArrayBuffer.empty[String]
     // foreachBatch, not the memory sink: only fault-tolerant sinks may

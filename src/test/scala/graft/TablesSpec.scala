@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,7 +32,7 @@ class TablesSpec extends SparkTestBase {
     }.toDF("event_id", "us", "user_id", "event_type", "value", "props")
 
   private def writeEncoding(encode: DataFrame => DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-events-enc").toString
+    val dir = tempDir("graft-events-enc")
     encode(base).select(
       $"event_id", $"ts", $"user_id", $"event_type", $"value", $"props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -67,7 +65,7 @@ class TablesSpec extends SparkTestBase {
   test("embeddings loader normalizes float and double element encodings identically") {
     val vals = Seq((0L, Array(0.5f, -1.25f, 3.75f)), (1L, Array(2.5f, 0.125f, -0.625f)))
     def writeEnc(asDouble: Boolean): String = {
-      val dir = Files.createTempDirectory("graft-emb-enc").toString
+      val dir = tempDir("graft-emb-enc")
       val base = vals.toDF("vec_id", "embedding")
       val df = if (asDouble)
         base.withColumn("embedding", $"embedding".cast(ArrayType(DoubleType)))
@@ -97,7 +95,7 @@ class TablesSpec extends SparkTestBase {
       (0L, "plain ascii", "en", "web", 11L),
       (1L, "unicode é中文 text", "zh", "books", 15L))
     def writeEnc(asBinary: Boolean): String = {
-      val dir = Files.createTempDirectory("graft-docs-enc").toString
+      val dir = tempDir("graft-docs-enc")
       val base = rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       val df = if (asBinary)
         base.withColumn("text", $"text".cast(BinaryType))
