@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.KafkaAvroIO
+import graft.io.{KafkaAvroIO, LocalCheckpointFileManager}
 import graft.model.ElectronicOrder
 import graft.streaming.StreamingReorder
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -27,7 +27,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * classpath; state scales per reorder key × one grace window of data, so
   * for long grace windows configure the RocksDB state store provider
   * (`spark.sql.streaming.stateStore.providerClass`) exactly as the tests
-  * do (StreamingReorderSpec's RocksDB run).
+  * do (StreamingReorderSpec's RocksDB run). `topology` sets
+  * `spark.sql.streaming.checkpointFileManagerClass` to
+  * [[graft.io.LocalCheckpointFileManager]] when that key is unset: a
+  * `file:` checkpoint is then written through `java.nio` instead of
+  * forking `chmod`/`readlink` per checkpoint file, and a checkpoint on
+  * any other scheme goes through Spark's default manager unchanged. To
+  * use another manager, set the key before calling `topology`.
   */
 object ReorderApp {
 
@@ -46,11 +52,15 @@ object ReorderApp {
   }
 
   /** The topology minus the Kafka edges, so the MemoryStream smoke test
-    * drives the exact assembly `main` runs.
+    * drives the exact assembly `main` runs. Installs
+    * [[LocalCheckpointFileManager]] on the session of `orders` unless a
+    * checkpoint file manager is already configured there.
     */
   def topology(orders: Dataset[ElectronicOrder],
-      graceMs: Long = DefaultGraceMs): Dataset[StreamingReorder.Reordered] =
+      graceMs: Long = DefaultGraceMs): Dataset[StreamingReorder.Reordered] = {
+    LocalCheckpointFileManager.install(orders.sparkSession)
     StreamingReorder.faithful(orders, graceMs)
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 1,

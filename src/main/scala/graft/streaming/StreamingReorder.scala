@@ -222,11 +222,15 @@ object StreamingReorder extends Serializable {
     *  - the flush is an explicit event-time TIMER (registered at
     *    `oldest + grace`, lowered when an older record arrives, cleared
     *    on flush) rather than a timeout timestamp rewritten each batch.
-    * Measured: with shallow buffers v2 is SLOWER — on perfbench's
-    * `reorder_replay` (1,500 Zipf keys, 500-record batches, 4 vCPU) its
-    * `batch_ms_p50` read about 19% above [[faithful]]'s (4-pair median
-    * 558 → 666 ms, slower in 4 of 5 pairs) and `pass_s` 18% above; with
-    * deep buffers (`StreamBench` deep mode, 4 keys × 200k records on
+    * Measured with checkpoint files written through
+    * [[graft.io.LocalCheckpointFileManager]] (4 vCPU, alternating pairs):
+    * with shallow buffers v2 is SLOWER — on perfbench's `reorder_replay`
+    * (1,500 Zipf keys, 500-record batches) its `batch_ms_p50` read 21%
+    * above [[faithful]]'s (4-pair median 326 → 395 ms, slower in 4 of 4)
+    * and `pass_s` 27% above; on `reorder_deep` (8 keys, ~10k buffered
+    * entries per key, 1,000-record batches) `batch_ms_p50` read 8% below
+    * (406 → 371 ms, faster in 2 of 3) but `pass_s` 14% above. With
+    * deeper buffers (`StreamBench` deep mode, 4 keys × 200k records on
     * RocksDB, 200 batches) v2 is 24% faster end-to-end and the whole gap
     * is serde, see SCALE.md's deep-buffer table. The
     * O(buffer) → O(inserts) asymmetry matters when per-key buffers are

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.io.LocalCheckpointFileManager
 import graft.model.ElectronicOrder
 import graft.streaming.StreamingReorder
 import org.apache.spark.sql.SparkSession
@@ -450,6 +451,7 @@ object StreamBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LocalCheckpointFileManager.install(spark)
     import spark.implicits._
 
     if (sys.env.get("SPARK_GRAFT_DEEP").contains("1")) {

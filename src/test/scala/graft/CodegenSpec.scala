@@ -25,19 +25,9 @@ class CodegenSpec extends SparkTestBase {
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
-  private def withConf[T](kvs: Seq[(String, String)])(body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** `out` over `input` (which has an `id` column), rows ordered by id. */
   private def project(input: DataFrame, out: Column, conf: Seq[(String, String)]) =
-    withConf(conf) {
+    withConf(conf.map { case (k, v) => k -> Option(v) }: _*) {
       // an RDD-backed frame: the projection is planned and executed, not
       // folded into a local relation on the driver
       val df = spark.createDataFrame(input.rdd, input.schema)

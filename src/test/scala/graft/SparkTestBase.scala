@@ -5,11 +5,13 @@ import java.nio.file.{Files, Path}
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.io.LocalCheckpointFileManager
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local SparkSession per suite (lazy, UTC, small shuffle). */
+/** One shared local SparkSession per suite (lazy, UTC, small shuffle,
+  * checkpoints through [[LocalCheckpointFileManager]]). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
 
@@ -21,6 +23,18 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory(prefix)
     tempDirs += dir
     dir.toString
+  }
+
+  /** Runs `body` with each key set to its value (`None`: unset), then
+    * restores the session's previous settings. */
+  protected def withConf[T](kvs: (String, Option[String])*)(body: => T): T = {
+    def set(kv: (String, Option[String])): Unit = kv match {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach(set)
+    try body finally saved.foreach(set)
   }
 
   override protected def afterAll(): Unit =
@@ -48,6 +62,7 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    LocalCheckpointFileManager.install(s)
     s
   }
 }
