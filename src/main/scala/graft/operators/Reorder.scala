@@ -36,12 +36,6 @@ object Reorder {
       .orderBy(col(timeCol), col(arrivalCol))
   }
 
-  /** Reorder only (no dedup): the pure "emit in chronological order"
-    * contract of README.md:5-7, for inputs with distinct timestamps.
-    */
-  def reorder(df: DataFrame, timeCol: String): DataFrame =
-    df.orderBy(col(timeCol))
-
   /** The reference's observable output key, `"key-<epochMillis>"`
     * (Application.java:145, semantics S4). Optional fidelity re-key.
     */

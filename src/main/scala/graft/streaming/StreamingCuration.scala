@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * verdict combine) carry gated fingerprints, never raw rejected text.
   * The whole chain is ONE streaming query — no topic/sink hop between
   * stages — which the v2 `transformWithState` event-time declaration
-  * makes legal (the [[StreamingReorder.faithfulV2Chained]] mechanism).
+  * makes legal (the [[StreamingReorder.faithfulV2]] mechanism).
   */
 object StreamingCuration {
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   *
   * Pipeline (one streaming query, two stateful stages chained via the
   * v2 `transformWithState` event-time-column declaration, exactly like
-  * [[StreamingReorder.faithfulV2Chained]]):
+  * [[StreamingReorder.faithfulV2]]):
   *
   *  1. Stateless per-row SimHash — a JVM twin of the batch fingerprint
   *     ([[graft.operators.Dedup.simhash]]: md5-halves token hash,

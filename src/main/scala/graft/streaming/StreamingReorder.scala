@@ -10,16 +10,18 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   * and grace-period flush (Application.java:37-97; semantics S1–S7 in
   * SURVEY.md §2.2).
   *
-  * Five entry points:
+  * Four entry points:
   *  - [[faithful]]: `flatMapGroupsWithState` with an event-time timeout;
   *    a per-key buffer (first-wins insert, S3) flushed whole and in
-  *    ascending event time once the watermark passes its flush mark.
+  *    ascending event time in the first micro-batch whose watermark has
+  *    passed the oldest buffered event time + grace, whether or not the
+  *    key has data in that batch.
   *  - [[withLateOutput]]: no watermark; fixed stream-time punctuation, so
   *    records beyond the grace period are re-buffered, never dropped (S1).
-  *  - [[faithfulV2]]: [[faithful]]'s semantics on `transformWithState`,
-  *    with a per-entry `MapState` buffer and an event-time flush timer.
-  *  - [[faithfulV2Chained]]: [[faithfulV2]] that declares an output
-  *    event-time column, so stateful operators can follow in one query.
+  *  - [[faithfulV2]]: [[faithful]]'s output, batch for batch, on
+  *    `transformWithState`, with a per-entry `MapState` buffer and an
+  *    event-time flush timer. It declares `event_time` = `flush_time` as
+  *    its output clock, so stateful operators can follow in one query.
   *  - [[idiomatic]]: `withWatermark` + `dropDuplicatesWithinWatermark`,
   *    ordered per micro-batch at the sink; Spark's state store buffers.
   *
@@ -41,8 +43,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
 object StreamingReorder extends Serializable {
 
   /** Flushed output row; `key` replicates the reference's synthetic store
-    * key (Application.java:145) when `emitStoreKey` is set, else the
-    * original record key (`electronic_id`). `flush_time` is S5: the
+    * key `key-<time>` (Application.java:145, S4). `flush_time` is S5: the
     * reference overwrites every forwarded record's timestamp with the
     * punctuation's stream time (`new Record<>(kv.key, kv.value, timestamp)`,
     * Application.java:77) — here it rides as an explicit column that
@@ -67,49 +68,48 @@ object StreamingReorder extends Serializable {
   final case class LateState(buffer: Map[Long, ElectronicOrder],
       streamTime: Long, nextPunctuate: Long)
 
-  /** S1/S2 whole-buffer ordered flush, optionally re-keyed (S4), stamped
-    * with the punctuation stream time (S5).
+  /** S1/S2 whole-buffer ordered flush, re-keyed (S4), stamped with the
+    * punctuation stream time (S5).
     */
   private def flushBuffer(buf: Map[Long, ElectronicOrder],
-      emitStoreKey: Boolean, flushTime: Long): Iterator[Reordered] =
+      flushTime: Long): Iterator[Reordered] =
     buf.toSeq.sortBy(_._1).iterator.map { case (t, o) =>
-      val k = if (emitStoreKey) s"key-$t" else o.electronic_id
-      Reordered(k, o.order_id, o.electronic_id, o.user_id, o.price, t, flushTime)
+      Reordered(s"key-$t", o.order_id, o.electronic_id, o.user_id, o.price, t, flushTime)
     }
 
   /** The faithful operator. `orders` must be a streaming Dataset. */
-  def faithful(orders: Dataset[ElectronicOrder], graceMs: Long,
-      emitStoreKey: Boolean = true): Dataset[Reordered] = {
+  def faithful(orders: Dataset[ElectronicOrder], graceMs: Long): Dataset[Reordered] = {
     val spark = orders.sparkSession
     import spark.implicits._
 
+    // Called for a key with data and for a key whose timeout fired (no
+    // rows). Spark fires a timeout only for a key WITHOUT data in the
+    // batch, so a key with data in every batch must be flushed here too.
     def fn(key: String, rows: Iterator[ElectronicOrder],
         state: GroupState[BufferState]): Iterator[Reordered] = {
-      if (state.hasTimedOut) {
+      var buf = state.getOption.map(_.buffer).getOrElse(Map.empty)
+      rows.foreach { o =>
+        // S3: first-wins — drop if this event time is already buffered
+        if (!buf.contains(o.time)) buf += o.time -> o
+      }
+      // the stream-time punctuation mark for this epoch: the oldest
+      // buffered event + grace
+      val flushMark = buf.keys.min + graceMs
+      val watermark = state.getCurrentWatermarkMs()
+      if (flushMark < watermark) {
         // punctuation analog: whole-store ordered flush (Application.java:72-83).
         // REMOVE the state rather than storing an empty buffer — otherwise
-        // every key ever seen keeps store space and re-fires an empty
-        // timeout each grace period forever; new data re-creates the state
-        // (stream-time punctuation is only meaningful with data, S6).
-        val buf = state.getOption.map(_.buffer).getOrElse(Map.empty)
+        // every key ever seen keeps store space; new data re-creates the
+        // state (stream-time punctuation is only meaningful with data, S6).
+        // S5: stamp with the engine's stream-time clock, the watermark,
+        // playing the punctuation timestamp's role (Application.java:77)
         state.remove()
-        // S5: stamp with the engine's stream-time clock at the flush — the
-        // watermark is what fired this timeout, playing the punctuation
-        // timestamp's role (Application.java:77)
-        flushBuffer(buf, emitStoreKey, state.getCurrentWatermarkMs())
+        flushBuffer(buf, watermark)
       } else {
-        var buf = state.getOption.map(_.buffer).getOrElse(Map.empty)
-        rows.foreach { o =>
-          // S3: first-wins — drop if this event time is already buffered
-          if (!buf.contains(o.time)) buf += o.time -> o
-        }
         state.update(BufferState(buf))
-        if (buf.nonEmpty) {
-          // flush when the watermark passes the oldest buffered event +
-          // grace (the stream-time punctuation mark for this epoch)
-          val target = buf.keys.min + graceMs
-          state.setTimeoutTimestamp(math.max(target, state.getCurrentWatermarkMs() + 1))
-        }
+        // fires in the first batch without data for this key whose
+        // watermark is past the mark
+        state.setTimeoutTimestamp(flushMark)
         Iterator.empty
       }
     }
@@ -159,7 +159,7 @@ object StreamingReorder extends Serializable {
     * punctuation epoch, never drop or reorder differently within one.
     */
   def withLateOutput(orders: Dataset[ElectronicOrder], graceMs: Long,
-      emitStoreKey: Boolean = true, idleStateTtlMs: Long = 0L): Dataset[Reordered] = {
+      idleStateTtlMs: Long = 0L): Dataset[Reordered] = {
     val spark = orders.sparkSession
     import spark.implicits._
     val ttlOn = idleStateTtlMs > 0
@@ -197,7 +197,7 @@ object StreamingReorder extends Serializable {
           else streamTime + graceMs
         state.update(LateState(Map.empty, streamTime, next))
         if (ttlOn) state.setTimeoutDuration(idleStateTtlMs)
-        flushBuffer(buf, emitStoreKey, streamTime)
+        flushBuffer(buf, streamTime)
       } else {
         state.update(LateState(buf, streamTime, armed))
         if (ttlOn) state.setTimeoutDuration(idleStateTtlMs)
@@ -213,26 +213,41 @@ object StreamingReorder extends Serializable {
   }
 
   /** [[faithful]] on Spark 4's `transformWithState` arbitrary-state v2
-    * API — same semantics (S1–S7), different state mechanics:
+    * API — the same rows in the same micro-batches (`StreamingReorderSpec`
+    * pins this, `flush_time` included), different state mechanics:
     *  - the reorder buffer is a [[MapState]] keyed by event time, so a
     *    batch's inserts are per-entry RocksDB puts instead of
     *    re-serializing the whole buffer Map on every
     *    `GroupState.update` (the v1 API's per-batch serde cost is
     *    O(buffer), v2's is O(new records));
-    *  - the flush is an explicit event-time TIMER (registered at
-    *    `oldest + grace`, lowered when an older record arrives, cleared
-    *    on flush) rather than a timeout timestamp rewritten each batch.
+    *  - the flush is an explicit event-time TIMER at `oldest + grace + 1`
+    *    (a timer fires once the watermark reaches it, a v1 timeout once
+    *    the watermark passes it), lowered when an older record arrives
+    *    and cleared on flush, rather than a timeout rewritten each batch.
+    *
+    * The output declares `event_time` (`transformWithState`'s
+    * `eventTimeColumnName` overload), set to the row's `flush_time`: the
+    * watermark that fired the flush, S5's stream time. That is the one
+    * output clock a grace buffer may declare — a buffered record's own
+    * event time is older than the watermark by up to the grace once the
+    * buffer outlives a watermark advance, and Spark fails the query with
+    * `EMITTING_ROWS_OLDER_THAN_WATERMARK_NOT_ALLOWED`. With it, stateful
+    * operators (windowed aggregations, stream-stream joins, dedup) can
+    * follow the reorder in the same query, grouping by flush time;
+    * `StreamingComposeSpec` pins reorder → tumbling count.
+    *
     * Measured with checkpoint files written through
     * [[graft.io.LocalCheckpointFileManager]] (4 vCPU, alternating pairs):
     * with shallow buffers v2 is SLOWER — on perfbench's `reorder_replay`
     * (1,500 Zipf keys, 500-record batches) its `batch_ms_p50` read 21%
     * above [[faithful]]'s (4-pair median 326 → 395 ms, slower in 4 of 4)
-    * and `pass_s` 27% above; on `reorder_deep` (8 keys, ~10k buffered
-    * entries per key, 1,000-record batches) `batch_ms_p50` read 8% below
-    * (406 → 371 ms, faster in 2 of 3) but `pass_s` 14% above. With
-    * deeper buffers (`StreamBench` deep mode, 4 keys × 200k records on
-    * RocksDB, 200 batches) v2 is 24% faster end-to-end and the whole gap
-    * is serde, see SCALE.md's deep-buffer table. The
+    * and `pass_s` 27% above; per traced round it does about 3.9× the
+    * RocksDB puts and gets (56,742 / 93,099 against 14,597 / 24,161).
+    * On `reorder_deep` (8 keys, ~10k buffered entries per key,
+    * 1,000-record batches) `batch_ms_p50` read 8% below (406 → 371 ms,
+    * faster in 2 of 3) but `pass_s` 14% above. With deeper buffers still
+    * (4 keys × 200k records, see SCALE.md's deep-buffer table) v2 was
+    * 24% faster end-to-end and the whole gap was serde. The
     * O(buffer) → O(inserts) asymmetry matters when per-key buffers are
     * deep relative to per-batch inserts (a real grace window over
     * high-rate keys); v1 additionally holds each key's buffer as ONE
@@ -241,8 +256,7 @@ object StreamingReorder extends Serializable {
     * API's native store); [[faithful]] remains for memory-provider
     * deployments.
     */
-  def faithfulV2(orders: Dataset[ElectronicOrder], graceMs: Long,
-      emitStoreKey: Boolean = true): Dataset[Reordered] = {
+  def faithfulV2(orders: Dataset[ElectronicOrder], graceMs: Long): Dataset[ReorderedEt] = {
     val spark = orders.sparkSession
     import spark.implicits._
     orders
@@ -250,50 +264,19 @@ object StreamingReorder extends Serializable {
       .withWatermark("event_time", s"$graceMs milliseconds")
       .as[ElectronicOrder]
       .groupByKey(_.electronic_id)
-      .transformWithState(new ReorderProcessor(graceMs, emitStoreKey, identity),
-        TimeMode.EventTime(), OutputMode.Append)
+      .transformWithState(new ReorderProcessor(graceMs), "event_time", OutputMode.Append)
   }
 
-  /** [[Reordered]] plus a real TIMESTAMP event-time column, for chaining. */
+  /** [[Reordered]] plus the declared TIMESTAMP event-time column
+    * (`event_time` = `flush_time`).
+    */
   final case class ReorderedEt(key: String, order_id: String, electronic_id: String,
       user_id: String, price: Double, time: Long, flush_time: Long,
       event_time: java.sql.Timestamp)
 
-  /** [[faithfulV2]] variant that DECLARES an output event-time column
-    * (`transformWithState`'s `eventTimeColumnName` overload), so further
-    * STATEFUL operators — windowed aggregations, stream-stream joins,
-    * dedup — can run downstream of the reorder in the SAME streaming
-    * query, with the engine re-deriving the downstream watermark from the
-    * emitted column instead of rejecting the chain (the long-standing
-    * multiple-stateful-operators restriction on the v1 API). The emitted
-    * `event_time` is the record's own event time, so a downstream
-    * `window(col("event_time"), ...)` groups exactly as the batch twin
-    * does; `StreamingComposeSpec` pins reorder → tumbling count
-    * end-to-end against the batch result.
-    */
-  def faithfulV2Chained(orders: Dataset[ElectronicOrder], graceMs: Long,
-      emitStoreKey: Boolean = true): Dataset[ReorderedEt] = {
-    val spark = orders.sparkSession
-    import spark.implicits._
-    orders
-      .withColumn("event_time", timestamp_millis(col("time")))
-      .withWatermark("event_time", s"$graceMs milliseconds")
-      .as[ElectronicOrder]
-      .groupByKey(_.electronic_id)
-      .transformWithState(
-        new ReorderProcessor[ReorderedEt](graceMs, emitStoreKey,
-          r => ReorderedEt(r.key, r.order_id, r.electronic_id, r.user_id,
-            r.price, r.time, r.flush_time,
-            new java.sql.Timestamp(r.time))),
-        "event_time", OutputMode.Append)
-  }
-
-  /** The stateful processor behind [[faithfulV2]]/[[faithfulV2Chained]];
-    * `wrap` adapts the flush rows to the variant's output type.
-    */
-  private class ReorderProcessor[T](graceMs: Long, emitStoreKey: Boolean,
-      wrap: Reordered => T)
-    extends StatefulProcessor[String, ElectronicOrder, T] {
+  /** The stateful processor behind [[faithfulV2]]. */
+  private class ReorderProcessor(graceMs: Long)
+    extends StatefulProcessor[String, ElectronicOrder, ReorderedEt] {
 
     @transient private var buffer: MapState[Long, ElectronicOrder] = _
     @transient private var flushAt: ValueState[Long] = _
@@ -306,7 +289,7 @@ object StreamingReorder extends Serializable {
     }
 
     override def handleInputRows(key: String, rows: Iterator[ElectronicOrder],
-        timers: TimerValues): Iterator[T] = {
+        timers: TimerValues): Iterator[ReorderedEt] = {
       var minNew = Long.MaxValue
       rows.foreach { o =>
         // S3: first-wins per event time — a per-entry containsKey probe,
@@ -317,12 +300,13 @@ object StreamingReorder extends Serializable {
         }
       }
       if (minNew != Long.MaxValue) {
-        // flush when the watermark passes oldest + grace; an event-time
-        // timer must sit above the current watermark to fire
-        val target = math.max(minNew + graceMs, timers.getCurrentWatermarkInMs() + 1)
-        val pending = if (flushAt.exists()) flushAt.get() else Long.MinValue
-        if (pending == Long.MinValue || target < pending) {
-          if (pending != Long.MinValue) getHandle.deleteTimer(pending)
+        // the timer fires in the first batch whose watermark is past
+        // oldest + grace — this one too, after its rows, if the
+        // watermark already is
+        val target = minNew + graceMs + 1
+        val pending = if (flushAt.exists()) flushAt.get() else Long.MaxValue
+        if (target < pending) {
+          if (pending != Long.MaxValue) getHandle.deleteTimer(pending)
           getHandle.registerTimer(target)
           flushAt.update(target)
         }
@@ -331,14 +315,17 @@ object StreamingReorder extends Serializable {
     }
 
     override def handleExpiredTimer(key: String, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[T] = {
+        info: ExpiredTimerInfo): Iterator[ReorderedEt] = {
       // punctuation analog: whole-store ordered flush (S1/S2), stamped
       // with the engine's stream-time clock (S5); state fully cleared so
       // idle keys hold no store space
       val buf = buffer.iterator().map { case (t, o) => t -> o }.toMap
       buffer.clear()
       flushAt.clear()
-      flushBuffer(buf, emitStoreKey, timers.getCurrentWatermarkInMs()).map(wrap)
+      val flushTime = timers.getCurrentWatermarkInMs()
+      val clock = new java.sql.Timestamp(flushTime)
+      flushBuffer(buf, flushTime).map(r => ReorderedEt(r.key, r.order_id,
+        r.electronic_id, r.user_id, r.price, r.time, r.flush_time, clock))
     }
   }
 

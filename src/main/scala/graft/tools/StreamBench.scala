@@ -1,88 +1,25 @@
 package graft.tools
 
 import graft.io.LocalCheckpointFileManager
-import graft.model.ElectronicOrder
-import graft.streaming.StreamingReorder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming reorder throughput: pushes the events table (as
-  * ElectronicOrder records) through the faithful operator via
-  * MemoryStream and reports records/second end-to-end (ingest → stateful
-  * reorder+dedup → memory sink). The reference publishes no numbers
-  * (BASELINE.md), so this records our own single-node figure.
+/** Throughput of the streaming pipelines other than the reorder: each
+  * mode replays an sf table through MemoryStream and prints one JSON
+  * line with records/second end to end. The reorder itself is timed by
+  * perfbench (`reorder_replay`, `reorder_deep`), through
+  * `ReorderApp.topology`, with a checked output and per-phase traces.
   *
-  * Run: SPARK_GRAFT_SF_DIR=... runMain graft.tools.StreamBench
+  * Run: runMain graft.tools.StreamBench <mode> [batch size, default 20000]
+  * with `<mode>` one of `asof`, `sketch-sink`,
+  * `neardedup[:full|:bands|:stage1]`, `ingest[:trio]` or `admission`.
+  * Environment: `SPARK_GRAFT_SF_DIR` (the sf table directory),
+  * `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_STATE_PARTS`, and for the
+  * near-dedup, ingest and admission modes `SPARK_GRAFT_DEDUP_COPIES` and
+  * `SPARK_GRAFT_NEARDEDUP_TUNED`.
   */
 object StreamBench {
-
-  /** Deep-buffer state benchmark: FEW keys × MANY records per grace
-    * window, all on the RocksDB provider, so per-batch state serde — not
-    * micro-batch overhead — is what's measured. This is the regime where
-    * the v1/v2 asymmetry shows: `flatMapGroupsWithState` re-serializes
-    * each key's ENTIRE buffer Map on every `GroupState.update`
-    * (O(buffer) per batch, O(N²/batch) total), while `transformWithState`
-    * does one RocksDB put per NEW entry (O(inserts) total). Event times
-    * ascend, grace exceeds the span, so buffers only grow until a
-    * far-future sentinel record advances the watermark and flushes
-    * everything — max state size is read from the streaming progress's
-    * state-operator metrics.
-    *
-    * Run: SPARK_GRAFT_DEEP=1 runMain graft.tools.StreamBench
-    * (SPARK_GRAFT_KEYS, SPARK_GRAFT_RECORDS, batch-size arg as usual).
-    */
-  private def deepBench(spark: SparkSession, batchSize: Int): Unit = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val keys = sys.env.getOrElse("SPARK_GRAFT_KEYS", "4").toInt
-    val n = sys.env.getOrElse("SPARK_GRAFT_RECORDS", "200000").toInt
-    val base = 1600000000000L
-    val graceMs = n.toLong + 10000L
-    val orders = (0 until n).map(i => ElectronicOrder(
-      i.toString, (i % keys).toString, "u", 1.0, base + i))
-    // one sentinel per key, far enough that watermark (= max event time −
-    // grace) passes every buffer's oldest + grace flush mark
-    val sentinels = (0 until keys).map(k => ElectronicOrder(
-      s"s$k", k.toString, "u", 0.0, base + 3 * graceMs))
-
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
-    def run(name: String, mk: org.apache.spark.sql.Dataset[ElectronicOrder] =>
-        org.apache.spark.sql.DataFrame): Unit = {
-      val input = MemoryStream[ElectronicOrder]
-      val q = mk(input.toDS())
-        .writeStream.format("memory").queryName(s"deep_$name")
-        .outputMode(OutputMode.Append).start()
-      val t0 = System.nanoTime()
-      orders.grouped(batchSize).foreach { b => input.addData(b); q.processAllAvailable() }
-      // sentinel advances the watermark; one more empty-ish batch lets the
-      // event-time timers/timeouts fire
-      input.addData(sentinels); q.processAllAvailable()
-      input.addData(Seq(ElectronicOrder("tail", "0", "u", 0.0, base + 3 * graceMs + 1)))
-      q.processAllAvailable()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val emitted = spark.table(s"deep_$name").count()
-      val (maxRows, maxBytes) = q.recentProgress.toSeq
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(so => (so.numRowsTotal, so.memoryUsedBytes))
-        .foldLeft((0L, 0L)) { case ((r, b), (r2, b2)) => (r max r2, b max b2) }
-      q.stop()
-      println(f"""{"metric":"deep_state_bench","variant":"$name","keys":$keys,""" +
-        f""""records":$n,"batch":$batchSize,"sec":$secs%.2f,"records_out":$emitted,""" +
-        f""""max_state_rows":$maxRows,"max_state_bytes":$maxBytes}""")
-    }
-
-    // SPARK_GRAFT_VARIANT=v1|v2|both (default both) — the 1M-row soak
-    // runs the variants at different budgets (v1's per-batch Map
-    // re-serialization makes deep buffers quadratic in wall time)
-    val variant = sys.env.getOrElse("SPARK_GRAFT_VARIANT", "both")
-    if (variant != "v2")
-      run("faithful_v1", ds => StreamingReorder.faithful(ds, graceMs).toDF())
-    if (variant != "v1")
-      run("faithful_v2", ds => StreamingReorder.faithfulV2(ds, graceMs).toDF())
-  }
 
   /** Fact row for the as-of throughput bench (events-table shape). */
   final case class AFact(k: String, ts: Long, tb: Long, v: Double)
@@ -96,7 +33,7 @@ object StreamBench {
     * in event-time order through [[graft.streaming.StreamingAsOf.join]]
     * (10 s watermark delay). Reports end-to-end records/second.
     *
-    * Run: SPARK_GRAFT_ASOF=1 runMain graft.tools.StreamBench
+    * Run: runMain graft.tools.StreamBench asof
     */
   private def asofBench(spark: SparkSession, sfDir: String,
       batchSize: Int): Unit = {
@@ -138,7 +75,7 @@ object StreamBench {
     * records/second (the write path a 100 TB/day stream must sustain —
     * per batch one map-side-combined sketch agg, groups-sized append).
     *
-    * Run: SPARK_GRAFT_SKETCH_SINK=1 runMain graft.tools.StreamBench
+    * Run: runMain graft.tools.StreamBench sketch-sink
     */
   private def sketchSinkBench(spark: SparkSession, sfDir: String,
       batchSize: Int): Unit = {
@@ -185,10 +122,10 @@ object StreamBench {
     * (every bucket hot), which is the expensive regime: retained-list
     * compares grow with bucket occupancy.
     *
-    * Run: SPARK_GRAFT_NEARDEDUP=1 runMain graft.tools.StreamBench
+    * Run: runMain graft.tools.StreamBench neardedup[:<stage>]
     *
-    * SPARK_GRAFT_NEARDEDUP_MODE isolates pipeline stages so the
-    * bottleneck can be NAMED rather than guessed (round-9 verdict #8):
+    * The stage isolates pipeline stages so the bottleneck can be NAMED
+    * rather than guessed:
     *  - `full` (default): the production two-stage pipeline;
     *  - `bands`: stop after the bucket-keyed compare (no doc combine);
     *  - `stage1`: the stateless SimHash+banding flatMap only.
@@ -204,13 +141,12 @@ object StreamBench {
     * docs/s over 20k-doc batches in the round-10 profile.
     */
   private def nearDedupBench(spark: SparkSession, sfDir: String,
-      batchSizeArg: Int): Unit = {
+      batchSizeArg: Int, mode: String): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingNearDedup
     import graft.streaming.StreamingNearDedup.NearDupDoc
     val copies = sys.env.getOrElse("SPARK_GRAFT_DEDUP_COPIES", "20").toInt
-    val mode = sys.env.getOrElse("SPARK_GRAFT_NEARDEDUP_MODE", "full")
     val texts = graft.Tables.documents(spark, sfDir)
       .select($"doc_id", $"text").as[(Long, String)].collect()
     val base = 1700000000000L
@@ -279,13 +215,13 @@ object StreamBench {
     * it, the gate's survival fraction — the volume the gate saves the
     * stateful stages is the composition's scale argument.
     *
-    * Run: SPARK_GRAFT_INGEST=1 runMain graft.tools.StreamBench
+    * Run: runMain graft.tools.StreamBench ingest[:trio]
     * (honors SPARK_GRAFT_NEARDEDUP_TUNED=1 for the single-maximal-batch
-    * shape; batch-size arg as usual; SPARK_GRAFT_INGEST_TRIO=1 composes
-    * the decontamination stage in — the registered trio.)
+    * shape; batch-size arg as usual; `ingest:trio` composes the
+    * decontamination stage in — the registered trio.)
     */
   private def ingestBench(spark: SparkSession, sfDir: String,
-      batchSizeArg: Int): Unit = {
+      batchSizeArg: Int, trio: Boolean): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.LogReg
@@ -317,13 +253,12 @@ object StreamBench {
     val graceMs = 10L * 60 * 1000
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // SPARK_GRAFT_INGEST_TRIO=1 runs the FULL registered composition
-    // (gate → decontaminate → near-dedup) instead of the duo — the
+    // the trio runs the FULL registered composition (gate →
+    // decontaminate → near-dedup) instead of the duo — the
     // decontamination stage is a stateless broadcast-literal filter
     // (bench shingles collected ONCE, outside the timed window, the
     // once-per-model-release contract), so the duo-vs-trio delta
     // measures exactly what that stage costs at ingest
-    val trio = sys.env.get("SPARK_GRAFT_INGEST_TRIO").contains("1")
     val benchShingles = if (trio)
       graft.streaming.StreamingCuration.benchShingleHashes(
         docs.filter(org.apache.spark.sql.functions.col("doc_id") % 97 === 0),
@@ -369,7 +304,7 @@ object StreamBench {
     * gate → fingerprint → stream-static probe → watermark combine
     * chain. Reports end-to-end docs/second plus the admission split.
     *
-    * Run: SPARK_GRAFT_ADMISSION=1 runMain graft.tools.StreamBench
+    * Run: runMain graft.tools.StreamBench admission
     * (SPARK_GRAFT_DEDUP_COPIES for volume; SPARK_GRAFT_NEARDEDUP_TUNED=1
     * for the single-maximal-batch production configuration).
     */
@@ -438,11 +373,26 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
+    val usage = "usage: StreamBench asof|sketch-sink|neardedup[:full|:bands|:stage1]" +
+      "|ingest[:trio]|admission [batch size]"
+    val bench: (SparkSession, String, Int) => Unit = args.headOption match {
+      case Some("asof") => asofBench
+      case Some("sketch-sink") => sketchSinkBench
+      case Some("neardedup" | "neardedup:full") => nearDedupBench(_, _, _, "full")
+      case Some("neardedup:bands") => nearDedupBench(_, _, _, "bands")
+      case Some("neardedup:stage1") => nearDedupBench(_, _, _, "stage1")
+      case Some("ingest") => ingestBench(_, _, _, trio = false)
+      case Some("ingest:trio") => ingestBench(_, _, _, trio = true)
+      case Some("admission") => admissionBench
+      case _ => throw new IllegalArgumentException(usage)
+    }
+    require(args.length <= 2, usage)
+    val batchSize = args.lift(1).map(_.toInt).getOrElse(20000)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // state partitioning: per-batch overhead is proportional to the number
     // of state stores committed each micro-batch, so size it to the
-    // keyspace/throughput, not the core count (150 users here -> 8)
+    // keyspace/throughput, not the core count
     val statePartitions = sys.env.getOrElse("SPARK_GRAFT_STATE_PARTS", "8")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -452,77 +402,7 @@ object StreamBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LocalCheckpointFileManager.install(spark)
-    import spark.implicits._
-
-    if (sys.env.get("SPARK_GRAFT_DEEP").contains("1")) {
-      deepBench(spark, args.headOption.map(_.toInt).getOrElse(5000))
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_ASOF").contains("1")) {
-      asofBench(spark, sfDir, args.headOption.map(_.toInt).getOrElse(20000))
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_SKETCH_SINK").contains("1")) {
-      sketchSinkBench(spark, sfDir, args.headOption.map(_.toInt).getOrElse(20000))
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_NEARDEDUP").contains("1")) {
-      nearDedupBench(spark, sfDir, args.headOption.map(_.toInt).getOrElse(20000))
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_INGEST").contains("1")) {
-      ingestBench(spark, sfDir, args.headOption.map(_.toInt).getOrElse(20000))
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_ADMISSION").contains("1")) {
-      admissionBench(spark, sfDir, args.headOption.map(_.toInt).getOrElse(20000))
-      spark.stop()
-      return
-    }
-
-    // events -> ElectronicOrder shape (ts -> epoch millis event time)
-    val orders = graft.Tables.events(spark, sfDir)
-      .selectExpr("cast(event_id as string) AS order_id",
-        "cast(user_id as string) AS electronic_id",
-        "event_type AS user_id", "value AS price",
-        "unix_micros(ts) div 1000 AS time")
-      .as[ElectronicOrder].collect()
-
-    implicit val sqlCtx = spark.sqlContext
-    val batchSize = args.headOption.map(_.toInt).getOrElse(20000)
-
-    def run(name: String, mk: org.apache.spark.sql.Dataset[ElectronicOrder] =>
-        org.apache.spark.sql.DataFrame): Unit = {
-      val input = MemoryStream[ElectronicOrder]
-      val q = mk(input.toDS())
-        .writeStream.format("memory").queryName(s"sb_$name")
-        .outputMode(OutputMode.Append).start()
-      val t0 = System.nanoTime()
-      orders.grouped(batchSize).foreach { b => input.addData(b); q.processAllAvailable() }
-      q.processAllAvailable()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val emitted = spark.table(s"sb_$name").count()
-      q.stop()
-      println(f"""{"metric":"stream_reorder_throughput","variant":"$name","batch":$batchSize,""" +
-        f""""records_in":${orders.length},"records_out":$emitted,"sec":$secs%.2f,""" +
-        f""""records_per_sec":${(orders.length / secs).toLong}}""")
-    }
-
-    // grace controls buffer size: at 1 h buffers stay small (per-batch
-    // overhead dominates); raise SPARK_GRAFT_GRACE_H to compare the v1
-    // whole-buffer-rewrite cost against v2's per-entry puts at depth
-    val graceMs = sys.env.getOrElse("SPARK_GRAFT_GRACE_H", "1").toLong * 3600L * 1000
-    run("faithful", ds => StreamingReorder.faithful(ds, graceMs).toDF())
-    run("idiomatic", ds => StreamingReorder.idiomatic(ds, graceMs))
-    // v2 requires the RocksDB provider (transformWithState's native store)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    run("faithful_v2", ds => StreamingReorder.faithfulV2(ds, graceMs).toDF())
-    spark.stop()
+    try bench(spark, sfDir, batchSize)
+    finally spark.stop()
   }
 }

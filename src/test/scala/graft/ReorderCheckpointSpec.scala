@@ -31,8 +31,7 @@ class ReorderCheckpointSpec extends SparkTestBase {
   /** RocksDB state with changelog checkpointing and no snapshot uploads in
     * these short runs, so a restart replays every changelog. */
   private val rocksDb = Seq(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+    RocksDbStateStore,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> Some("true"),
     "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> Some("1000"))
 

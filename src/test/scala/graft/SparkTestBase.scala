@@ -25,6 +25,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     dir.toString
   }
 
+  /** The RocksDB state store provider, for [[withConf]]. */
+  protected val RocksDbStateStore: (String, Option[String]) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
   /** Runs `body` with each key set to its value (`None`: unset), then
     * restores the session's previous settings. */
   protected def withConf[T](kvs: (String, Option[String])*)(body: => T): T = {

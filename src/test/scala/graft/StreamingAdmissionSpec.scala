@@ -93,10 +93,7 @@ class StreamingAdmissionSpec extends SparkTestBase {
     assert(sentinelGate == sentinels.map(_._1).toSet,
       "sentinels must pass the trained gate")
 
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[(Long, String, Long)]
       val q = StreamingAdmission.admit(
@@ -135,9 +132,6 @@ class StreamingAdmissionSpec extends SparkTestBase {
             s"reason mismatch for $id: streamed ($ex,$nr) vs batch ${batchFlags(id)}")
         }
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

@@ -77,10 +77,7 @@ class StreamingCurationSpec extends SparkTestBase {
         "sentinel text must not near-match any gated doc")
     }
 
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[(Long, String, Long)]
       val q = StreamingCuration.curate(
@@ -107,9 +104,6 @@ class StreamingCurationSpec extends SparkTestBase {
           s"stream-only: ${(streamedKept -- batchKept).take(5)}, " +
             s"batch-only: ${(batchKept -- streamedKept).take(5)}")
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -160,10 +154,7 @@ class StreamingCurationSpec extends SparkTestBase {
     assert(sentinelSurvive == sentinels.map(_._1).toSet,
       "sentinels must pass the gate AND the decontamination filter")
 
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[(Long, String, Long)]
       val q = StreamingCuration.curateDecontaminated(
@@ -186,9 +177,6 @@ class StreamingCurationSpec extends SparkTestBase {
           s"stream-only: ${(streamedKept -- batchKept).take(5)}, " +
             s"batch-only: ${(batchKept -- streamedKept).take(5)}")
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -228,10 +216,7 @@ class StreamingCurationSpec extends SparkTestBase {
     }
 
     // transformWithState needs column families — RocksDB provider only
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       implicit val sqlCtx = spark.sqlContext
       val ckpt = tempDir("graft-curate-ckpt")
       val input = MemoryStream[(Long, String, Long)]
@@ -275,9 +260,6 @@ class StreamingCurationSpec extends SparkTestBase {
           s"stream-only: ${(streamedKept -- batchKept).take(5)}, " +
             s"batch-only: ${(batchKept -- streamedKept).take(5)}")
       } finally q2.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

@@ -34,10 +34,7 @@ class StreamingNearDedupSpec extends SparkTestBase {
 
   private def runStream(batches: Seq[Seq[NearDupDoc]], retainMs: Long,
       name: String): Map[Long, (Boolean, Option[Long])] = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[NearDupDoc]
       val q = StreamingNearDedup.nearDedup(input.toDS(), Grace, retainMs)
@@ -52,9 +49,6 @@ class StreamingNearDedupSpec extends SparkTestBase {
             (r.getBoolean(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
           .toMap
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 

@@ -3,6 +3,7 @@ package graft
 import graft.io.AvroCodec
 import graft.model.ElectronicOrder
 import graft.streaming.StreamingReorder
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -152,25 +153,16 @@ class StreamingReorderSpec extends SparkTestBase {
   }
 
   test("faithful operator runs on the RocksDB state store provider") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       val out = runFaithful(Seq(fixture), "rocksdb_golden")
       assert(out.map(_.order_id) == goldenOrder,
         "same golden output when state lives in RocksDB (the reference's store engine)")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("faithfulV2 (transformWithState) reproduces the golden output on RocksDB") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbStateStore) {
       val input = MemoryStream[ElectronicOrder]
       val q = StreamingReorder.faithfulV2(input.toDS(), GraceMs)
         .writeStream.format("memory").queryName("v2_golden")
@@ -187,10 +179,54 @@ class StreamingReorderSpec extends SparkTestBase {
         assert(out.map(_.key) == fixture.map(_.time).sorted.map(ti => s"key-$ti"), "S4 keys")
         assert(out.map(_.flush_time).distinct.forall(_ > 0), "S5 stamps present")
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+  }
+
+  /** Runs `op` over `batches` (one micro-batch each) and returns the
+    * emitted rows by batch id, each batch's rows sorted. */
+  private def rowsByBatch(op: Dataset[ElectronicOrder] => DataFrame,
+      batches: Seq[Seq[ElectronicOrder]],
+      noDataBatches: Boolean): Map[Long, Seq[StreamingReorder.Reordered]] = {
+    implicit val sqlCtx = spark.sqlContext
+    withConf(RocksDbStateStore,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> Some(noDataBatches.toString)) {
+      val input = MemoryStream[ElectronicOrder]
+      val out = scala.collection.concurrent.TrieMap.empty[Long, Seq[StreamingReorder.Reordered]]
+      val q = op(input.toDS())
+        .select("key", "order_id", "electronic_id", "user_id", "price", "time", "flush_time")
+        .writeStream.outputMode(OutputMode.Append)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val rows = batch.as[StreamingReorder.Reordered].collect().toSeq
+          if (rows.nonEmpty) out(id) = rows.sortBy(r => (r.electronic_id, r.time))
+          ()
+        }.start()
+      try {
+        batches.foreach { b => input.addData(b); q.processAllAvailable() }
+        out.toMap
+      } finally q.stop()
+    }
+  }
+
+  private val HotGraceMs = 2L * 3600 * 1000
+  private val v1 = (ds: Dataset[ElectronicOrder]) =>
+    StreamingReorder.faithful(ds, HotGraceMs).toDF()
+  private val v2 = (ds: Dataset[ElectronicOrder]) =>
+    StreamingReorder.faithfulV2(ds, HotGraceMs).toDF()
+
+  test("faithful flushes a key that has data in every micro-batch") {
+    // Spark fires a timeout only for a key WITHOUT data in the batch, so a
+    // hot key must flush from its data call once the watermark is past
+    // oldest + grace. One record per hour, one batch each, grace 2 h: the
+    // watermark in batch b is (b - 3) h, past 0 h + 2 h first in batch 6.
+    val base = t("2021-11-04T00:00:00Z")
+    val batches = (0 until 12).map(i =>
+      Seq(ElectronicOrder(s"o$i", "hot", s"u$i", i.toDouble, base + i * 3600L * 1000)))
+    val expected = Map(6L -> (0 to 6).map { i =>
+      StreamingReorder.Reordered(s"key-${base + i * 3600L * 1000}", s"o$i", "hot", s"u$i",
+        i.toDouble, base + i * 3600L * 1000, base + 3 * 3600L * 1000)
+    })
+    assert(rowsByBatch(v1, batches, noDataBatches = false) == expected)
+    assert(rowsByBatch(v2, batches, noDataBatches = false) == expected)
   }
 
   test("documented divergence (SURVEY S1/7.4): disorder beyond grace is dropped, not re-buffered") {
@@ -324,6 +360,56 @@ class StreamingReorderSpec extends SparkTestBase {
         // per flush epoch emission is chronological; with bounded disorder
         // the concatenation of epochs must also be per-key monotone
         assert(times == times.sorted, s"seed=$seed key=$k out of order: $times")
+      }
+    }
+  }
+
+  test("randomized streams: faithfulV2 emits faithful's rows batch for batch") {
+    // seeded streams with disorder within grace, duplicate timestamps, a
+    // hot key with data in every batch, records later than grace, and an
+    // event-time jump of three graces after which stragglers arrive
+    // already past their flush mark; v1 is the oracle, every field
+    // compared, flush_time included, with no-data micro-batches off (the
+    // benchmark's setting) and on. Times fall on 10-minute steps, so the
+    // watermark often lands exactly on a buffer's oldest + grace.
+    val hourMs = 3600L * 1000
+    val stepMs = 10L * 60 * 1000
+    (0 until 3).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val base = t("2021-11-03T00:00:00Z")
+      val sent = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      var n = 0
+      def order(key: String, time: Long): ElectronicOrder = {
+        n += 1
+        sent += key -> time
+        ElectronicOrder(s"o$seed-$n", key, s"u$n", n.toDouble, time)
+      }
+      val batches = (0 until 14).map { b =>
+        val now = base + b * hourMs + (if (b >= 8) 3 * HotGraceMs else 0L)
+        def recent(key: String) = order(key, now - rnd.nextInt(11) * stepMs)
+        val hot = Seq.fill(1 + rnd.nextInt(3))(recent("hot"))
+        val cold = Seq.fill(rnd.nextInt(2))(recent(s"k${rnd.nextInt(3)}"))
+        val dup = if (sent.nonEmpty && rnd.nextInt(3) == 0) {
+          val (k, tm) = sent(rnd.nextInt(sent.size))
+          Seq(order(k, tm))
+        } else Nil
+        val late = if (b >= 4 && (b == 9 || rnd.nextInt(4) == 0))
+          Seq(order(s"k${rnd.nextInt(3)}", now - 3 * HotGraceMs - rnd.nextInt(6) * stepMs))
+        else Nil
+        rnd.shuffle(hot ++ cold ++ dup ++ late)
+      }
+      val arrival = batches.zipWithIndex
+        .flatMap { case (b, i) => b.map(_.order_id -> i.toLong) }.toMap
+      Seq(false, true).foreach { noData =>
+        val want = rowsByBatch(v1, batches, noData)
+        val got = rowsByBatch(v2, batches, noData)
+        assert(want.values.map(_.size).sum > 0, s"seed=$seed noData=$noData: nothing flushed")
+        assert(want.values.exists(_.exists(_.electronic_id == "hot")),
+          s"seed=$seed noData=$noData: the hot key never flushed")
+        if (!noData)
+          assert(want.exists { case (id, rows) => rows.exists(r => arrival(r.order_id) == id) },
+            s"seed=$seed: no record flushed in the batch it arrived")
+        assert(got == want, s"seed=$seed noData=$noData: v1 $want\nv2 $got")
       }
     }
   }
