@@ -112,6 +112,49 @@ object AvroOrderWire {
     out.toByteArray
   }
 
+  /** `prefix` followed by each order's Avro binary body
+    * (electronic_order.avsc, no Confluent header), in iteration order.
+    * A null string field is rejected, as the schema rejects it.
+    */
+  def appendOrders(prefix: Array[Byte], orders: Iterable[ElectronicOrder]): Array[Byte] = {
+    val out = encOutTL.get()
+    out.reset()
+    val slot = encoderTL.get()
+    val enc = EncoderFactory.get().directBinaryEncoder(out, slot(0))
+    slot(0) = enc
+    val writer = writerTL.get()
+    val rec = new GenericData.Record(schema)
+    orders.foreach { o =>
+      rec.put(0, o.order_id); rec.put(1, o.electronic_id); rec.put(2, o.user_id)
+      rec.put(3, o.price); rec.put(4, o.time)
+      writer.write(rec, enc)
+    }
+    enc.flush()
+    val tail = out.toByteArray
+    val all = java.util.Arrays.copyOf(prefix, prefix.length + tail.length)
+    System.arraycopy(tail, 0, all, prefix.length, tail.length)
+    all
+  }
+
+  /** The `n` orders of `bytes`, a concatenation of exactly `n` Avro
+    * binary bodies as [[appendOrders]] writes them.
+    */
+  def readOrders(bytes: Array[Byte], n: Int): Array[ElectronicOrder] = {
+    val slot = decoderTL.get()
+    val dec = DecoderFactory.get().binaryDecoder(bytes, 0, bytes.length, slot(0))
+    slot(0) = dec
+    val reader = readerTL.get()
+    var rec: GenericRecord = null
+    val orders = Array.fill(n) {
+      rec = reader.read(rec, dec)
+      ElectronicOrder(rec.get(0).toString, rec.get(1).toString, rec.get(2).toString,
+        rec.get(3).asInstanceOf[Double], rec.get(4).asInstanceOf[Long])
+    }
+    if (!dec.isEnd) throw new IllegalStateException(
+      s"${bytes.length} bytes hold more than $n ElectronicOrder bodies")
+    orders
+  }
+
   def decode(value: Column, framed: Boolean): Column =
     ColumnBridge.column(AvroOrderDecode(ColumnBridge.expression(value), framed))
 

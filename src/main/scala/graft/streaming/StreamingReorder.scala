@@ -1,5 +1,10 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
+
+import scala.collection.mutable
+
+import graft.functions.AvroOrderWire
 import graft.model.ElectronicOrder
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
@@ -12,10 +17,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   *
   * Four entry points:
   *  - [[faithful]]: `flatMapGroupsWithState` with an event-time timeout;
-  *    a per-key buffer (first-wins insert, S3) flushed whole and in
-  *    ascending event time in the first micro-batch whose watermark has
-  *    passed the oldest buffered event time + grace, whether or not the
-  *    key has data in that batch.
+  *    a per-key buffer of Avro bytes ([[BufferState]], first-wins insert,
+  *    S3) flushed whole and in ascending event time in the first
+  *    micro-batch whose watermark has passed the oldest buffered event
+  *    time + grace, whether or not the key has data in that batch.
   *  - [[withLateOutput]]: no watermark; fixed stream-time punctuation, so
   *    records beyond the grace period are re-buffered, never dropped (S1).
   *  - [[faithfulV2]]: [[faithful]]'s output, batch for batch, on
@@ -53,28 +58,78 @@ object StreamingReorder extends Serializable {
   final case class Reordered(key: String, order_id: String, electronic_id: String,
       user_id: String, price: Double, time: Long, flush_time: Long)
 
-  /** Per-key reorder buffer; public because Spark's generated encoder
-    * code must reach the accessor.
+  /** [[faithful]]'s per-key reorder buffer, in arrival order: `times`
+    * holds the buffered event times as 8-byte big-endian longs, `orders`
+    * the records as concatenated Avro binary bodies of
+    * electronic_order.avsc without a Confluent header (the reference's
+    * store holds `SpecificAvroSerde` bytes, Application.java:132-138). A
+    * batch decodes only `times`; `orders` is decoded when the buffer
+    * flushes.
+    *
+    * Every field of a state row is binary or primitive. Spark converts a
+    * `Map`, `Seq` or primitive-array field through a lambda whose id
+    * lands in the generated converter's names; each micro-batch re-plans
+    * the operator with new ids, so the converter would be recompiled every
+    * batch (`StreamingReorderSpec` guards this). Public because Spark's
+    * generated encoder code must reach the accessors.
     */
-  final case class BufferState(buffer: Map[Long, ElectronicOrder])
+  final case class BufferState(times: Array[Byte], orders: Array[Byte])
 
-  /** [[withLateOutput]]'s state: the buffer, this key's stream time (max
-    * event time seen — replacing the engine watermark so nothing is ever
-    * dropped as late), and the next stream-time punctuation deadline
-    * (Kafka Streams' `context.schedule(grace, STREAM_TIME, …)` fires on a
-    * fixed stream-time interval, not relative to the oldest buffered
-    * record).
+  /** [[withLateOutput]]'s state: the buffer (as in [[BufferState]]), this
+    * key's stream time (max event time seen — replacing the engine
+    * watermark so nothing is ever dropped as late), and the next
+    * stream-time punctuation deadline (Kafka Streams'
+    * `context.schedule(grace, STREAM_TIME, …)` fires on a fixed stream-time
+    * interval, not relative to the oldest buffered record).
     */
-  final case class LateState(buffer: Map[Long, ElectronicOrder],
+  final case class LateState(times: Array[Byte], orders: Array[Byte],
       streamTime: Long, nextPunctuate: Long)
 
-  /** S1/S2 whole-buffer ordered flush, re-keyed (S4), stamped with the
-    * punctuation stream time (S5).
+  /** A buffer after a batch's insert; `oldest` is its oldest event time,
+    * `Long.MaxValue` when it is empty. */
+  private final case class Buffer(times: Array[Byte], orders: Array[Byte], oldest: Long) {
+    def decode: Array[ElectronicOrder] = AvroOrderWire.readOrders(orders, times.length / 8)
+  }
+
+  /** S3 first-wins insert: appends, in arrival order, each row whose
+    * event time is neither buffered nor taken by an earlier row of
+    * `rows`. Reads `times`, never `orders`.
     */
-  private def flushBuffer(buf: Map[Long, ElectronicOrder],
+  private def insert(times: Array[Byte], orders: Array[Byte],
+      rows: Seq[ElectronicOrder]): Buffer = {
+    val taken = mutable.HashSet.empty[Long]
+    val fresh = rows.filter(o => taken.add(o.time))
+    val freshTimes = fresh.map(_.time).toArray
+    java.util.Arrays.sort(freshTimes)
+    val held = new Array[Boolean](freshTimes.length)
+    val in = ByteBuffer.wrap(times)
+    var oldest = Long.MaxValue
+    var i = 0
+    while (i < times.length) {
+      val t = in.getLong(i)
+      if (t < oldest) oldest = t
+      val j = java.util.Arrays.binarySearch(freshTimes, t)
+      if (j >= 0) held(j) = true
+      i += 8
+    }
+    val kept = fresh.filterNot(o => held(java.util.Arrays.binarySearch(freshTimes, o.time)))
+    if (kept.isEmpty) Buffer(times, orders, oldest)
+    else {
+      val grown = ByteBuffer.allocate(times.length + 8 * kept.size).put(times)
+      kept.foreach { o => grown.putLong(o.time); if (o.time < oldest) oldest = o.time }
+      Buffer(grown.array, AvroOrderWire.appendOrders(orders, kept), oldest)
+    }
+  }
+
+  /** S1/S2 whole-buffer flush in ascending event time, re-keyed (S4),
+    * stamped with the punctuation stream time (S5). Event times are
+    * unique within a buffer (S3).
+    */
+  private def flushBuffer(orders: Array[ElectronicOrder],
       flushTime: Long): Iterator[Reordered] =
-    buf.toSeq.sortBy(_._1).iterator.map { case (t, o) =>
-      Reordered(s"key-$t", o.order_id, o.electronic_id, o.user_id, o.price, t, flushTime)
+    orders.sortBy(_.time).iterator.map { o =>
+      Reordered(s"key-${o.time}", o.order_id, o.electronic_id, o.user_id, o.price, o.time,
+        flushTime)
     }
 
   /** The faithful operator. `orders` must be a streaming Dataset. */
@@ -87,14 +142,11 @@ object StreamingReorder extends Serializable {
     // batch, so a key with data in every batch must be flushed here too.
     def fn(key: String, rows: Iterator[ElectronicOrder],
         state: GroupState[BufferState]): Iterator[Reordered] = {
-      var buf = state.getOption.map(_.buffer).getOrElse(Map.empty)
-      rows.foreach { o =>
-        // S3: first-wins — drop if this event time is already buffered
-        if (!buf.contains(o.time)) buf += o.time -> o
-      }
+      val held = state.getOption.getOrElse(BufferState(Array.emptyByteArray, Array.emptyByteArray))
+      val buf = insert(held.times, held.orders, rows.toSeq)
       // the stream-time punctuation mark for this epoch: the oldest
       // buffered event + grace
-      val flushMark = buf.keys.min + graceMs
+      val flushMark = buf.oldest + graceMs
       val watermark = state.getCurrentWatermarkMs()
       if (flushMark < watermark) {
         // punctuation analog: whole-store ordered flush (Application.java:72-83).
@@ -104,9 +156,9 @@ object StreamingReorder extends Serializable {
         // S5: stamp with the engine's stream-time clock, the watermark,
         // playing the punctuation timestamp's role (Application.java:77)
         state.remove()
-        flushBuffer(buf, watermark)
+        flushBuffer(buf.decode, watermark)
       } else {
-        state.update(BufferState(buf))
+        state.update(BufferState(buf.times, buf.orders))
         // fires in the first batch without data for this key whose
         // watermark is past the mark
         state.setTimeoutTimestamp(flushMark)
@@ -169,23 +221,21 @@ object StreamingReorder extends Serializable {
       if (ttlOn && state.hasTimedOut) {
         // idle past TTL: drop the state row only if nothing is buffered;
         // a buffered tail must keep waiting for successor data (S6)
-        if (state.get.buffer.isEmpty) state.remove()
+        if (state.get.times.isEmpty) state.remove()
         else state.setTimeoutDuration(idleStateTtlMs)
         return Iterator.empty
       }
-      val st = state.getOption.getOrElse(LateState(Map.empty, Long.MinValue, Long.MinValue))
-      var buf = st.buffer
-      var streamTime = st.streamTime
-      rows.foreach { o =>
-        if (!buf.contains(o.time)) buf += o.time -> o // S3: first-wins
-        if (o.time > streamTime) streamTime = o.time
-      }
+      val st = state.getOption.getOrElse(
+        LateState(Array.emptyByteArray, Array.emptyByteArray, Long.MinValue, Long.MinValue))
+      val batch = rows.toSeq
+      val buf = insert(st.times, st.orders, batch)
+      val streamTime = batch.foldLeft(st.streamTime)((m, o) => math.max(m, o.time))
       // arm the first punctuation at first-observed stream time + grace
       // (the batch's min event time, so the anchor does not depend on
       // row order within the micro-batch)
       val armed =
         if (st.nextPunctuate != Long.MinValue) st.nextPunctuate
-        else if (buf.nonEmpty) buf.keys.min + graceMs
+        else if (buf.times.nonEmpty) buf.oldest + graceMs
         else Long.MinValue
       if (armed != Long.MinValue && streamTime >= armed) {
         // stream-time punctuation: whole-store ordered flush (S1/S2),
@@ -195,11 +245,11 @@ object StreamingReorder extends Serializable {
         val next =
           if (armed + graceMs > streamTime) armed + graceMs
           else streamTime + graceMs
-        state.update(LateState(Map.empty, streamTime, next))
+        state.update(LateState(Array.emptyByteArray, Array.emptyByteArray, streamTime, next))
         if (ttlOn) state.setTimeoutDuration(idleStateTtlMs)
-        flushBuffer(buf, streamTime)
+        flushBuffer(buf.decode, streamTime)
       } else {
-        state.update(LateState(buf, streamTime, armed))
+        state.update(LateState(buf.times, buf.orders, streamTime, armed))
         if (ttlOn) state.setTimeoutDuration(idleStateTtlMs)
         Iterator.empty
       }
@@ -216,10 +266,9 @@ object StreamingReorder extends Serializable {
     * API — the same rows in the same micro-batches (`StreamingReorderSpec`
     * pins this, `flush_time` included), different state mechanics:
     *  - the reorder buffer is a [[MapState]] keyed by event time, so a
-    *    batch's inserts are per-entry RocksDB puts instead of
-    *    re-serializing the whole buffer Map on every
-    *    `GroupState.update` (the v1 API's per-batch serde cost is
-    *    O(buffer), v2's is O(new records));
+    *    batch's inserts are per-entry RocksDB puts, where v1 rewrites
+    *    each key's one buffer row (its bytes copied, not re-encoded) on
+    *    every `GroupState.update`;
     *  - the flush is an explicit event-time TIMER at `oldest + grace + 1`
     *    (a timer fires once the watermark reaches it, a v1 timeout once
     *    the watermark passes it), lowered when an older record arrives
@@ -236,24 +285,21 @@ object StreamingReorder extends Serializable {
     * follow the reorder in the same query, grouping by flush time;
     * `StreamingComposeSpec` pins reorder → tumbling count.
     *
-    * Measured with checkpoint files written through
-    * [[graft.io.LocalCheckpointFileManager]] (4 vCPU, alternating pairs):
-    * with shallow buffers v2 is SLOWER — on perfbench's `reorder_replay`
-    * (1,500 Zipf keys, 500-record batches) its `batch_ms_p50` read 21%
-    * above [[faithful]]'s (4-pair median 326 → 395 ms, slower in 4 of 4)
-    * and `pass_s` 27% above; per traced round it does about 3.9× the
-    * RocksDB puts and gets (56,742 / 93,099 against 14,597 / 24,161).
-    * On `reorder_deep` (8 keys, ~10k buffered entries per key,
-    * 1,000-record batches) `batch_ms_p50` read 8% below (406 → 371 ms,
-    * faster in 2 of 3) but `pass_s` 14% above. With deeper buffers still
-    * (4 keys × 200k records, see SCALE.md's deep-buffer table) v2 was
-    * 24% faster end-to-end and the whole gap was serde. The
-    * O(buffer) → O(inserts) asymmetry matters when per-key buffers are
-    * deep relative to per-batch inserts (a real grace window over
-    * high-rate keys); v1 additionally holds each key's buffer as ONE
-    * state row, which is what stalls when a single key buffers a whole
-    * grace window. Requires the RocksDB state store provider (the v2
-    * API's native store); [[faithful]] remains for memory-provider
+    * Measured on perfbench (4 vCPU, 4 alternating pairs per workload),
+    * v2 is SLOWER than [[faithful]] with its buffer held as Avro bytes.
+    * On `reorder_replay` (1,500 Zipf keys, 500-record batches) v2's
+    * `batch_ms_p50` read 78% above (median 204 → 365 ms, slower in 4 of
+    * 4) and `pass_s` 74% above; per traced round it does about 3.9× the
+    * RocksDB puts and gets. On `reorder_deep` (8 keys, ~10k buffered
+    * entries per key, 1,000-record batches) it read 48% above (239 →
+    * 354 ms, 4 of 4) and `pass_s` 61% above. v1 still rewrites each
+    * key's buffer row every batch, but as a byte copy, with no per-entry
+    * serde and no per-batch compile. With much deeper buffers (4 keys ×
+    * 200k records, SCALE.md's deep-buffer table, measured while v1 held
+    * a `Map`) v2 was 24% faster end to end. v1 holds each key's buffer
+    * as ONE state row, which is what stalls when a single key buffers a
+    * whole grace window. Requires the RocksDB state store provider (the
+    * v2 API's native store); [[faithful]] remains for memory-provider
     * deployments.
     */
   def faithfulV2(orders: Dataset[ElectronicOrder], graceMs: Long): Dataset[ReorderedEt] = {
@@ -319,7 +365,7 @@ object StreamingReorder extends Serializable {
       // punctuation analog: whole-store ordered flush (S1/S2), stamped
       // with the engine's stream-time clock (S5); state fully cleared so
       // idle keys hold no store space
-      val buf = buffer.iterator().map { case (t, o) => t -> o }.toMap
+      val buf = buffer.values().toArray
       buffer.clear()
       flushAt.clear()
       val flushTime = timers.getCurrentWatermarkInMs()

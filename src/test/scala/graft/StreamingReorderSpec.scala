@@ -1,12 +1,19 @@
 package graft
 
+import java.lang.Double.doubleToRawLongBits
+import java.nio.file.{Files, Paths}
+
 import graft.io.AvroCodec
 import graft.model.ElectronicOrder
 import graft.streaming.StreamingReorder
+import graft.streaming.StreamingReorder.{BufferState, LateState, Reordered}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.objects.LambdaVariable
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryException, Trigger}
 
 /** Port of the reference's golden topology test
   * (ApplicationTest.java:28-128) onto MemoryStream + memory sink, plus the
@@ -295,9 +302,21 @@ class StreamingReorderSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[ElectronicOrder]
     val ttlMs = 1000L
+    // one batch per 500 ms tick, so the query can be stopped between
+    // sweep batches instead of in the middle of a state commit
     val q = StreamingReorder.withLateOutput(input.toDS(), GraceMs, idleStateTtlMs = ttlMs)
       .writeStream.format("memory").queryName("late_ttl")
+      .trigger(Trigger.ProcessingTime("500 milliseconds"))
       .outputMode(OutputMode.Append).start()
+    /** Stops `q` right after a batch has ended, while it waits for the
+      * next tick. */
+    def stopBetweenBatches(): Unit = {
+      val last = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+      val deadline = System.currentTimeMillis() + 30000
+      def ended = Option(q.lastProgress).exists(_.batchId > last) && !q.status.isTriggerActive
+      while (q.isActive && !ended && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      q.stop()
+    }
     try {
       def stateRows: Long = q.recentProgress.reverse.iterator
         .flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
@@ -328,7 +347,7 @@ class StreamingReorderSpec extends SparkTestBase {
       assert(byKey("one").map(_.order_id) == goldenOrder)
       assert(byKey("idle").map(_.order_id) == goldenOrder.map("i" + _))
       assert(!byKey.contains("hold"), "sub-grace tail must stay buffered through the TTL sweep")
-    } finally q.stop()
+    } finally stopBetweenBatches()
   }
 
   test("randomized streams: faithful output equals batch reorder+dedup per key") {
@@ -424,5 +443,175 @@ class StreamingReorderSpec extends SparkTestBase {
     // first field is an empty string also starts with 0x00
     val empty = ElectronicOrder("", "HDTV", "u1", 9.99, 1000L)
     assert(AvroCodec.decode(AvroCodec.encode(empty)) == empty)
+  }
+
+  // ---- the buffer's state layout ----------------------------------------
+
+  test("the reorder state rows hold only binary and primitive fields") {
+    // a Map, Seq or primitive-array field deserializes through a lambda
+    // whose id lands in the generated code's names: a new id, and so a
+    // new Janino compile, in every micro-batch
+    def lambda(enc: ExpressionEncoder[_]) =
+      enc.resolveAndBind().objDeserializer.find(_.isInstanceOf[LambdaVariable])
+    assert(lambda(ExpressionEncoder[BufferState]()).isEmpty)
+    assert(lambda(ExpressionEncoder[LateState]()).isEmpty)
+    assert(lambda(ExpressionEncoder[Tuple1[Array[Long]]]()).nonEmpty,
+      "the guard must see the lambda of an Array[Long] field")
+  }
+
+  test("faithful compiles no code in batches that leave the watermark unchanged") {
+    implicit val sqlCtx = spark.sqlContext
+    withConf(RocksDbStateStore) {
+      val input = MemoryStream[ElectronicOrder]
+      val q = StreamingReorder.faithful(input.toDS(), GraceMs)
+        .writeStream.format("memory").queryName("no_recompile")
+        .outputMode(OutputMode.Append).start()
+      try {
+        val top = t("2021-11-04T12:00:00Z")
+        // batch 0 sets the watermark; every later record is older than
+        // `top` but within grace, so it buffers and the watermark stays
+        def batch(b: Int) = (0 until 30).map { i =>
+          val time = if (b == 0 && i == 0) top else top - (b * 30 + i + 1) * 60000L
+          ElectronicOrder(s"$b-$i", s"k${i % 3}", s"u$i", i.toDouble, time)
+        }
+        def run(b: Int): Unit = { input.addData(batch(b)); q.processAllAvailable() }
+        (0 until 4).foreach(run)
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        (4 until 10).foreach(run)
+        assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+          "a micro-batch that leaves the watermark unchanged must reuse the compiled code")
+        assert(q.recentProgress.last.stateOperators.head.numRowsTotal == 3)
+      } finally q.stop()
+    }
+  }
+
+  /** Records whose strings, prices and times stress the buffer's codec,
+    * over keys ("" among them) of which "hot" has data in every batch.
+    * Key "edge" gets event time `lo` in batch 0 and `hi` in the last
+    * batch, which moves every key's stream time, and the watermark, to
+    * `hi`. Per-key duplicates of a time lose to the first arrival: within
+    * batch 0, and across the state boundary in batch 1.
+    */
+  private def codecBatches(lo: Long, hi: Long): Seq[Seq[ElectronicOrder]] = {
+    val base = t("2021-11-04T00:00:00Z")
+    val min = 60000L
+    val b0 = Seq(
+      ElectronicOrder("", "", "", 0.0, base + 3 * min),
+      ElectronicOrder("ü-1", "", "用户", Double.NaN, base + 1 * min),
+      ElectronicOrder("dup-in-batch", "", "x", 1.0, base + 3 * min),
+      ElectronicOrder("𝄞", "ключ-🔑", "", -0.0, base + 2 * min),
+      ElectronicOrder("h0", "hot", "", Double.PositiveInfinity, base),
+      ElectronicOrder("e-lo", "edge", "é", Double.NegativeInfinity, lo))
+    val b1 = Seq(
+      ElectronicOrder("dup-across", "ключ-🔑", "x", 2.0, base + 2 * min),
+      ElectronicOrder("", "ключ-🔑", "", Double.MinPositiveValue, base + 5 * min),
+      ElectronicOrder("h1", "hot", "🔑", -1.5, base + 4 * min))
+    val b2 = Seq(ElectronicOrder("h2", "hot", "", 3.0, base + 2 * min))
+    val last = Seq("", "ключ-🔑", "hot", "edge")
+      .map(k => ElectronicOrder(s"end-$k", k, "", Double.MaxValue, hi))
+    Seq(b0, b1, b2, last)
+  }
+
+  /** Each key's flushed rows in batch order, prices as raw bits. */
+  private def emittedByKey(byBatch: Map[Long, Seq[Reordered]]) =
+    byBatch.toSeq.sortBy(_._1).flatMap(_._2).groupBy(_.electronic_id).map { case (k, rs) =>
+      k -> rs.map(r => (r.key, r.order_id, r.user_id, doubleToRawLongBits(r.price), r.time))
+    }
+
+  /** What a reorder must emit for `batches`, as [[emittedByKey]] gives
+    * it: each key's first arrival per event time, in event-time order. */
+  private def expectedByKey(batches: Seq[Seq[ElectronicOrder]]) =
+    batches.flatten.groupBy(_.electronic_id).map { case (k, os) =>
+      k -> os.groupBy(_.time).values.map(_.head).toSeq.sortBy(_.time)
+        .map(o => (s"key-${o.time}", o.order_id, o.user_id, doubleToRawLongBits(o.price), o.time))
+    }
+
+  test("faithful's buffer keeps strings, price bits, extreme times and first arrivals") {
+    // faithful's range: the first batch's watermark is 0, which drops
+    // event times at or before it, and the watermark column holds event
+    // time in microseconds
+    val batches = codecBatches(1L, Long.MaxValue / 1000)
+    val got = emittedByKey(rowsByBatch(v1, batches, noDataBatches = true))
+    val want = expectedByKey(batches)
+    // "edge" flushes its record at 1 ms alone once the watermark passes
+    // it; its record at `hi` then waits for a later watermark
+    assert(got == want.updated("edge", want("edge").take(1)))
+  }
+
+  test("withLateOutput's buffer keeps strings, price bits, extreme times and first arrivals") {
+    val late = (ds: Dataset[ElectronicOrder]) => StreamingReorder.withLateOutput(ds, GraceMs).toDF()
+    val batches = codecBatches(Long.MinValue + 1, Long.MaxValue - GraceMs)
+    val got = emittedByKey(rowsByBatch(late, batches, noDataBatches = true))
+    assert(got == expectedByKey(batches))
+  }
+
+  test("a checkpoint of the Map-state buffer fails to resume, and emits nothing") {
+    // the buffer's state layout before it held Avro bytes, and the
+    // operator that wrote it, as they were
+    val dir = tempDir("graft-old-layout")
+    val src = Paths.get(dir, "in")
+    val ckpt = Paths.get(dir, "ckpt").toString
+    Files.createDirectories(src)
+    def write(name: String, os: Seq[ElectronicOrder]): Unit = {
+      val lines = os.map(o => f"""{"order_id":"${o.order_id}","electronic_id":"${o.electronic_id}",""" +
+        f""""user_id":"${o.user_id}","price":${o.price}%.1f,"time":${o.time}}""")
+      Files.write(src.resolve(s"$name.json"), lines.mkString("\n").getBytes("UTF-8"))
+    }
+    val orders = spark.readStream.schema(ElectronicOrder.schema).json(src.toString)
+      .as[ElectronicOrder]
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Reordered]()
+    def runOnce(ds: Dataset[Reordered]): Unit = {
+      val q = ds.writeStream.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: Dataset[Reordered], _: Long) =>
+          b.collect().foreach(emitted.add); ()
+        }.start()
+      q.awaitTermination()
+    }
+    withConf(RocksDbStateStore) {
+      write("a", fixture.take(8)) // within grace: buffers, emits nothing
+      val grace = GraceMs // a local, so the function does not capture the spec
+      runOnce(orders
+        .withColumn("event_time", timestamp_millis(col("time")))
+        .withWatermark("event_time", s"$GraceMs milliseconds")
+        .as[ElectronicOrder]
+        .groupByKey(_.electronic_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+          StreamingReorderSpec.mapStateReorder(grace)))
+      assert(emitted.isEmpty)
+      write("b", fixture.drop(8)) // would flush the golden output
+      val err = intercept[StreamingQueryException] {
+        runOnce(StreamingReorder.faithful(orders, GraceMs))
+      }
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+      assert(causes.exists(_.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE")),
+        causes.mkString(" <- "))
+      assert(emitted.isEmpty, "no row may be emitted from state that was not read")
+    }
+  }
+}
+
+object StreamingReorderSpec {
+  final case class MapBufferState(buffer: Map[Long, ElectronicOrder])
+
+  /** The reorder function over a `Map` buffer, as [[StreamingReorder.faithful]]
+    * held it before its state became Avro bytes. */
+  def mapStateReorder(graceMs: Long)(key: String, rows: Iterator[ElectronicOrder],
+      state: GroupState[MapBufferState]): Iterator[Reordered] = {
+    var buf = state.getOption.map(_.buffer).getOrElse(Map.empty)
+    rows.foreach(o => if (!buf.contains(o.time)) buf += o.time -> o)
+    val flushMark = buf.keys.min + graceMs
+    val watermark = state.getCurrentWatermarkMs()
+    if (flushMark < watermark) {
+      state.remove()
+      buf.toSeq.sortBy(_._1).iterator.map { case (t, o) =>
+        Reordered(s"key-$t", o.order_id, o.electronic_id, o.user_id, o.price, t, watermark)
+      }
+    } else {
+      state.update(MapBufferState(buf))
+      state.setTimeoutTimestamp(flushMark)
+      Iterator.empty
+    }
   }
 }
