@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.io.ByteArrayOutputStream
+import java.util.Locale
 
 import graft.model.ElectronicOrder
 import org.apache.avro.Schema
@@ -204,8 +205,8 @@ case class AvroOrderEncode(child: Expression, framed: Boolean, schemaId: Int)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case s: StructType if s.length == ElectronicOrder.schema.length &&
         s.fields.map(_.dataType).sameElements(ElectronicOrder.schema.fields.map(_.dataType)) &&
-        s.fields.map(_.name.toLowerCase).sameElements(
-          ElectronicOrder.schema.fields.map(_.name.toLowerCase)) =>
+        s.fields.map(_.name.toLowerCase(Locale.ROOT)).sameElements(
+          ElectronicOrder.schema.fields.map(_.name.toLowerCase(Locale.ROOT))) =>
       TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"avro_order_encode requires an ElectronicOrder-shaped struct " +

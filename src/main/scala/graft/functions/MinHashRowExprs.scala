@@ -24,10 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  - [[ShingleHashSet]]: token array → DISTINCT word-`n`-gram xxhash64
   *    values (`Text.shinglesOfTokens` semantics incl. the short-doc
-  *    single-gram branch; grams joined with the same
-  *    `UTF8String.concatWs` the SQL `concat_ws` uses, hashed with the
-  *    same `XXH64`/seed-42 the SQL `xxhash64` uses; distinctness at the
-  *    string level, exactly like `array_distinct` before the hash).
+  *    single-gram branch; grams from [[WordNgrams.grams]], hashed with
+  *    the same `XXH64`/seed-42 the SQL `xxhash64` uses; distinctness at
+  *    the string level, exactly like `array_distinct` before the hash).
   *  - [[MinHashBandHashes]]: hash array → the `bands` LSH band hashes of
   *    the k-permutation signature (the `MinHashAgg.coefficients`
   *    sequence, same Carter–Wegman prime; band hash = xxhash64 of the
@@ -58,31 +57,15 @@ case class ShingleHashSet(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShingleHashSet {
-  private val Space = UTF8String.fromString(" ")
-
   private def xx(s: UTF8String): Long =
     XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
 
   def hashes(toks: ArrayData, n: Int): GenericArrayData = {
-    val sz = toks.numElements()
-    // distinct at the STRING level (array_distinct-before-hash parity),
-    // first-seen order; gram count is doc-bounded so a small set is fine
+    // a doc shorter than n is its one gram of all tokens; distinct at the
+    // STRING level (array_distinct-before-hash parity), first-seen order
+    val grams = WordNgrams.grams(toks, math.min(n, toks.numElements())).array
     val seen = new java.util.LinkedHashSet[UTF8String]()
-    if (sz < n) {
-      val parts = new Array[UTF8String](sz)
-      var i = 0
-      while (i < sz) { parts(i) = toks.getUTF8String(i); i += 1 }
-      seen.add(UTF8String.concatWs(Space, parts: _*))
-    } else {
-      val win = new Array[UTF8String](n)
-      var i = 0
-      while (i + n <= sz) {
-        var j = 0
-        while (j < n) { win(j) = toks.getUTF8String(i + j); j += 1 }
-        seen.add(UTF8String.concatWs(Space, win: _*))
-        i += 1
-      }
-    }
+    grams.foreach(g => seen.add(g.asInstanceOf[UTF8String]))
     // hash the distinct grams; dedup hash values too (collect_set-of-
     // hashes parity for the one-in-2^64 string-collision case)
     val out = new java.util.LinkedHashSet[java.lang.Long]()

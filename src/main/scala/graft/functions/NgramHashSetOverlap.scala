@@ -26,15 +26,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * 4495 — the decontamination stage, which should be a near-free
   * stateless filter, dominated 9×. This expression references the token
   * array EXACTLY ONCE, so even fully inlined into a pushed-down filter
-  * the tokenizer runs once per row; grams are built with the same
-  * `UTF8String.concatWs(" ", …)` the SQL `concat_ws` uses and hashed
-  * with the same `XXH64` (seed 42) the SQL `xxhash64` uses, so the hash
-  * space is identical to the batch operator's
+  * the tokenizer runs once per row; grams come from
+  * [[WordNgrams.grams]] and are hashed with the same `XXH64` (seed 42)
+  * the SQL `xxhash64` uses, so the hash space is identical to the batch
+  * operator's
   * (`TextAnalysis.contaminationFlags` joins on `xxhash64(shingle)`) —
   * `StreamingCurationSpec` pins the composed trio equal to the batch
   * composition end-to-end. The set ships as a SORTED `long[]` plan
   * reference probed by binary search: |grams| · log₂|set| primitive
-  * compares per row, no per-row allocation beyond the gram strings.
+  * compares per row, no per-row allocation beyond the grams.
   *
   * N-gram semantics replicate `Text.shinglesOfTokens` exactly: `n`
   * consecutive tokens joined by single spaces when the doc has ≥ n
@@ -85,8 +85,6 @@ case class NgramHashSetOverlap(child: Expression, n: Int, sorted: SortedLongSet)
 }
 
 object NgramHashSetOverlap {
-  private val Space = UTF8String.fromString(" ")
-
   private def hashInSet(s: UTF8String, sorted: Array[Long]): Boolean = {
     val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
     java.util.Arrays.binarySearch(sorted, h) >= 0
@@ -95,25 +93,9 @@ object NgramHashSetOverlap {
   /** Shared by interpreted eval and generated code (the generated loop
     * is one static call per row — the JIT inlines it).
     */
-  def overlaps(toks: ArrayData, n: Int, sorted: Array[Long]): Boolean = {
-    val sz = toks.numElements()
-    if (sz < n) {
-      // shinglesOfTokens's short-doc branch: one gram of all tokens
-      val parts = new Array[UTF8String](sz)
-      var i = 0
-      while (i < sz) { parts(i) = toks.getUTF8String(i); i += 1 }
-      return hashInSet(UTF8String.concatWs(Space, parts: _*), sorted)
-    }
-    val win = new Array[UTF8String](n)
-    var i = 0
-    while (i + n <= sz) {
-      var j = 0
-      while (j < n) { win(j) = toks.getUTF8String(i + j); j += 1 }
-      if (hashInSet(UTF8String.concatWs(Space, win: _*), sorted)) return true
-      i += 1
-    }
-    false
-  }
+  def overlaps(toks: ArrayData, n: Int, sorted: Array[Long]): Boolean =
+    WordNgrams.grams(toks, math.min(n, toks.numElements())).array
+      .exists(g => hashInSet(g.asInstanceOf[UTF8String], sorted))
 
   /** `set` need not be sorted or distinct — normalized here, once. */
   def overlapsAny(toksCol: Column, n: Int, set: Array[Long]): Column =

@@ -44,14 +44,7 @@ case class SimHashAgg(
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Long]
-      var i = 0
-      while (i < 64) {
-        buf(i) += (((h >>> i) & 1L) * 2L - 1L)
-        i += 1
-      }
-    }
+    if (v != null) SimHashAgg.vote(buf, v.asInstanceOf[Long])
     buf
   }
 
@@ -61,15 +54,7 @@ case class SimHashAgg(
     buf
   }
 
-  override def eval(buf: Array[Long]): Any = {
-    var fp = 0L
-    var i = 0
-    while (i < 64) {
-      if (buf(i) > 0) fp |= (1L << i)
-      i += 1
-    }
-    fp
-  }
+  override def eval(buf: Array[Long]): Any = SimHashAgg.fingerprint(buf)
 
   override def serialize(buf: Array[Long]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -93,6 +78,26 @@ case class SimHashAgg(
 }
 
 object SimHashAgg {
+  /** Adds hash `h`'s ±1 vote to each of the 64 per-bit counts. */
+  def vote(buf: Array[Long], h: Long): Unit = {
+    var i = 0
+    while (i < 64) {
+      buf(i) += (((h >>> i) & 1L) * 2L - 1L)
+      i += 1
+    }
+  }
+
+  /** The fingerprint of 64 vote counts: bit i set iff count i > 0. */
+  def fingerprint(buf: Array[Long]): Long = {
+    var fp = 0L
+    var i = 0
+    while (i < 64) {
+      if (buf(i) > 0) fp |= (1L << i)
+      i += 1
+    }
+    fp
+  }
+
   def simhash(hashCol: Column): Column =
     ColumnBridge.column(
       SimHashAgg(ColumnBridge.expression(hashCol)).toAggregateExpression())

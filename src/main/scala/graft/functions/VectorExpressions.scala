@@ -9,18 +9,22 @@ import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native dot product over numeric arrays, accumulated in double in index
-  * order.
+  * order from 0.0.
   *
   * The composable alternative — `aggregate(zip_with(a, b, _*_), 0d, _+_)`
   * — evaluates two interpreted lambdas per element; at 64 dims × millions
   * of candidate pairs that interpretation dominates the whole similarity
   * pipeline (measured ~10× on the all-pairs query). This expression emits
-  * a tight primitive loop via `doGenCode` instead, and its accumulation
-  * order matches the HOF form exactly, so results are bit-identical and
-  * the SQL oracles keep passing.
+  * a tight primitive loop via `doGenCode` instead, and returns what the
+  * higher-order-function form returns, bit for bit: the same
+  * left-to-right fold, and NULL for a null array, arrays of different
+  * lengths (`zip_with` pads with null, which poisons the sum) or a null
+  * element. A corrupt or mis-dimensioned vector thus surfaces as a
+  * missing score instead of a plausible partial dot product.
   *
   * Element types may be float or double on either side (embeddings are
-  * float, LSH hyperplanes double).
+  * float, LSH hyperplanes double). Elements are null-checked only when
+  * the array type admits nulls.
   */
 case class DotProduct(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -31,6 +35,9 @@ case class DotProduct(left: Expression, right: Expression)
     case _ => None
   }
 
+  private def elemNullable(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+
   override def checkInputDataTypes(): TypeCheckResult =
     if (elemType(left).isDefined && elemType(right).isDefined)
       TypeCheckResult.TypeCheckSuccess
@@ -40,11 +47,6 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
-
-  // mismatched lengths yield NULL — the same result the composable
-  // zip_with/aggregate form produces (zip_with pads with null, which
-  // poisons the sum), so a corrupt/mis-dimensioned vector surfaces as a
-  // missing score instead of a plausible partial dot product
   override def nullable: Boolean = true
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
@@ -57,9 +59,12 @@ case class DotProduct(left: Expression, right: Expression)
     if (ra.numElements() != n) return null
     val lFloat = elemType(left).contains(FloatType)
     val rFloat = elemType(right).contains(FloatType)
+    val lNulls = elemNullable(left)
+    val rNulls = elemNullable(right)
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if ((lNulls && la.isNullAt(i)) || (rNulls && ra.isNullAt(i))) return null
       val lv = if (lFloat) la.getFloat(i).toDouble else la.getDouble(i)
       val rv = if (rFloat) ra.getFloat(i).toDouble else ra.getDouble(i)
       acc += lv * rv
@@ -75,6 +80,11 @@ case class DotProduct(left: Expression, right: Expression)
       val n = ctx.freshName("dpN")
       val acc = ctx.freshName("dpAcc")
       val i = ctx.freshName("dpI")
+      val nullElem = Seq(la -> elemNullable(left), ra -> elemNullable(right))
+        .collect { case (a, true) => s"$a.isNullAt($i)" }
+      val nullCheck =
+        if (nullElem.isEmpty) ""
+        else s"if (${nullElem.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |final int $n = $la.numElements();
          |if ($ra.numElements() != $n) {
@@ -82,6 +92,7 @@ case class DotProduct(left: Expression, right: Expression)
          |} else {
          |  double $acc = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
+         |    $nullCheck
          |    $acc += ((double) $la.$lGet($i)) * ((double) $ra.$rGet($i));
          |  }
          |  ${ev.value} = $acc;

@@ -9,19 +9,18 @@ import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** All word n-grams of a token array, space-joined, in order, NON-distinct
-  * — the fused replacement for the
-  * `transform(sequence(1, size-…), i => concat_ws(" ", element_at×n))`
-  * pipeline the text-family LM/diversity/repetition operators exploded
-  * (round-15 optimization pass; `transform`/`sequence` are
-  * `CodegenFallback`, so every document paid (|toks|−n+1)·n interpreted
-  * `element_at` lambda evaluations plus a boxed sequence array before the
-  * explode). Gram bytes are identical by construction: the same
+/** All word n-grams of a token array, space-joined, in order, NON-distinct:
+  * the one window loop behind `Text.shinglesOfTokens`, the text-family
+  * LM/diversity/repetition operators, [[ShingleHashSet]] and
+  * [[NgramHashSetOverlap]]. It replaces
+  * the `transform(sequence(1, size-…), i => concat_ws(" ", element_at×n))`
+  * form, whose `CodegenFallback` lambdas cost every document
+  * (|toks|−n+1)·n interpreted `element_at` calls plus a boxed sequence
+  * array. Gram bytes are identical by construction: the same
   * `UTF8String.concatWs` the SQL `concat_ws` uses, over the same token
-  * slices (`WordNgramsSpec` pins element-wise equality against the HOF
-  * form). Arrays shorter than `n` yield an empty array (the HOF form is
-  * only reached behind a `size >= n` filter at every call site, where the
-  * two agree everywhere).
+  * slices (`WordNgramsSpec` pins element-wise equality against the
+  * higher-order-function form). Arrays shorter than `n` yield an empty
+  * array.
   */
 case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, "n must be >= 1")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ object Bpe {
     * pass of training.
     */
   def wordCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(graft.functions.Text.tokens(col(textCol))).as("word"))
+    docs.select(explode(Text.tokens(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
 
   /** Characters of a word as array<string> (tokens are ASCII [a-z0-9],
@@ -177,7 +178,7 @@ object Bpe {
       idCol: String, textCol: String): DataFrame = {
     val segSizes = words.select(col("word"), size(col("syms")).cast("long").as("_n"))
     docs.select(col(idCol),
-        explode(graft.functions.Text.tokens(col(textCol))).as("word"))
+        explode(Text.tokens(col(textCol))).as("word"))
       // explicit: the segment table is vocabulary-scale (Heaps' law) —
       // pin the no-corpus-shuffle shape rather than leave it to stats
       .join(broadcast(segSizes), Seq("word"))
@@ -234,7 +235,7 @@ object Bpe {
       groupCol: String, textCol: String): DataFrame = {
     val segSizes = words.select(col("word"), size(col("syms")).cast("long").as("_n"))
     docs.select(col(groupCol),
-        explode(graft.functions.Text.tokens(col(textCol))).as("word"))
+        explode(Text.tokens(col(textCol))).as("word"))
       .join(broadcast(segSizes), Seq("word"))
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_words"), sum(col("_n")).as("n_bpe_tokens"))
@@ -280,8 +281,7 @@ object Bpe {
        |  SELECT word, freq,
        |    list_transform(generate_series(1, length(word)), j -> word[j:j]) AS syms
        |  FROM (SELECT g AS word, count(*) AS freq FROM (
-       |    SELECT unnest(list_filter(string_split_regex(lower($textCol),
-       |      '[^a-z0-9]+'), x -> x != '')) AS g
+       |    SELECT unnest(${Text.tokensSql(textCol)}) AS g
        |    FROM $table) GROUP BY g))""".stripMargin
 
   /** One unrolled training iteration: arg-max pair m{i} (same count and
@@ -356,8 +356,7 @@ object Bpe {
     s"""WITH $ctes,
        |enc AS (
        |  SELECT d.$idCol, len(w.syms) AS n
-       |  FROM (SELECT $idCol, unnest(list_filter(string_split_regex(
-       |          lower($textCol), '[^a-z0-9]+'), x -> x != '')) AS word
+       |  FROM (SELECT $idCol, unnest(${Text.tokensSql(textCol)}) AS word
        |        FROM $table) d
        |  JOIN w$nMerges w USING (word))
        |SELECT $idCol, count(*) AS n_words,
@@ -375,8 +374,7 @@ object Bpe {
     s"""WITH $ctes,
        |enc AS (
        |  SELECT d.$groupCol, len(w.syms) AS n
-       |  FROM (SELECT $groupCol, unnest(list_filter(string_split_regex(
-       |          lower($textCol), '[^a-z0-9]+'), x -> x != '')) AS word
+       |  FROM (SELECT $groupCol, unnest(${Text.tokensSql(textCol)}) AS word
        |        FROM $table) d
        |  JOIN w$nMerges w USING (word))
        |SELECT $groupCol, count(*) AS n_words,

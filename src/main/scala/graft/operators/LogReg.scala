@@ -112,12 +112,11 @@ object LogReg {
   }
 
   /** round(sigmoid(round(Σ w_j·x_j, 6)), 6) as a codegen'd column —
-    * the margin fold is sequential in dim order per the contract.
+    * the margin is [[graft.functions.DotProduct]]'s sequential fold in
+    * dim order per the contract, NULL for null or mis-sized features.
     */
   def probability(x: Column, w: Array[Double]): Column = {
-    val wLit = array(w.map(lit): _*)
-    val z = round(aggregate(
-      zip_with(x, wLit, (xi, wi) => xi * wi), lit(0.0), _ + _), 6)
+    val z = round(graft.functions.VectorOps.dot(x, array(w.map(lit): _*)), 6)
     round(lit(1.0) / (lit(1.0) + exp(-z)), 6)
   }
 

@@ -3086,9 +3086,9 @@ object PipelineQueries {
     * with [[graft.functions.Text.tokens]]/[[graft.functions.Text.shingles]].
     */
   private val shingleCte =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+      |    ${Text.tokensSql("text")} AS toks
       |  FROM documents),
       |s AS (
       |  SELECT doc_id,
@@ -3188,7 +3188,7 @@ object PipelineQueries {
     val iterBlocks = (1 to 10).map(logRegIterSql).mkString("\n")
     s"""WITH t AS MATERIALIZED (
        |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+       |    ${Text.tokensSql("text")} AS toks
        |  FROM documents),
        |s AS MATERIALIZED (
        |  SELECT doc_id,
@@ -4028,9 +4028,9 @@ object PipelineQueries {
     // the text_langid decision CTEs grouped into the (label, prediction)
     // confusion matrix; label_share = one exact-int division per cell
     Q("text_langid_confusion", textLangidConfusion, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, lang, text,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |sc AS (
         |  SELECT doc_id, lang,
@@ -4038,7 +4038,7 @@ object PipelineQueries {
         |    len(list_filter(toks, t -> list_contains(['el','la','de','que','y'], t))) AS s_es,
         |    len(list_filter(toks, t -> list_contains(['der','die','und','das','ist'], t))) AS s_de,
         |    len(list_filter(toks, t -> list_contains(['le','les','et','des','un'], t))) AS s_fr,
-        |    regexp_matches(text, '[\x{4e00}-\x{9fff}]') AS has_zh
+        |    regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') AS has_zh
         |  FROM t),
         |pr AS (SELECT lang,
         |  CASE WHEN has_zh THEN 'zh'
@@ -4072,8 +4072,8 @@ object PipelineQueries {
     // [8i+1, 8i+8] mod width — the same aligned 4-byte slice the
     // aggregate reads from the binary digest
     Q("text_cms", textCms, Oracle(
-      """WITH t AS (
-        |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+      s"""WITH t AS (
+        |  SELECT ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |x AS (SELECT unnest(toks) AS tk FROM t),
         |c AS (SELECT tk, count(*) AS n FROM x GROUP BY tk),
@@ -4126,9 +4126,9 @@ object PipelineQueries {
     // linear-idf BM25 (log is not bit-portable); avgdl = sum(dl)/N over
     // ALL docs; literals in e0 form; score rounded BEFORE ranking
     Q("text_bm25", textBm25, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |x AS (SELECT doc_id, unnest(toks) AS term FROM t),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM x GROUP BY doc_id, term),
@@ -4247,9 +4247,9 @@ object PipelineQueries {
     // count = sum of trigram counts sharing the prefix (NOT the raw
     // bigram count — the final bigram of each doc heads no trigram)
     Q("text_ngram_lm", textNgramLm, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |x AS (SELECT unnest(range(1, len(toks) - 1)) AS i, toks
         |      FROM t WHERE len(toks) >= 3),
@@ -4318,9 +4318,9 @@ object PipelineQueries {
     // text_ngram_lm oracle builds (tie-break n desc, trigram asc) — two
     // BIGINT counts, no floats anywhere
     Q("text_lm_score", textLmScore, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |x AS (SELECT doc_id, unnest(range(1, len(toks) - 1)) AS i, toks
         |      FROM t WHERE len(toks) >= 3),
@@ -4339,9 +4339,9 @@ object PipelineQueries {
     // candidates 4..n-1 (range() end-exclusive), chunks = cuts+1 slices.
     // DuckDB list slicing toks[a:b] is 1-based inclusive like slice().
     Q("chunk_cdc", chunkCdcDocs, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |nn AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 1),
         |c AS (SELECT doc_id, toks, n,
@@ -4431,13 +4431,11 @@ object PipelineQueries {
     // counts n_within itself — corpus drift moves both engines' flags
     // together instead of breaking the gate (round-9 advice).
     Q("sketch_error_report", sketchErrorReport, Oracle(
-      """WITH rf AS (SELECT CAST(count(DISTINCT l_returnflag) AS BIGINT) AS g
+      s"""WITH rf AS (SELECT CAST(count(DISTINCT l_returnflag) AS BIGINT) AS g
         |            FROM lineitem),
         |et AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS g
         |       FROM events),
-        |toks AS (SELECT unnest(list_filter(
-        |           string_split_regex(lower(text), '[^a-z0-9]+'),
-        |           x -> x != '')) AS t
+        |toks AS (SELECT unnest(${Text.tokensSql("text")}) AS t
         |         FROM documents),
         |tc AS (SELECT t, count(*) AS exc FROM toks GROUP BY t),
         |tn AS (SELECT count(*) AS nn FROM toks),
@@ -4497,8 +4495,8 @@ object PipelineQueries {
         |LEFT JOIN i ON i.type_a = ca.event_type AND i.type_b = cb.event_type
         |ORDER BY type_a, type_b""".stripMargin)),
     Q("sketch_heavy_hitters", sketchHeavyHitters, Oracle(
-      """WITH t AS (
-        |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')
+      s"""WITH t AS (
+        |  SELECT ${Text.tokensSql("text")}
         |    AS toks
         |  FROM documents),
         |c AS (SELECT g AS token, count(*) AS n
@@ -4619,9 +4617,8 @@ object PipelineQueries {
     // allocation is ONE division of exact longs and epochs one more
     // correctly-rounded division — both bit-identical cross-engine
     Q("sample_unimax", sampleUnimax, Oracle(
-      """WITH t AS (
-        |  SELECT lang, CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |    x -> x != '')) AS BIGINT) AS n_tok
+      s"""WITH t AS (
+        |  SELECT lang, CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tok
         |  FROM documents),
         |g AS (SELECT lang, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM t GROUP BY lang),
         |s AS (SELECT CAST(3 * sum(n_tokens) AS BIGINT) AS budget, count(*) AS nl FROM g),
@@ -4646,9 +4643,8 @@ object PipelineQueries {
     // under the exact md5 fraction — floor/subtract exact, e correctly
     // rounded on both engines, so every copy count replays bit-exactly
     Q("sample_unimax_apply", sampleUnimaxApply, Oracle(
-      """WITH t AS (
-        |  SELECT doc_id, lang, CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |    x -> x != '')) AS BIGINT) AS n_tok
+      s"""WITH t AS (
+        |  SELECT doc_id, lang, CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tok
         |  FROM documents),
         |g AS (SELECT lang, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM t GROUP BY lang),
         |s AS (SELECT CAST(3 * sum(n_tokens) AS BIGINT) AS budget, count(*) AS nl FROM g),
@@ -4733,14 +4729,14 @@ object PipelineQueries {
     Q("dedup_clusters_incremental", dedupClustersIncremental, Oracle(clustersOracle)),
     // rule thresholds compare the text_stats oracle's ROUNDED ratios
     Q("text_quality_rules", textQualityRules, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |s AS (
         |  SELECT doc_id,
         |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    round(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) * 1.0 / greatest(length(text), 1), 6) AS punct_ratio,
+        |    round(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) * 1.0 / greatest(length(text), 1), 6) AS punct_ratio,
         |    round(len(list_filter(toks, t -> list_contains(['the','a','and','of','to','in','is','on','for','with'], t))) * 1.0 / greatest(len(toks), 1), 6) AS stop_ratio,
         |    round(list_sum(list_transform(toks, t -> length(t))) * 1.0 / greatest(len(toks), 1), 6) AS mean_tok_len
         |  FROM t)
@@ -4760,9 +4756,9 @@ object PipelineQueries {
     // two-level bucketed rank equals this single global window exactly
     // (bucketing is by a monotone function of the sort key)
     Q("pack_shards", packShards, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |n AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS tokens FROM t),
         |r AS (SELECT *, row_number() OVER (ORDER BY tokens DESC, doc_id) AS rnk FROM n)
@@ -4771,10 +4767,9 @@ object PipelineQueries {
     // same monotone-bucketing identity as pack_shards: the engine's
     // two-level rank equals this one global window; rollup all-integer
     Q("pack_length_batches", packLengthBatches, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      x -> x != '')) AS BIGINT) AS tokens
+        |    CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS tokens
         |  FROM documents),
         |r AS (SELECT *, row_number() OVER (ORDER BY tokens DESC, doc_id) AS rnk FROM t)
         |SELECT CAST((rnk - 1) // 64 AS BIGINT) AS batch_id,
@@ -4783,10 +4778,9 @@ object PipelineQueries {
         |  CAST(count(*) * max(tokens) - sum(tokens) AS BIGINT) AS pad_waste
         |FROM r GROUP BY batch_id ORDER BY batch_id""".stripMargin)),
     Q("pack_sequences", packSequences, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      x -> x != '')) AS BIGINT) AS n_tok,
+        |    CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tok,
         |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS shard
         |  FROM documents),
         |c AS (SELECT doc_id, shard, n_tok,
@@ -4811,10 +4805,9 @@ object PipelineQueries {
         |FROM t GROUP BY user_id, CAST(turn // 16 AS BIGINT)
         |ORDER BY user_id, conv_id""".stripMargin)),
     Q("text_token_budget", textTokenBudget, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT source, lang,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-        |      x -> x != '')) AS BIGINT) AS n_tok
+        |    CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tok
         |  FROM documents)
         |SELECT coalesce(source, 'ALL') AS source, coalesce(lang, 'ALL') AS lang,
         |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS tok_sum
@@ -4840,9 +4833,9 @@ object PipelineQueries {
     // pairs with hamming <= 3 (tiny at oracle scale; the Spark side's
     // 4x16 banding is recall-exact for <= 3, so the sets coincide)
     Q("dedup_simhash", dedupSimhash, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS tk FROM t),
         |h AS (SELECT doc_id,
@@ -4867,9 +4860,9 @@ object PipelineQueries {
     // same fingerprint CTE as dedup_simhash, anti-joined: keep docs with
     // no lower-id doc within hamming 3
     Q("dedup_simhash_keep", dedupSimhashKeep, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(list_distinct(toks)) AS tk FROM t),
         |h AS (SELECT doc_id,
@@ -4900,7 +4893,7 @@ object PipelineQueries {
     Q("pipeline_curate", pipelineCurate, Oracle(
       s"""WITH RECURSIVE t AS (
          |  SELECT doc_id, text,
-         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+         |    ${Text.tokensSql("text")} AS toks
          |  FROM documents),
          |qx AS (
          |  SELECT doc_id,
@@ -4978,7 +4971,7 @@ object PipelineQueries {
     // runs over the GATED survivors and the first-wins anti join keeps
     // docs with no lower-id gated doc within hamming 3
     Q("pipeline_curate_ingest", pipelineCurateIngest, Oracle(logRegCtes +
-      """
+      s"""
         |sc AS (SELECT f.doc_id,
         |    round(1.0 / (1.0 + exp(-round(list_sum(list_transform(range(1, 6),
         |      j -> f.x[j] * w.w[j])), 6))), 6) AS score
@@ -4986,8 +4979,7 @@ object PipelineQueries {
         |g AS (SELECT d.* FROM documents d JOIN sc USING (doc_id)
         |      WHERE sc.score >= 0.5e0),
         |gtok AS (SELECT doc_id,
-        |    unnest(list_distinct(list_filter(
-        |      string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != ''))) AS tk
+        |    unnest(list_distinct(${Text.tokensSql("text")})) AS tk
         |  FROM g),
         |gh AS (SELECT doc_id,
         |    ('0x' || substring(md5(tk), 1, 8))::BIGINT AS hi,
@@ -5259,9 +5251,9 @@ object PipelineQueries {
     // distinct-n diversity: all-integer gram counts, two exact-long
     // IEEE divisions — bit-identical cross-engine
     Q("text_diversity", textDiversity, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT source,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |u AS (SELECT source, unnest(toks) AS g FROM t),
         |bg AS (SELECT source, toks[i] || ' ' || toks[i+1] AS g
@@ -5280,9 +5272,9 @@ object PipelineQueries {
     // tf × N / df: exact-integer numerator, one IEEE division — log-free
     // so the doubles are bit-identical cross-engine (see termSalience)
     Q("text_salient_terms", textSalientTerms, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |x AS (SELECT doc_id, unnest(toks) AS term FROM t),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM x GROUP BY doc_id, term),
@@ -5386,8 +5378,8 @@ object PipelineQueries {
         |SELECT cluster_id, doc_id AS anchor, positive
         |FROM m WHERE positive IS NOT NULL ORDER BY anchor""".stripMargin)),
     Q("text_vocab", textVocab, Oracle(
-      """WITH t AS (
-        |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '')
+      s"""WITH t AS (
+        |  SELECT ${Text.tokensSql("text")}
         |    AS toks
         |  FROM documents),
         |c AS (SELECT g AS token, count(*) AS n
@@ -5473,16 +5465,16 @@ object PipelineQueries {
     Q("ann_topk_opq_served", annTopkOpqServed, Oracle(annTopkOpqSql)),
     Q("ann_recall_report", annRecallReport, Oracle(annRecallReportSql)),
     Q("text_stats", textStats, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |s AS (
         |  SELECT doc_id,
         |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_ws_tokens,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpe_tokens,
-        |    round(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) * 1.0 / greatest(length(text), 1), 6) AS punct_ratio,
+        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_ws_tokens,
+        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_bpe_tokens,
+        |    round(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) * 1.0 / greatest(length(text), 1), 6) AS punct_ratio,
         |    round(len(list_filter(toks, t -> list_contains(['the','a','and','of','to','in','is','on','for','with'], t))) * 1.0 / greatest(len(toks), 1), 6) AS stop_ratio,
         |    round(list_sum(list_transform(toks, t -> length(t))) * 1.0 / greatest(len(toks), 1), 6) AS mean_tok_len
         |  FROM t)
@@ -5497,13 +5489,13 @@ object PipelineQueries {
     // corpus; per-doc hits against both, all-integer score and keep flag.
     // Each LM's trigram is unique, so the two LEFT JOINs cannot fan out.
     Q("sample_dsir", sampleDsir, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, text,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |s AS (SELECT doc_id,
         |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    round(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) * 1.0 / greatest(length(text), 1), 6) AS punct_ratio,
+        |    round(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) * 1.0 / greatest(length(text), 1), 6) AS punct_ratio,
         |    round(len(list_filter(toks, t -> list_contains(['the','a','and','of','to','in','is','on','for','with'], t))) * 1.0 / greatest(len(toks), 1), 6) AS stop_ratio
         |  FROM t),
         |q AS (SELECT doc_id FROM s
@@ -5534,9 +5526,9 @@ object PipelineQueries {
 
     Q("text_quality_serve", textQualityServe, Oracle(textQualityServeSql)),
     Q("text_langid", textLangid, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, lang, text,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |sc AS (
         |  SELECT doc_id, lang,
@@ -5544,7 +5536,7 @@ object PipelineQueries {
         |    len(list_filter(toks, t -> list_contains(['el','la','de','que','y'], t))) AS s_es,
         |    len(list_filter(toks, t -> list_contains(['der','die','und','das','ist'], t))) AS s_de,
         |    len(list_filter(toks, t -> list_contains(['le','les','et','des','un'], t))) AS s_fr,
-        |    regexp_matches(text, '[\x{4e00}-\x{9fff}]') AS has_zh
+        |    regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') AS has_zh
         |  FROM t)
         |SELECT doc_id, lang,
         |  CASE WHEN has_zh THEN 'zh'
@@ -5618,9 +5610,9 @@ object PipelineQueries {
         |WHERE a.media_id < b.media_id AND bit_count(xor(a.ahash, b.ahash)) <= 3
         |ORDER BY media_a, media_b""".stripMargin)),
     Q("chunk_documents", chunkDocuments, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |c AS (SELECT doc_id, toks,
         |        unnest(range(1, len(toks) + 1, 24)) AS start_tok
@@ -5632,9 +5624,9 @@ object PipelineQueries {
         |  toks[start_tok] AS chunk_head
         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin)),
     Q("text_repetition", textRepetition, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |tc AS (SELECT doc_id, g, count(*) AS c
         |       FROM (SELECT doc_id, unnest(toks) AS g FROM t) GROUP BY doc_id, g),
@@ -5655,9 +5647,9 @@ object PipelineQueries {
     // counted on distinct per-doc shingles, so string-vs-hash join parity
     // holds exactly (collision-free at these set sizes)
     Q("text_decontaminate", textDecontaminate, Oracle(
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS toks
+        |    ${Text.tokensSql("text")} AS toks
         |  FROM documents),
         |sh AS (
         |  SELECT doc_id,

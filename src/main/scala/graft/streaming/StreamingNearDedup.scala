@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.{SimHashAgg, Text}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -110,29 +111,24 @@ object StreamingNearDedup extends Serializable {
   final case class Sig(ts: Long, doc_id: Long, simhash: Long)
 
   /** JVM twin of the batch SimHash pipeline (`Dedup.simhash` +
-    * `SimHashAgg`): distinct lowercase [a-z0-9]+ tokens, token hash =
-    * (first 8 md5 hex chars << 32) | next 8, ±1 votes per bit, bit set
-    * iff vote > 0. Bit-equality with the batch expression is spec-pinned.
+    * `SimHashAgg`): distinct [[graft.functions.Text.tokenize]] tokens,
+    * token hash = (first 8 md5 hex chars << 32) | next 8, and
+    * `SimHashAgg`'s own vote and fingerprint kernels. Bit-equality with
+    * the batch expression is spec-pinned, under any default locale.
     */
   def simhash64(text: String): Long = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val votes = new Array[Long](64)
-    text.toLowerCase.split("[^a-z0-9]+", -1).iterator
-      .filter(_.nonEmpty).toSet[String].foreach { tok =>
-        val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        md.reset()
-        val hi = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
-          ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
-        val lo = ((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) |
-          ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)
-        val h = (hi << 32) | lo
-        var i = 0
-        while (i < 64) { votes(i) += (((h >>> i) & 1L) * 2L - 1L); i += 1 }
-      }
-    var fp = 0L
-    var i = 0
-    while (i < 64) { if (votes(i) > 0) fp |= (1L << i); i += 1 }
-    fp
+    Text.tokenize(text).distinct.foreach { tok =>
+      val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.reset()
+      val hi = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
+        ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
+      val lo = ((d(4) & 0xFFL) << 24) | ((d(5) & 0xFFL) << 16) |
+        ((d(6) & 0xFFL) << 8) | (d(7) & 0xFFL)
+      SimHashAgg.vote(votes, (hi << 32) | lo)
+    }
+    SimHashAgg.fingerprint(votes)
   }
 
   /** Stage 1 alone (stateless): per-doc SimHash + 4-way banding. Exposed

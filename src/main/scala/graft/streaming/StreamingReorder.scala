@@ -298,9 +298,20 @@ object StreamingReorder extends Serializable {
     * 200k records, SCALE.md's deep-buffer table, measured while v1 held
     * a `Map`) v2 was 24% faster end to end. v1 holds each key's buffer
     * as ONE state row, which is what stalls when a single key buffers a
-    * whole grace window. Requires the RocksDB state store provider (the
-    * v2 API's native store); [[faithful]] remains for memory-provider
-    * deployments.
+    * whole grace window.
+    *
+    * The buffer's layout is not the gap. A v2 that held [[faithful]]'s
+    * `BufferState` in one `ValueState` per key (a scratch swap of
+    * `ReorderApp.topology`, 3 rounds per workload, 4 vCPU) read 230–243
+    * ms `batch_ms_p50` on `reorder_replay` against 240–268 ms for this
+    * `MapState` layout and 149–177 ms for v1, and 3.0–3.7k against
+    * 2.45–2.82k and 4.08–4.67k `records_per_s` on `reorder_deep`; it
+    * still did 48k RocksDB puts and 92k gets per traced `reorder_replay`
+    * round (v1: 13k and 23k): the extra operations sit outside the
+    * buffer, in the timer rows, the flush-time value and the operator's
+    * per-key bookkeeping. So on Spark 4.1 [[faithful]] stays the reorder
+    * and this operator stays for in-query chaining. Requires the RocksDB
+    * state store provider (the v2 API's native store).
     */
   def faithfulV2(orders: Dataset[ElectronicOrder], graceMs: Long): Dataset[ReorderedEt] = {
     val spark = orders.sparkSession

@@ -133,4 +133,13 @@ class CodegenSpec extends SparkTestBase {
     val pairs = doubleVecs.join(floatVecs.select((col("id") + 1).as("id"), col("v").as("w")), "id")
     assertCompilesAndMatches(pairs, VectorOps.dot(col("v"), col("w")))
   }
+
+  test("DotProduct compiles and matches eval over arrays with null elements") {
+    val withNulls = Seq[(Long, Seq[Option[Double]], Seq[Option[Float]])](
+      (1L, Seq(Some(1.5), Some(-2.0)), Seq(Some(0.5f), Some(4.0f))),
+      (2L, Seq(Some(1.5), None), Seq(Some(0.5f), Some(4.0f))),
+      (3L, Seq(Some(1.5), Some(-2.0)), Seq(None, Some(4.0f))),
+      (4L, Seq.empty, Seq.empty)).toDF("id", "v", "w")
+    assertCompilesAndMatches(withNulls, VectorOps.dot(col("v"), col("w")))
+  }
 }

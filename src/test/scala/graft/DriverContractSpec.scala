@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
 
@@ -85,6 +86,11 @@ class DriverContractSpec extends SparkTestBase {
     assert(SparkEntry.queries.size == SparkEntry.registry.size)
   }
 
+  private def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+    dir.listFiles.toSeq.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+    }
+
   test("queries are declared only as registry records") {
     // a name -> function map, a name -> SQL map or a rows-only literal
     // beside the records would split a query's declaration again
@@ -93,10 +99,6 @@ class DriverContractSpec extends SparkTestBase {
       raw"(val|def)\s+oracles\w*\b".r,
       raw"rowsOnlyByDesign[^=\n]*=\s*Map\(".r,
       raw""""[a-z0-9_]+"\s*->\s*\(\w+ _\)""".r)
-    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
-      dir.listFiles.toSeq.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
-      }
     val root = Paths.get("src/main/scala/graft").toFile
     assert(root.isDirectory, s"$root not found")
     val offenders = scalaFiles(root).flatMap { f =>
@@ -104,6 +106,22 @@ class DriverContractSpec extends SparkTestBase {
       banned.flatMap(_.findFirstIn(text)).map(m => s"${f.getPath}: $m")
     }
     assert(offenders.isEmpty, s"declare each query once, as a Q record: ${offenders.mkString("; ")}")
+  }
+
+  test("JVM case mapping in the program names its locale") {
+    // a bare toLowerCase/toUpperCase follows the JVM's default locale
+    // (under tr_TR "TITLE" lowercases to "tıtle"), so a JVM twin of a SQL
+    // string function would disagree with Spark's; go through
+    // Text.tokenize or pass Locale.ROOT
+    val bare = raw"\bto(Lower|Upper)Case\b(?!\s*\(\s*[A-Za-z])".r
+    val root = Paths.get("src/main/scala").toFile
+    assert(root.isDirectory, s"$root not found")
+    val offenders = scalaFiles(root).flatMap { f =>
+      Files.readAllLines(f.toPath).asScala.zipWithIndex.collect {
+        case (line, i) if bare.findFirstIn(line).isDefined => s"${f.getPath}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty, s"default-locale case mapping: ${offenders.mkString("; ")}")
   }
 
   test("Kafka config honors the reference's dev.properties keys") {

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.Locale
+
+import graft.functions.Text
 import graft.operators.Dedup
 import graft.streaming.StreamingNearDedup
 import graft.streaming.StreamingNearDedup.NearDupDoc
@@ -8,8 +11,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming near-dup dedup: (1) the per-row JVM SimHash is bit-equal to
-  * the batch `Dedup.simhash` fingerprint on real corpus text, so the two
-  * pipelines take identical decisions; (2) the streamed first-wins
+  * the batch `Dedup.simhash` fingerprint on real corpus text and on
+  * case-mapping edge cases under a Turkish default locale, so the two
+  * pipelines take identical decisions on any JVM; (2) the streamed first-wins
   * verdicts equal a brute-force batch reference on out-of-order input;
   * (3) the retained-horizon contract works across flushes — history
   * within `retainMs` still catches dups, history beyond it is forgotten.
@@ -29,6 +33,51 @@ class StreamingNearDedupSpec extends SparkTestBase {
     texts.foreach { case (id, text) =>
       assert(StreamingNearDedup.simhash64(text) == batch(id),
         s"doc $id: JVM simhash diverged from the batch aggregate")
+    }
+  }
+
+  private def withDefaultLocale[T](l: Locale)(body: => T): T = {
+    val saved = (Locale.getDefault, Locale.getDefault(Locale.Category.DISPLAY),
+      Locale.getDefault(Locale.Category.FORMAT))
+    Locale.setDefault(l)
+    try body
+    finally {
+      Locale.setDefault(saved._1)
+      Locale.setDefault(Locale.Category.DISPLAY, saved._2)
+      Locale.setDefault(Locale.Category.FORMAT, saved._3)
+    }
+  }
+
+  // capital I lowercases to a dotless ı under a Turkish default locale;
+  // İ, ı, final sigma and ß take Spark's non-ASCII lowercasing path
+  private val caseTexts = Seq(
+    "TITLE INDEX IS BIG", "Title Case In Istanbul", "IIII iiii 1I2i",
+    "İSTANBUL İNDEX in ıstanbul", "ΣΟΦΟΣ ΟΔΟΣ alpha beta", "STRAẞE ß STRASSE Ok")
+
+  test("simhash64 equals the batch Dedup.simhash fingerprint under a tr_TR default locale") {
+    withDefaultLocale(new Locale("tr", "TR")) {
+      val docs = caseTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val batch = Dedup.simhash(docs, "doc_id", "text").as[(Long, Long)].collect().toMap
+      caseTexts.zipWithIndex.foreach { case (t, i) =>
+        assert(StreamingNearDedup.simhash64(t) == batch(i.toLong),
+          s"'$t': JVM simhash diverged from the batch aggregate")
+      }
+    }
+  }
+
+  for (tag <- Seq("en-US", "tr-TR")) {
+    test(s"Text.tokenize equals Text.tokens row for row under the $tag default locale") {
+      withDefaultLocale(Locale.forLanguageTag(tag)) {
+        val corpus = Tables.documents(spark, "/root/testdata/sf0.001")
+          .select($"text").as[String].collect().toSeq.filter(_ != null)
+        val texts = (caseTexts ++ Seq("", "   ", "a", "--x--") ++ corpus).zipWithIndex
+        val batch = texts.toDF("text", "i")
+          .select($"i", Text.tokens($"text")).as[(Int, Seq[String])].collect().toMap
+        texts.foreach { case (t, i) =>
+          assert(Text.tokenize(t).toSeq == batch(i), s"text '$t'")
+        }
+      }
     }
   }
 
