@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CountMinAgg, CountMinEstimate, DotProduct, FreqItemsAbove, FreqItemsAgg, KllDoublesAgg, KllQuantile, KllUnionAgg, MinGramMd5, MinHashAgg, PolyHash, SimHashAgg, ThetaAnotBEstimate, ThetaEstimate, ThetaIntersectEstimate, ThetaJaccardEstimate, ThetaSketchAgg, ThetaUnionAgg, TopKByScore}
+import graft.functions.{CountMinAgg, CountMinEstimate, DotProduct, FreqItemsAbove, FreqItemsAgg, MinGramMd5, MinHashAgg, PolyHash, SimHashAgg, TopKByScore}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -48,27 +48,8 @@ object GraftExtensions {
     "minhash_agg" -> { args =>
       MinHashAgg(args(0), intArg(args(1), "minhash_agg"), longArg(args(2), "minhash_agg")) },
     "simhash_agg" -> { args => SimHashAgg(args(0)) },
-    // mergeable-sketch family (round 6): quantiles, set algebra, heavy
-    // hitters — the KLL/theta/frequent-items legs Spark's SQL surface
-    // lacks even though it ships the DataSketches jars
-    "kll_sketch_agg" -> { args =>
-      KllDoublesAgg(args(0), if (args.size > 1)
-        intArg(args(1), "kll_sketch_agg") else 200) },
-    "kll_union_agg" -> { args =>
-      KllUnionAgg(args(0), if (args.size > 1)
-        intArg(args(1), "kll_union_agg") else 200) },
-    "kll_quantile" -> { args => KllQuantile(args(0), args(1)) },
-    "theta_sketch_agg" -> { args =>
-      ThetaSketchAgg(args(0), if (args.size > 1)
-        intArg(args(1), "theta_sketch_agg") else 12) },
-    "theta_union_agg" -> { args =>
-      ThetaUnionAgg(args(0), if (args.size > 1)
-        intArg(args(1), "theta_union_agg") else 12) },
-    "theta_estimate" -> { args => ThetaEstimate(args(0)) },
-    "theta_intersect_estimate" -> { args =>
-      ThetaIntersectEstimate(args(0), args(1)) },
-    "theta_a_not_b_estimate" -> { args => ThetaAnotBEstimate(args(0), args(1)) },
-    "theta_jaccard_estimate" -> { args => ThetaJaccardEstimate(args(0), args(1)) },
+    // mergeable-sketch legs Spark's SQL surface lacks: heavy hitters above
+    // a share and md5-celled Count-Min
     "freq_items_agg" -> { args =>
       FreqItemsAgg(args(0), if (args.size > 1)
         intArg(args(1), "freq_items_agg") else 1024) },

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.KllQuantileAgg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,12 +12,14 @@ import org.apache.spark.sql.functions._
   * HLL sketches do, which is why warehouse summary tables store sketch
   * BLOBs, not numbers.
   *
-  * Built on Spark's own DataSketches HLL aggregates
-  * (`hll_sketch_agg` / `hll_union_agg` / `hll_sketch_estimate` —
-  * codegen'd, map-side combined). The estimate error is the standard
-  * HLL bound (~1.6% at lgK=12); `SketchRollupSpec` gates it against
-  * exact counts and pins the roll-up identity (union of per-group
-  * sketches ≈ direct sketch of the whole).
+  * Built on Spark's own DataSketches aggregates: HLL
+  * (`hll_sketch_agg` / `hll_union_agg` / `hll_sketch_estimate`) and KLL
+  * (`kll_sketch_agg_double` / `kll_merge_agg_double` /
+  * `kll_sketch_get_quantile_double`), all map-side combined. The HLL
+  * estimate error is the standard HLL bound (~1.6% at lgK=12);
+  * `SketchRollupSpec` gates it against exact counts, the KLL estimates
+  * against exact order statistics, and pins the roll-up identity (union
+  * of per-group sketches ≈ direct sketch of the whole).
   */
 object SketchRollup {
 
@@ -51,13 +52,14 @@ object SketchRollup {
   /** One KLL quantile sketch per group over a double column: (groupCol,
     * qsketch BINARY). Exact percentiles can't roll up (order statistics
     * don't add); KLL sketches merge with a proven rank-error bound, so
-    * this one scan serves every later percentile rollup. Backed by the
-    * native [[graft.functions.KllDoublesAgg]].
+    * this one scan serves every later percentile rollup. Spark's
+    * `kll_sketch_agg_double` at its default k = 200 (~1.65% normalized
+    * rank error at 99% confidence).
     */
-  def quantileSketchBy(df: DataFrame, groupCol: String, valueCol: String,
-      k: Int = KllQuantileAgg.DefaultK): DataFrame =
+  def quantileSketchBy(df: DataFrame, groupCol: String,
+      valueCol: String): DataFrame =
     df.groupBy(col(groupCol))
-      .agg(KllQuantileAgg.kllAgg(col(valueCol), k).as("qsketch"))
+      .agg(kll_sketch_agg_double(col(valueCol)).as("qsketch"))
 
   /** Per-group quantile estimates from materialized sketches — no
     * raw-data access. One output column per requested rank, named
@@ -66,7 +68,7 @@ object SketchRollup {
   def quantileEstimates(sketches: DataFrame, groupCol: String,
       ranks: Seq[Double]): DataFrame =
     sketches.select(col(groupCol) +: ranks.map(r =>
-      KllQuantileAgg.kllQuantile(col("qsketch"), lit(r))
+      kll_sketch_get_quantile_double(col("qsketch"), lit(r))
         .as(s"p${(r * 100).round}")): _*)
       .orderBy(col(groupCol))
 
@@ -74,10 +76,9 @@ object SketchRollup {
     * and read the requested ranks off it.
     */
   def unionQuantiles(sketches: DataFrame, ranks: Seq[Double]): DataFrame = {
-    val merged = sketches.agg(
-      KllQuantileAgg.kllUnion(col("qsketch")).as("_m"))
+    val merged = sketches.agg(kll_merge_agg_double(col("qsketch")).as("_m"))
     merged.select(ranks.map(r =>
-      KllQuantileAgg.kllQuantile(col("_m"), lit(r))
+      kll_sketch_get_quantile_double(col("_m"), lit(r))
         .as(s"p${(r * 100).round}")): _*)
   }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{FreqItemsAgg, Text, ThetaSketchAgg}
+import graft.functions.{FreqItemsAgg, Text}
 import graft.operators.{Boundary, Cdc, Cohorts, DataQuality, Dedup, Graph, IncrementalAgg, Layout, LogReg, Multimodal, Packing, Quantize, Sampling, Similarity, SketchRollup, Snapshot, TemporalJoins, TextAnalysis, TimeSeries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -890,7 +890,9 @@ object PipelineQueries {
     *
     * Scale — fused scans: ONE lineitem aggregation carries both
     * relational legs (shared grouping), ONE events aggregation builds
-    * all three sketch families, and ONE distinct (type, user) projection
+    * all three sketch families (Spark's built-in `hll_sketch_agg`,
+    * `kll_sketch_agg_double` and `theta_sketch_agg`, each at its default
+    * size), and ONE distinct (type, user) projection
     * serves every exact side including the theta pairs and the global
     * distinct; the only additional raw passes are the KLL rank check
     * (which must rank the estimates inside the real data) and the CMS
@@ -960,8 +962,8 @@ object PipelineQueries {
     // serializes materialization jobs and forfeits pipelining)
     val evG = ev.groupBy(col("event_type")).agg(
         hll_sketch_agg(col("user_id"), lit(12)).as("hsk"),
-        graft.functions.KllQuantileAgg.kllAgg(col("value")).as("qsk"),
-        ThetaSketchAgg.thetaAgg(col("user_id")).as("tsk"))
+        kll_sketch_agg_double(col("value")).as("qsk"),
+        theta_sketch_agg(col("user_id")).as("tsk"))
     // ONE distinct (event_type, user_id) projection serves every EXACT
     // side: per-type distincts, the global distinct, and the theta pairs
     val su = ev.select(col("event_type"), col("user_id")).distinct()
@@ -979,14 +981,13 @@ object PipelineQueries {
       .select((abs(col("distinct_est") - col("ex")) <=
         greatest(lit(3L), (col("ex") * 0.05).cast("long"))).as("ok"))
 
-    val kll = graft.functions.KllQuantileAgg
     val kllEst = evG.select(col("event_type"),
-        kll.kllQuantile(col("qsk"), lit(0.5)).as("p50"),
-        kll.kllQuantile(col("qsk"), lit(0.95)).as("p95"))
-      .unionByName(evG.agg(kll.kllUnion(col("qsk")).as("_m"))
+        kll_sketch_get_quantile_double(col("qsk"), lit(0.5)).as("p50"),
+        kll_sketch_get_quantile_double(col("qsk"), lit(0.95)).as("p95"))
+      .unionByName(evG.agg(kll_merge_agg_double(col("qsk")).as("_m"))
         .select(lit("__all__").as("event_type"),
-          kll.kllQuantile(col("_m"), lit(0.5)).as("p50"),
-          kll.kllQuantile(col("_m"), lit(0.95)).as("p95")))
+          kll_sketch_get_quantile_double(col("_m"), lit(0.5)).as("p50"),
+          kll_sketch_get_quantile_double(col("_m"), lit(0.95)).as("p95")))
     // the rank-error contract checked directly: the estimate's exact rank
     // inside each group must sit within q ± 0.03 (integer arithmetic —
     // counts × 100 vs n × rank-percent — so the check itself is exact)
@@ -1010,10 +1011,10 @@ object PipelineQueries {
       .join(evG.select(col("event_type").as("type_b"), col("tsk").as("skb")),
         col("type_a") < col("type_b"))
       .select(col("type_a"), col("type_b"),
-        round(ThetaSketchAgg.intersectEstimate(col("ska"), col("skb")))
-          .cast("long").as("n_common"),
-        round(ThetaSketchAgg.aNotBEstimate(col("ska"), col("skb")))
-          .cast("long").as("n_only_a"))
+        theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
+          .as("n_common"),
+        theta_sketch_estimate(theta_difference(col("ska"), col("skb")))
+          .as("n_only_a"))
     val inter = su
       .join(su.select(col("event_type").as("_tb"), col("user_id")), "user_id")
       .filter(col("event_type") < col("_tb"))
@@ -1084,7 +1085,10 @@ object PipelineQueries {
     * users(b)| — computed entirely on per-type sketch blobs (ONE scan of
     * events; the pair join is 6 sketch rows × 6 sketch rows, broadcast).
     * HLL cannot do this: only theta sketches support intersection /
-    * difference. Below k=4096 retained entries a theta sketch is EXACT,
+    * difference. Spark's built-in `theta_sketch_agg`, `theta_intersection`
+    * and `theta_difference` do the set algebra, and `theta_sketch_estimate`
+    * rounds each estimate to a BIGINT. Below k=4096 retained entries
+    * (lgNomEntries 12, the default) a theta sketch is EXACT,
     * so at the driver's scale factors this carries a full DuckDB hash
     * oracle; at production cardinalities it degrades to ~1/√k relative
     * error (`ThetaSketchSpec` gates that regime on planted data).
@@ -1092,15 +1096,15 @@ object PipelineQueries {
   def sketchOverlap(s: SparkSession, dir: String): DataFrame = {
     val sk = Tables.events(s, dir)
       .groupBy(col("event_type"))
-      .agg(ThetaSketchAgg.thetaAgg(col("user_id")).as("sk"))
+      .agg(theta_sketch_agg(col("user_id")).as("sk"))
     val a = sk.select(col("event_type").as("type_a"), col("sk").as("ska"))
     val b = sk.select(col("event_type").as("type_b"), col("sk").as("skb"))
     a.join(b, col("type_a") < col("type_b"))
       .select(col("type_a"), col("type_b"),
-        round(ThetaSketchAgg.intersectEstimate(col("ska"), col("skb")))
-          .cast("long").as("n_common"),
-        round(ThetaSketchAgg.aNotBEstimate(col("ska"), col("skb")))
-          .cast("long").as("n_only_a"))
+        theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
+          .as("n_common"),
+        theta_sketch_estimate(theta_difference(col("ska"), col("skb")))
+          .as("n_only_a"))
       .orderBy(col("type_a"), col("type_b"))
   }
 

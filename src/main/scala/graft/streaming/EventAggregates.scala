@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.{FreqItemsAgg, ThetaSketchAgg}
+import graft.functions.FreqItemsAgg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -93,18 +93,18 @@ object EventAggregates {
     * streaming aggregations (it can't be incrementally maintained
     * exactly in bounded state). The sketch CAN: per-window state is one
     * mergeable blob, exact below sketch capacity, watermark-bounded like
-    * any windowed agg. The same [[graft.functions.ThetaSketchAgg]] the
+    * any windowed agg. Spark's built-in `theta_sketch_agg`, the one the
     * batch `sketch_overlap` query uses — one aggregate, both engines.
+    * `theta_sketch_estimate` rounds the estimate to a BIGINT.
     */
   def tumblingDistinctUsers(events: DataFrame, tsCol: String,
       windowLen: String, watermark: String): DataFrame =
     events
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen).as("w"))
-      .agg(ThetaSketchAgg.thetaAgg(col("user_id")).as("sk"))
+      .agg(theta_sketch_agg(col("user_id")).as("sk"))
       .select(col("w.start").as("window_start"),
-        round(ThetaSketchAgg.estimate(col("sk")))
-          .cast("long").as("distinct_users"))
+        theta_sketch_estimate(col("sk")).as("distinct_users"))
 
   /** Tumbling-window heavy hitters via the Misra–Gries frequent-items
     * sketch ([[graft.functions.FreqItemsAgg]], the batch

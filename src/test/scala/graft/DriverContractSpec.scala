@@ -108,6 +108,20 @@ class DriverContractSpec extends SparkTestBase {
     assert(offenders.isEmpty, s"declare each query once, as a Q record: ${offenders.mkString("; ")}")
   }
 
+  test("theta and KLL sketches come only from Spark's built-in functions") {
+    // Spark ships theta_* and kll_* SQL functions on the same DataSketches
+    // jar; a hand-written aggregate over those packages duplicates them
+    val banned = raw"org\.apache\.datasketches\.(theta|kll)\b".r
+    val root = Paths.get("src/main/scala").toFile
+    assert(root.isDirectory, s"$root not found")
+    val offenders = scalaFiles(root).flatMap { f =>
+      Files.readAllLines(f.toPath).asScala.zipWithIndex.collect {
+        case (line, i) if banned.findFirstIn(line).isDefined => s"${f.getPath}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty, s"use Spark's theta_*/kll_* built-ins: ${offenders.mkString("; ")}")
+  }
+
   test("JVM case mapping in the program names its locale") {
     // a bare toLowerCase/toUpperCase follows the JVM's default locale
     // (under tr_TR "TITLE" lowercases to "tıtle"), so a JVM twin of a SQL

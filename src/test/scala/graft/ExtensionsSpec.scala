@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+
 /** SQL surface of the native expressions via GraftExtensions.register. */
 class ExtensionsSpec extends SparkTestBase {
   import spark.implicits._
@@ -30,25 +33,42 @@ class ExtensionsSpec extends SparkTestBase {
     assert(top == Seq((1L, Seq(11L, 12L)), (2L, Seq(13L))))
   }
 
+  test("no extension function shadows a Spark built-in") {
+    // a builder registered under a built-in's name silently replaces that
+    // built-in in every session that loads the extensions
+    val shadowed = GraftExtensions.builders.map(_._1)
+      .filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)))
+    assert(shadowed.isEmpty, s"extension functions shadow built-ins: ${shadowed.mkString(", ")}")
+  }
+
   test("the sketch family (kll / theta / freq_items) is callable from SQL") {
     GraftExtensions.register(spark)
 
+    // KLL and theta are Spark built-ins (README maps the former extension
+    // names onto them); freq_items comes from GraftExtensions
     spark.range(1, 1001).selectExpr("CAST(id AS DOUBLE) AS v",
       "CAST(id % 4 AS LONG) AS g").createOrReplaceTempView("vals")
     // 1..1000 < k: KLL is exact-capacity here, p50 must be the median band
     val p50 = spark.sql(
-      """SELECT kll_quantile(kll_union_agg(sk), 0.5D) AS p50 FROM (
-        |  SELECT g, kll_sketch_agg(v) AS sk FROM vals GROUP BY g)""".stripMargin)
+      """SELECT kll_sketch_get_quantile_double(kll_merge_agg_double(sk), 0.5D) AS p50 FROM (
+        |  SELECT g, kll_sketch_agg_double(v) AS sk FROM vals GROUP BY g)""".stripMargin)
       .as[Double].head()
     assert(p50 >= 450 && p50 <= 550, s"p50 from SQL drifted: $p50")
 
     // two exact-regime theta sets: 1..600 and 401..1000 overlap in 200
     val inter = spark.sql(
-      """SELECT theta_intersect_estimate(a.sk, b.sk) AS x FROM
+      """SELECT theta_sketch_estimate(theta_intersection(a.sk, b.sk)) AS x FROM
+        |  (SELECT theta_sketch_agg(id) AS sk FROM range(1, 601)) a,
+        |  (SELECT theta_sketch_agg(id) AS sk FROM range(401, 1001)) b""".stripMargin)
+      .as[Long].head()
+    assert(inter == 200L, s"theta intersection from SQL drifted: $inter")
+    val jaccard = spark.sql(
+      """SELECT try_divide(theta_sketch_estimate(theta_intersection(a.sk, b.sk)),
+        |                  theta_sketch_estimate(theta_union(a.sk, b.sk))) AS j FROM
         |  (SELECT theta_sketch_agg(id) AS sk FROM range(1, 601)) a,
         |  (SELECT theta_sketch_agg(id) AS sk FROM range(401, 1001)) b""".stripMargin)
       .as[Double].head()
-    assert(inter == 200.0, s"theta intersection from SQL drifted: $inter")
+    assert(jaccard == 0.2, s"theta jaccard from SQL drifted: $jaccard")
 
     val hot = spark.sql(
       """SELECT map_keys(freq_items_above(freq_items_agg(t), 0.4D)) AS ks

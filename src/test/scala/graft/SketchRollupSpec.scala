@@ -1,9 +1,11 @@
 package graft
 
 import graft.operators.SketchRollup
+import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.spark.sql.functions._
 
-/** Accuracy and roll-up-identity gates for the mergeable HLL rollup.
+/** Accuracy and roll-up-identity gates for the mergeable HLL and KLL
+  * rollups.
   * Like the other sketch ops (`q_approx_distinct`, `text_cms`), there is
   * no SQL oracle — the gates compare against exact answers computed on
   * the same data.
@@ -96,6 +98,22 @@ class SketchRollupSpec extends SparkTestBase {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+  }
+
+  test("KLL summary-table blobs in the former aggregate's format still roll up") {
+    // the byte format the engine's former KLL aggregate wrote: a k = 200
+    // heap sketch of each group's values, serialized
+    val legacy = events.select("event_type", "value").as[(String, Double)]
+      .collect().groupBy(_._1).toSeq.map { case (g, rows) =>
+        val sk = KllDoublesSketch.newHeapInstance(200)
+        rows.foreach { case (_, v) => sk.update(v) }
+        (g, sk.toByteArray)
+      }.toDF("event_type", "qsketch")
+    val (p50, p95) = SketchRollup.unionQuantiles(legacy, Seq(0.5, 0.95))
+      .as[(Double, Double)].head()
+    val sorted = events.select("value").as[Double].collect().sorted
+    assertWithinRankError(p50, sorted, 0.5, "legacy")
+    assertWithinRankError(p95, sorted, 0.95, "legacy")
   }
 
   test("subset rollup: filtering sketch rows answers a cohort query without raw data") {

@@ -1,11 +1,14 @@
 package graft
 
-import graft.functions.ThetaSketchAgg
+import org.apache.datasketches.theta.SetOperation
 import org.apache.spark.sql.functions._
 
-/** Gates for theta sketch set algebra: exact below k retained entries
-  * (the regime the DuckDB oracle checks for `sketch_overlap`), bounded
-  * relative error above it, and the union rollup identity.
+/** Gates for theta sketch set algebra through Spark's built-in
+  * `theta_*` functions: exact below k retained entries (the regime the
+  * DuckDB oracle checks for `sketch_overlap`), bounded relative error
+  * above it, the union rollup identity, and summary tables whose blobs
+  * were written in the byte format of the engine's former hand-written
+  * theta aggregates.
   */
 class ThetaSketchSpec extends SparkTestBase {
   import spark.implicits._
@@ -14,16 +17,16 @@ class ThetaSketchSpec extends SparkTestBase {
     // two planted sets of 2000 longs (< k = 4096) overlapping in 500
     val rows = ((1L to 2000L).map(("a", _)) ++
       (1501L to 3500L).map(("b", _))).toDF("g", "v")
-    val sk = rows.groupBy("g").agg(ThetaSketchAgg.thetaAgg(col("v")).as("sk"))
+    val sk = rows.groupBy("g").agg(theta_sketch_agg(col("v")).as("sk"))
     val Seq(ska) = sk.filter(col("g") === "a").select("sk").as[Array[Byte]].collect().toSeq
     val Seq(skb) = sk.filter(col("g") === "b").select("sk").as[Array[Byte]].collect().toSeq
     val one = spark.range(1).select(lit(ska).as("ska"), lit(skb).as("skb"))
     val (inter, diff) = one.select(
-      ThetaSketchAgg.intersectEstimate(col("ska"), col("skb")),
-      ThetaSketchAgg.aNotBEstimate(col("ska"), col("skb")))
-      .as[(Double, Double)].head()
-    assert(inter == 500.0, s"exact-mode intersection drifted: $inter")
-    assert(diff == 1500.0, s"exact-mode difference drifted: $diff")
+      theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))),
+      theta_sketch_estimate(theta_difference(col("ska"), col("skb"))))
+      .as[(Long, Long)].head()
+    assert(inter == 500L, s"exact-mode intersection drifted: $inter")
+    assert(diff == 1500L, s"exact-mode difference drifted: $diff")
   }
 
   test("estimation regime: 100k-element sets stay within 5x the 1/sqrt(k) bound") {
@@ -32,12 +35,12 @@ class ThetaSketchSpec extends SparkTestBase {
     val overlap = 40000L
     val rows = ((1L to n).map(("a", _)) ++
       ((n - overlap + 1L) to (2 * n - overlap)).map(("b", _))).toDF("g", "v")
-    val sk = rows.groupBy("g").agg(ThetaSketchAgg.thetaAgg(col("v")).as("sk"))
+    val sk = rows.groupBy("g").agg(theta_sketch_agg(col("v")).as("sk"))
     val pair = sk.filter(col("g") === "a").select(col("sk").as("ska"))
       .crossJoin(sk.filter(col("g") === "b").select(col("sk").as("skb")))
     val inter = pair.select(
-      ThetaSketchAgg.intersectEstimate(col("ska"), col("skb")))
-      .as[Double].head()
+      theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))))
+      .as[Long].head()
     assert(math.abs(inter - overlap) <= overlap * 0.08,
       s"intersection estimate $inter vs exact $overlap drifted past 8%")
   }
@@ -45,32 +48,44 @@ class ThetaSketchSpec extends SparkTestBase {
   test("union rollup of per-group sketches matches exact distinct of the union") {
     val rows = ((1L to 1000L).map(("a", _)) ++ (501L to 1500L).map(("b", _)) ++
       (1L to 300L).map(("c", _))).toDF("g", "v")
-    val sk = rows.groupBy("g").agg(ThetaSketchAgg.thetaAgg(col("v")).as("sk"))
-    val est = sk.agg(ThetaSketchAgg.thetaUnion(col("sk")).as("u"))
-      .select(ThetaSketchAgg.intersectEstimate(col("u"), col("u")))
-      .as[Double].head()
-    assert(est == 1500.0, s"union rollup drifted in exact mode: $est")
+    val sk = rows.groupBy("g").agg(theta_sketch_agg(col("v")).as("sk"))
+    val est = sk.agg(theta_sketch_estimate(theta_union_agg(col("sk"))))
+      .as[Long].head()
+    assert(est == 1500L, s"union rollup drifted in exact mode: $est")
   }
 
-  test("exact regime: jaccard estimate equals the true ratio, empty union gives 0") {
-    val rows = ((1L to 2000L).map(("a", _)) ++
-      (1501L to 3500L).map(("b", _))).toDF("g", "v")
-    val sk = rows.groupBy("g").agg(ThetaSketchAgg.thetaAgg(col("v")).as("sk"))
-    val pair = sk.filter(col("g") === "a").select(col("sk").as("ska"))
-      .crossJoin(sk.filter(col("g") === "b").select(col("sk").as("skb")))
-    val j = pair.select(
-      ThetaSketchAgg.jaccardEstimate(col("ska"), col("skb")))
-      .as[Double].head()
-    assert(j == 500.0 / 3500.0, s"exact-mode jaccard drifted: $j")
+  /** A blob in the byte format the engine's former theta aggregate wrote
+    * to summary tables: a lgK-12 union of the values, compacted. */
+  private def legacyThetaBlob(vs: Seq[Long]): Array[Byte] = {
+    val u = SetOperation.builder().setLogNominalEntries(12).buildUnion()
+    vs.foreach(v => u.update(v))
+    u.getResult().toByteArray
+  }
 
-    // empty-vs-empty: two sketches that saw no rows
-    val es = Seq.empty[Long].toDF("v")
-      .agg(ThetaSketchAgg.thetaAgg(col("v")).as("sk"))
-      .select(col("sk").as("ska"), col("sk").as("skb"))
-    val j0 = es.select(
-      ThetaSketchAgg.jaccardEstimate(col("ska"), col("skb")))
-      .as[Double].head()
-    assert(j0 == 0.0, s"empty-union jaccard must be 0, got $j0")
+  test("summary-table blobs in the former theta aggregate's format read through the built-ins") {
+    val legacy = Seq(
+      ("a", legacyThetaBlob(1L to 2000L)),
+      ("b", legacyThetaBlob(1501L to 3500L))).toDF("g", "sk")
+    val pair = legacy.filter(col("g") === "a").select(col("sk").as("ska"))
+      .crossJoin(legacy.filter(col("g") === "b").select(col("sk").as("skb")))
+    val (inter, diff) = pair.select(
+      theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))),
+      theta_sketch_estimate(theta_difference(col("ska"), col("skb"))))
+      .as[(Long, Long)].head()
+    assert(inter == 500L, s"legacy-blob intersection drifted: $inter")
+    assert(diff == 1500L, s"legacy-blob difference drifted: $diff")
+    val union = legacy.agg(theta_sketch_estimate(theta_union_agg(col("sk"))))
+      .as[Long].head()
+    assert(union == 3500L, s"legacy-blob union drifted: $union")
+
+    // an old row and a row the built-in writes today roll up together:
+    // both hash a long the same way
+    val fresh = (1501L to 3500L).toDF("v")
+      .agg(lit("b").as("g"), theta_sketch_agg(col("v")).as("sk"))
+    val mixed = legacy.filter(col("g") === "a").unionByName(fresh)
+      .agg(theta_sketch_estimate(theta_union_agg(col("sk"))))
+      .as[Long].head()
+    assert(mixed == 3500L, s"legacy + built-in union drifted: $mixed")
   }
 
   test("sketch_overlap matches the exact pairwise overlap on events at sf0.001") {
